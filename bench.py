@@ -9,8 +9,11 @@ factor and prints ONE JSON line:
 reported and the one to quote against BASELINE.md; `value_cold` also
 drops the table cache; `value_true_cold` (r13, VERDICT r12 #1) is the
 zero-reuse number -- a fresh subprocess/JVM per bench run with
-SPARK_GRAFT_MATERIALIZE=0, empty module registries, no table or plan
+SPARK_GRAFT_SERVING=off, an empty serving store, no table or plan
 cache and a throwaway warehouse, each query timed on its first call.
+The four regimes are the four SPARK_GRAFT_SERVING levels
+(cell_kn_mvp_etl_results_spark/serving.py): true-cold = off,
+cold = derived, rebuild = tables, prepared = plans.
 
 Methodology: per-query warmup run (whole-stage-codegen JIT + first-use
 initialization), then the MEDIAN of three measured steady-state runs --
@@ -44,15 +47,15 @@ from cell_kn_mvp_etl_results_spark.session import get_spark
 
 def _true_cold_child() -> None:
     """Child-process body for the TRUE-COLD regime (VERDICT r12 #1):
-    a fresh JVM + fresh SparkSession, SPARK_GRAFT_MATERIALIZE=0 (no
-    materialized/pinned serving state is built OR read), empty module
-    registries (new process), table cache off, prepared-plan cache
-    off, and a throwaway warehouse dir so nothing a previous process
+    a fresh JVM + fresh SparkSession, SPARK_GRAFT_SERVING=off (no
+    materialized/pinned serving state is built OR read, no table or
+    prepared-plan cache), an empty serving store (new process), and a
+    throwaway warehouse dir so nothing a previous process
     materialized on disk can be recovered. Each headline query is
     timed on its FIRST call -- build + full execution from the parquet
     input, zero reuse of any kind. (A per-query warmup would warm the
-    module-level registries, which is exactly what this regime
-    exists to exclude; the generic JVM warmup below keeps first-query
+    serving store, which is exactly what this regime exists to
+    exclude; the generic JVM warmup below keeps first-query
     JIT/codegen baseline out of the first query's number.)
     Prints one JSON dict {query: sec} on stdout."""
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
@@ -85,30 +88,34 @@ def _true_cold_child() -> None:
 
 
 def _run_true_cold(sf_dir: str, shuffle: int) -> "dict[str, float] | None":
-    """Run the true-cold regime in a subprocess so module-level
-    registries, the Spark catalog and the JVM are provably fresh."""
+    """Run the true-cold regime in a subprocess so the serving store,
+    the Spark catalog and the JVM are provably fresh. A failed child
+    is reported on stderr (return code + stderr tail) and yields None."""
     env = dict(os.environ)
     env.update(
         {
             "SPARK_GRAFT_SF_DIR": sf_dir,
-            "SPARK_GRAFT_MATERIALIZE": "0",
-            "SPARK_GRAFT_CACHE_TABLES": "",
-            "SPARK_GRAFT_PLAN_CACHE": "0",
+            "SPARK_GRAFT_SERVING": "off",
             "SPARK_GRAFT_SHUFFLE": str(shuffle),
         }
     )
+    rc, err = None, b""
     try:
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--true-cold-child"],
             env=env,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
+            capture_output=True,
             timeout=1800,
         )
-        line = proc.stdout.decode().strip().splitlines()[-1]
-        return {k: float(v) for k, v in json.loads(line).items()}
-    except Exception:
-        return None
+        rc, err = proc.returncode, proc.stderr
+        if rc == 0:
+            line = proc.stdout.decode().strip().splitlines()[-1]
+            return {k: float(v) for k, v in json.loads(line).items()}
+    except Exception as exc:  # timeout, spawn failure, unparsable result
+        err += f"\n{exc!r}".encode()
+    tail = " | ".join(err.decode(errors="replace").strip().splitlines()[-5:])
+    print(f"bench: true-cold child failed (rc={rc}): {tail}", file=sys.stderr)
+    return None
 
 
 def _dir_bytes(path: str) -> int:
@@ -153,19 +160,11 @@ def main() -> None:
     # hand-written plans don't already push down. Off for the local
     # measurement only; at lake scale inferred constraints feed join
     # pruning, so session.get_spark keeps the default.
-    # Steady-state table cache: the measured runs model a long-running
-    # session serving repeated queries over the same tables (same
-    # rationale as the khop persisted-edges precedent, BENCH_NOTES.md).
-    # The per-query warmup run materializes the columnar cache; the
-    # timed runs then read warm scans, as would the embedded oracle's
-    # buffer pool / OS page cache. SPARK_GRAFT_CACHE_TABLES= (empty)
-    # disables for a cold-scan measurement.
-    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
     # TRUE-COLD first, in a SUBPROCESS, before this process's session
     # exists (no core contention, and provably no shared state): the
-    # one regime with zero reuse of any kind -- fresh JVM, fresh
-    # registries, no table/plan cache, SPARK_GRAFT_MATERIALIZE=0, temp
-    # warehouse. First-call timing per query (see _true_cold_child).
+    # one regime with zero reuse of any kind -- fresh JVM, empty
+    # serving store, SPARK_GRAFT_SERVING=off, temp warehouse.
+    # First-call timing per query (see _true_cold_child).
     true_cold = _run_true_cold(sf_dir, shuffle)
     spark = get_spark(
         "cell-kn-spark-bench",
@@ -180,9 +179,8 @@ def main() -> None:
 
     headline = {n: s for n, s in REGISTRY.items() if s.headline}
 
-    def measure(cache: str, plan_cache: str) -> dict[str, float]:
-        os.environ["SPARK_GRAFT_CACHE_TABLES"] = cache
-        os.environ["SPARK_GRAFT_PLAN_CACHE"] = plan_cache
+    def measure(level: str) -> dict[str, float]:
+        os.environ["SPARK_GRAFT_SERVING"] = level
         out: dict[str, float] = {}
         for name, spec in sorted(headline.items()):
             spec.builder(spark, sf_dir).collect()  # warmup: codegen + init
@@ -199,20 +197,25 @@ def main() -> None:
     # first, so a regime change can never masquerade as a plan
     # improvement and the driver records the honest from-scratch ratio
     # without reading BENCH_NOTES:
-    #   cold     -- no table cache, plans rebuilt: parquet re-scanned
-    #               every run (a first-touch query);
-    #   rebuild  -- warm table cache, plans rebuilt per run
-    #               (SPARK_GRAFT_PLAN_CACHE=0): the pre-r7 steady
-    #               regime, comparable round-over-round and the number
-    #               quoted against the 2x-of-baseline bar;
-    #   prepared -- warm table cache + prepared-plan reuse
+    #   cold     -- SPARK_GRAFT_SERVING=derived: no table cache, plans
+    #               rebuilt, parquet re-scanned every run (a
+    #               first-touch query);
+    #   rebuild  -- =tables: warm table cache, plans rebuilt per run --
+    #               the pre-r7 steady regime, comparable
+    #               round-over-round and the number quoted against the
+    #               2x-of-baseline bar. The table cache models a
+    #               long-running session serving repeated queries over
+    #               the same tables (BENCH_NOTES.md): the warmup run
+    #               materializes the columnar cache, the timed runs read
+    #               warm scans, as would the embedded oracle's buffer
+    #               pool / OS page cache;
+    #   prepared -- =plans: warm table cache + prepared-plan reuse
     #               (plans/registry.py): serving a repeated statement,
     #               the long-running-engine posture. Headline `value`
     #               stays this number for r7-series continuity.
-    steady_mode = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "all")
-    cold = measure("", "0")
-    rebuild = measure(steady_mode, "0")
-    prepared = measure(steady_mode, "1")
+    cold = measure("derived")
+    rebuild = measure("tables")
+    prepared = measure("plans")
     total = round(sum(prepared.values()), 3)
     payload = {
         "metric": "headline_queries_total_wall_steady_state",

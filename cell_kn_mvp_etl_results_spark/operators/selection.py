@@ -217,9 +217,18 @@ def group_minhash_overlap(
     checkpointed once per corpus fingerprint by the caller's registry,
     ADVICE r12). When omitted, a PER-RUN eager localCheckpoint keeps
     the corpus pass single (both join sides reference it); the block is
-    freed by the ContextCleaner when the returned plan is dropped.
+    freed by the ContextCleaner when the returned plan is dropped. A
+    supplied ``gsig`` whose arrays are not ``num_perm`` long raises
+    ``ValueError`` (one |groups|-row job): dividing its matches by the
+    wrong ``num_perm`` would silently skew ``est_jaccard``.
     """
-    if gsig is None:
+    if gsig is not None:
+        lo, hi = gsig.agg(F.min(F.size("gsig")), F.max(F.size("gsig"))).first()
+        if lo is not None and (lo, hi) != (num_perm, num_perm):
+            raise ValueError(
+                f"gsig arrays are {lo}..{hi} long; expected num_perm={num_perm}"
+            )
+    else:
         gsig = group_minhash_signatures(
             df, group_col, text_col, num_perm, shingle_n
         ).localCheckpoint(eager=True)

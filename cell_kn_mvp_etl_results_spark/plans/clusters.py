@@ -70,7 +70,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 (VERDICT r7 #3): components served from the auto-materialized
     # bucketed table shared with splitting/exemplar serving; the CC
     # fixpoint runs once per corpus fingerprint.
-    # SPARK_GRAFT_MATERIALIZE=0 recomputes inline (row-identical).
+    # SPARK_GRAFT_SERVING=off recomputes inline (row-identical).
     comp = dedup_components_frame(spark, sf_dir)
     return (
         comp.groupBy("component")
@@ -335,7 +335,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/materialized.dedup_components_frame) -- the CC fixpoint that
     was 176 s of every call at 30x is paid once at dedup time, after
     which this query is a component scan + map-side hash + token join.
-    ``SPARK_GRAFT_MATERIALIZE=0`` forces the original in-query build
+    ``SPARK_GRAFT_SERVING=off`` forces the original in-query build
     (row-identical, test-pinned).
     """
     from .materialized import dedup_components_frame
@@ -448,7 +448,7 @@ def q_split_leakage_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since r8 the materialized table is also q_split_leakage_safe's
     DEFAULT source (VERDICT r7 #3; plans/materialized.py). This
     spelling stays registered as the ALWAYS-materialized form -- it
-    ignores SPARK_GRAFT_MATERIALIZE, so the posture remains
+    ignores SPARK_GRAFT_SERVING=off, so the posture remains
     individually addressable and gate-able while the default form can
     be flipped back to the in-query build for comparison.
     """

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import dedup as dd
+from ..serving import serve
 from ..sources.readers import read_table
 from .registry import REGISTRY, TAIL, query
 
@@ -73,13 +74,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Checkpointed delta band frames keyed on (applicationId, sf_dir,
-# corpus fingerprint) -- data-not-plan memoization (see the comment in
-# pair_index_upsert_pairs). Fingerprint keying means a regenerated
-# corpus can never serve stale bands.
-_UPSERT_DELTA_BANDS: dict[tuple, DataFrame] = {}
-
-
 def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MAINTENANCE of the near-dup pair graph -- the IVM
     statement for the dedup layer's materialized tables: when a delta
@@ -103,8 +97,6 @@ def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .materialized import simhash_band_index_frame
 
-    from ..sources.readers import _fingerprint
-
     d = read_table(spark, sf_dir, "documents")
     # The delta's band frame is consumed THREE times below (base probe
     # + both sides of the delta self-join); un-checkpointed, each
@@ -112,34 +104,27 @@ def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # simhash's token aggregation (3 scans + 3 shuffles of
     # |delta| x tokens rows per call, measured as most of the warm
     # per-call cost at 30x). The checkpointed 2 x |delta| band rows are
-    # DATA derived from the corpus, not plan, so they memoize per
-    # corpus fingerprint like q_cosine_topk's query matrix; the tiny
-    # pinned relation also gives the planner exact stats, so both
-    # probe joins pick broadcast on their own.
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fingerprint(f"{sf_dir}/documents.parquet"),
-    )
-    bands_delta = _UPSERT_DELTA_BANDS.get(key)
-    if bands_delta is None:
-        # Evict the displaced fingerprint's checkpointed frame first
-        # (ADVICE r9): dropping the reference lets the ContextCleaner
-        # free the localCheckpoint blocks; unpersist is a best-effort
-        # nudge for the CacheManager side.
-        from ..sources.readers import evict_where
-
-        evict_where(
-            _UPSERT_DELTA_BANDS,
-            lambda k: k[:2] == key[:2],
-            lambda v: v.unpersist(),
-        )
+    # DATA derived from the corpus, not plan, so they are a serving-store
+    # entry per corpus fingerprint like q_cosine_topk's query matrix;
+    # the tiny pinned relation also gives the planner exact stats, so
+    # both probe joins pick broadcast on their own. A displaced entry is
+    # unpersisted and its reference dropped, which lets the
+    # ContextCleaner free the localCheckpoint blocks (ADVICE r9).
+    def build() -> DataFrame:
         delta = d.filter(F.col("doc_id") % 10 == 0)
         h_delta = dd.simhash(delta, "doc_id", "text", bits=32)
-        bands_delta = dd.simhash_bands(h_delta, bands=2, bits=32).localCheckpoint(
+        return dd.simhash_bands(h_delta, bands=2, bits=32).localCheckpoint(
             eager=True
         )
-        _UPSERT_DELTA_BANDS[key] = bands_delta
+
+    bands_delta = serve(
+        spark,
+        sf_dir,
+        "upsert.delta_bands",
+        ("documents",),
+        build,
+        DataFrame.unpersist,
+    )
     base_idx = simhash_band_index_frame(spark, sf_dir, base_mod=10)
     hamming = F.bit_count(F.col("sh_x").bitwiseXOR(F.col("sh_y")))
     dl = bands_delta.select(
@@ -444,7 +429,7 @@ def q_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 (VERDICT r7 #4): the radius-1 pair graph is served from the
     # shared auto-materialized bucketed table -- its banded generation
     # (~114 s at 30x) is paid once across ALL graph consumers.
-    # SPARK_GRAFT_MATERIALIZE=0 regenerates inline (row-identical).
+    # SPARK_GRAFT_SERVING=off regenerates inline (row-identical).
     pairs = simhash_pairs_frame(spark, sf_dir)
     return gr.triangle_counts(
         pairs, "id_a", "id_b", max_degree=100
@@ -520,7 +505,7 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 (VERDICT r7 #4): the radius-1 pair graph is served from the
     # shared auto-materialized bucketed table -- its banded generation
     # (~114 s at 30x) is paid once across ALL graph consumers.
-    # SPARK_GRAFT_MATERIALIZE=0 regenerates inline (row-identical).
+    # SPARK_GRAFT_SERVING=off regenerates inline (row-identical).
     pairs = simhash_pairs_frame(spark, sf_dir)
     return gr.clustering_coefficient(
         pairs, "id_a", "id_b", max_degree=100
@@ -587,7 +572,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 (VERDICT r7 #4): the radius-1 pair graph is served from the
     # shared auto-materialized bucketed table -- its banded generation
     # (~114 s at 30x) is paid once across ALL graph consumers.
-    # SPARK_GRAFT_MATERIALIZE=0 regenerates inline (row-identical).
+    # SPARK_GRAFT_SERVING=off regenerates inline (row-identical).
     pairs = simhash_pairs_frame(spark, sf_dir)
     ed = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -954,7 +939,7 @@ def q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-call recompute hazard, 30.9 s steady at 30x) are paid once
     # per corpus fingerprint; steady calls are a bucketed scan + sort.
     # The pair graph underneath is still the shared auto-materialized
-    # table (r8). SPARK_GRAFT_MATERIALIZE=0 recomputes both inline
+    # table (r8). SPARK_GRAFT_SERVING=off recomputes both inline
     # (row-identity pinned in tests/test_materialized.py).
     return community_labels_frame(spark, sf_dir, iters=2).orderBy("id")
 
@@ -1359,7 +1344,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 (VERDICT r7 #4): the radius-1 pair graph is served from the
     # shared auto-materialized bucketed table -- its banded generation
     # (~114 s at 30x) is paid once across ALL graph consumers.
-    # SPARK_GRAFT_MATERIALIZE=0 regenerates inline (row-identical).
+    # SPARK_GRAFT_SERVING=off regenerates inline (row-identical).
     pairs = simhash_pairs_frame(spark, sf_dir)
     return gr.kcore_members(pairs, "id_a", "id_b", k=2, iters=3).orderBy("id")
 

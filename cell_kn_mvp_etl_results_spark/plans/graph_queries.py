@@ -24,37 +24,9 @@ from ..operators.graph import (
     path_fold,
     terminal_stats,
 )
+from ..serving import serve
 from ..sources.readers import read_table
 from .registry import TAIL, query
-
-# Per-application record of persisted relations already materialized by
-# a first run (see q_khop_paths): warm rebuilds of the same plan skip
-# the materializing count() job.
-_MATERIALIZED: set = set()
-
-# Steady-state memo of the BUILT hop/terminal DataFrames themselves:
-# re-deriving them per call costs ~0.35 s of driver-side analysis +
-# CacheManager plan normalization (measured at sf0.1) even when every
-# byte is already cached. Keyed by the source files' fingerprints so a
-# regenerated table invalidates the entry (same contract as the
-# read_table persist cache). Holding the references intentionally pins
-# the persisted relations for the application's lifetime -- that IS the
-# steady-state serving posture.
-_HOP_FRAMES: dict = {}
-
-
-def _khop_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    from ..sources.readers import _fingerprint
-
-    # Session OBJECT, not applicationId: the memo carries temp-view
-    # names (session-scoped catalog state), which a newSession sibling
-    # sharing the applicationId must never be handed (ADVICE r8).
-    return (
-        spark,
-        sf_dir,
-        _fingerprint(f"{sf_dir}/orders.parquet"),
-        _fingerprint(f"{sf_dir}/lineitem.parquet"),
-    )
 
 
 def _khop_edge(df, src_coll, src_key, dst_coll, dst_key, label):
@@ -394,24 +366,14 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 10x corpus); per-hop relations scan only their own (measured
     # 23%, BENCH_NOTES.md r5), and each already satisfies the join's
     # required distribution so only the frontier shuffles per hop.
-    cache_key = _khop_cache_key(spark, sf_dir)
-    if cache_key not in _HOP_FRAMES:
-        # A regenerated lake means a new cache_key: unpersist the
-        # displaced hop/terminal frames and drop their temp views
-        # before building fresh ones (VERDICT r9 #3) -- the old entry
-        # pinned two persisted edge relations plus the terminal summary
-        # for the application's lifetime.
-        from ..sources.readers import evict_where
-
-        def _drop(v):
-            old_hops, old_term, old_views = v
-            for h in old_hops.values():
-                h.unpersist()
-            old_term.unpersist()
-            for vn in old_views.values():
-                spark.catalog.dropTempView(vn)
-
-        evict_where(_HOP_FRAMES, lambda k: k[:2] == (spark, sf_dir), _drop)
+    # The hop/terminal frames and their views are steady-state serving
+    # state (serving.py): re-deriving them per call costs ~0.35 s of
+    # driver-side analysis + CacheManager plan normalization (measured
+    # at sf0.1) even when every byte is already cached. A regenerated
+    # orders/lineitem file misses, and the store unpersists the
+    # displaced hop/terminal frames and drops their temp views before
+    # the fresh build (VERDICT r9 #3).
+    def build() -> dict:
         # Persisted SORTED on the join key: InMemoryTableScan propagates
         # the cached plan's outputPartitioning AND outputOrdering, so
         # every traversal's sort-merge join skips re-sorting the (large)
@@ -442,22 +404,9 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         # as a single parallel job, and the hop joins then read cached
         # partitions with exact size stats (measured ~25% faster than
         # recomputing per hop at sf0.1; scripts/khop_experiment.py).
-        # Spark's ContextCleaner unpersists when the plan is GC'd.
-        # Fingerprints in the key (r10): a regenerated lake must
-        # re-run the eager materialization, not skip it because a
-        # previous generation already counted.
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            "khop_edges",
-            cache_key[2],
-            cache_key[3],
-        )
-        if key not in _MATERIALIZED:
-            for h in hops.values():
-                h.count()
-            term.count()
-            _MATERIALIZED.add(key)
+        for h in hops.values():
+            h.count()
+        term.count()
         # SQL-text serving posture (r9, VERDICT r8 #2): register the
         # persisted frames as temp views ONCE per fingerprint; every
         # call then constructs its plan with a single spark.sql parse
@@ -472,7 +421,12 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         # last_hop and test_khop_sql_text_plan_shape).
         import hashlib
 
-        tag = hashlib.md5(repr(cache_key).encode()).hexdigest()[:8]
+        from ..sources.readers import _fingerprint
+
+        fps = tuple(
+            _fingerprint(f"{sf_dir}/{t}.parquet") for t in ("orders", "lineitem")
+        )
+        tag = hashlib.md5(repr((sf_dir, fps)).encode()).hexdigest()[:8]
         views = {
             "hop_o": f"khop_hop_o_{tag}",
             "hop_p": f"khop_hop_p_{tag}",
@@ -481,8 +435,18 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         hops["O"].createOrReplaceTempView(views["hop_o"])
         hops["P"].createOrReplaceTempView(views["hop_p"])
         term.createOrReplaceTempView(views["term"])
-        _HOP_FRAMES[cache_key] = (hops, term, views)
-    _hops, _term, views = _HOP_FRAMES[cache_key]
+        return {"hops": hops, "term": term, "views": views}
+
+    def release(entry: dict) -> None:
+        for h in entry["hops"].values():
+            h.unpersist()
+        entry["term"].unpersist()
+        for vn in entry["views"].values():
+            spark.catalog.dropTempView(vn)
+
+    views = serve(
+        spark, sf_dir, "khop.hops", ("orders", "lineitem"), build, release
+    )["views"]
     from .relational import _view
 
     cust = _view(spark, sf_dir, "customer")

@@ -21,9 +21,10 @@ auto-build-or-reuse contract as ``materialize_khop_bucketed``:
     warehouse, amortized across every consumer AND every process:
     a surviving on-disk table from a previous session is re-read, not
     rebuilt);
-  * ``SPARK_GRAFT_MATERIALIZE=0`` forces the original in-query
-    computation -- the explicit fallback for one-shot runs, and what
-    the row-identity tests pin the materialized path against.
+  * ``SPARK_GRAFT_SERVING=off`` forces the original in-query
+    computation (``ensure_table`` calls the builder directly) -- the
+    explicit fallback for one-shot runs, and what the row-identity
+    tests pin the materialized path against.
 
 Correctness is unaffected by construction: the builders are
 deterministic pure functions of the source tables, so reading the
@@ -34,17 +35,13 @@ persisted result back is row-identical to computing it inline
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
+from ..serving import at_least
 from ..sources.readers import _fingerprint, read_table
-
-
-def materialize_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_MATERIALIZE", "1") not in ("0", "false")
 
 
 def _auto_name(
@@ -191,9 +188,12 @@ def ensure_table(
     build: "callable",
     bucket_col: str,
     num_buckets: int = 32,
+    force: bool = False,
 ) -> DataFrame:
     """Return ``table``'s rows, building it if this warehouse has never
-    materialized it.  Three tiers:
+    materialized it. Under ``SPARK_GRAFT_SERVING=off`` (unless
+    ``force``) nothing is read or written: ``build()`` runs inline.
+    Otherwise three tiers:
 
     1. catalog hit -> ``spark.table`` (bucketed scan, no Exchange on
        the bucket key);
@@ -221,7 +221,8 @@ def ensure_table(
     instead of recovering an old layout under a wrong declared spec.
     """
     from ..operators.scale import write_bucketed
-
+    if not force and not at_least("derived"):
+        return build()
     table = physical_table_name(table, bucket_col, num_buckets)
 
     if spark.catalog.tableExists(table):
@@ -268,7 +269,7 @@ def simhash_pairs_frame(
     """The SimHash radius-``max_hamming`` near-dup pair graph
     (id_a, id_b, hamming), id_a < id_b -- served from the materialized
     bucketed table by default, generated inline under
-    ``SPARK_GRAFT_MATERIALIZE=0``.
+    ``SPARK_GRAFT_SERVING=off``.
 
     Scale: the banded pair generation is the dominant cost of EVERY
     graph-over-near-dups query (degree hist 57 s of which ~55 s is
@@ -281,10 +282,8 @@ def simhash_pairs_frame(
         hashes = dd.simhash(d, "doc_id", "text", bits=bits)
         return dd.simhash_pairs(hashes, max_hamming=max_hamming, bits=bits)
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("simhash_pairs_auto", sf_dir, bits, max_hamming)
-    return ensure_table(spark, table, build, "id_a")
+    return ensure_table(spark, table, build, "id_a", force=force)
 
 
 def build_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,13 +306,15 @@ def dedup_components_frame(
     3-gram Jaccard >= 0.05 pair graph -- the q_dedup_clusters machinery,
     served from the materialized bucketed table by default (the CC
     fixpoint is paid once at dedup time, VERDICT r7 #3), generated
-    inline under ``SPARK_GRAFT_MATERIALIZE=0``.
+    inline under ``SPARK_GRAFT_SERVING=off``.
     """
-    if not force and not materialize_enabled():
-        return build_components(spark, sf_dir)
     table = _auto_name("dedup_comp_auto", sf_dir)
     return ensure_table(
-        spark, table, lambda: build_components(spark, sf_dir), "doc_id"
+        spark,
+        table,
+        lambda: build_components(spark, sf_dir),
+        "doc_id",
+        force=force,
     )
 
 
@@ -330,7 +331,7 @@ def minhash_index_frame(
     probes instead of re-pairing the lake (operators/dedup.
     minhash_bucket_index). Bucketed on the probe join's bucket key so
     delta probes co-locate. Auto-build-or-reuse per corpus fingerprint;
-    ``SPARK_GRAFT_MATERIALIZE=0`` computes it inline."""
+    ``SPARK_GRAFT_SERVING=off`` computes it inline."""
 
     def build() -> DataFrame:
         d = read_table(spark, sf_dir, "documents").filter(
@@ -340,10 +341,8 @@ def minhash_index_frame(
             d, "doc_id", "text", num_perm=num_perm, bands=bands
         )
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("minhash_index_auto", sf_dir, base_mod, num_perm, bands)
-    return ensure_table(spark, table, build, "bucket")
+    return ensure_table(spark, table, build, "bucket", force=force)
 
 
 def simhash_band_index_frame(
@@ -367,12 +366,10 @@ def simhash_band_index_frame(
         hashes = dd.simhash(d, "doc_id", "text", bits=bits)
         return dd.simhash_bands(hashes, bands=max_hamming + 1, bits=bits)
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name(
         "simhash_band_index_auto", sf_dir, base_mod, bits, max_hamming
     )
-    return ensure_table(spark, table, build, "val")
+    return ensure_table(spark, table, build, "val", force=force)
 
 
 def community_labels_frame(
@@ -406,10 +403,8 @@ def community_labels_frame(
         p = pairs if pairs is not None else simhash_pairs_frame(spark, sf_dir)
         return gr.label_propagation(p, "id_a", "id_b", iters=iters)
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("lpa_labels_auto", sf_dir, iters)
-    return ensure_table(spark, table, build, "id")
+    return ensure_table(spark, table, build, "id", force=force)
 
 
 def hll_registers_frame(
@@ -446,10 +441,8 @@ def hll_registers_frame(
         ).filter(F.col("tok") != "")
         return sk.hll_registers(toks, "tok", "source")
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("hll_registers_auto", sf_dir, base_mod)
-    return ensure_table(spark, table, build, "bucket")
+    return ensure_table(spark, table, build, "bucket", force=force)
 
 
 def kmv_sketch_frame(
@@ -484,10 +477,8 @@ def kmv_sketch_frame(
         )
         return sk.kmv_sketch(sh, "key", "source")
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("kmv_sketch_auto", sf_dir, base_mod, "shingle")
-    return ensure_table(spark, table, build, "source")
+    return ensure_table(spark, table, build, "source", force=force)
 
 
 def community_stats_frame(
@@ -532,10 +523,8 @@ def community_stats_frame(
             .agg(F.count(F.lit(1)).alias("e_in"))
         )
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("community_stats_auto", sf_dir, iters)
-    return ensure_table(spark, table, build, "label")
+    return ensure_table(spark, table, build, "label", force=force)
 
 
 def pair_degrees_frame(
@@ -562,10 +551,8 @@ def pair_degrees_frame(
             .agg(F.count(F.lit(1)).alias("d"))
         )
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("pair_degrees_auto", sf_dir)
-    return ensure_table(spark, table, build, "id")
+    return ensure_table(spark, table, build, "id", force=force)
 
 
 def entity_components_frame(
@@ -588,7 +575,5 @@ def entity_components_frame(
         nodes = s.select(F.col("s_suppkey").alias("id"))
         return connected_components(nodes, pairs.select("id_a", "id_b"))
 
-    if not force and not materialize_enabled():
-        return build()
     table = _auto_name("entity_comp_auto", sf_dir, files=("supplier",))
-    return ensure_table(spark, table, build, "id")
+    return ensure_table(spark, table, build, "id", force=force)

@@ -12,21 +12,20 @@ explicitly. Re-running Lloyd's driver-synced corpus jobs per query
 call was ~42% of the all-registry rebuild-regime sweep
 (scripts/r12_query_sweep.py; OPTIMIZATION_r12.md).
 
-Same serving doctrine as the minhash signature/LSH-index views
-(llmdata._MINHASH_SIG_VIEWS), the khop hop frames, and the cosine
-prepared matrices (llmdata._COSINE_PREP), with the same invalidation
-contract: keyed by (session object, sf_dir, training params) with the
-embeddings-file fingerprint stored in the value, so a regenerated
-corpus RETRAINS instead of serving a stale model. Values are plain
-driver data (k x dim ints, a handful of collected rows) — never
-persisted frames or catalog views — so displacement is plain dict
-overwrite and nothing pins executor or catalog state.
+Same serving doctrine as the minhash signature/LSH-index views, the
+khop hop frames and the cosine prepared matrices: each model is a
+serving-store entry (serving.py) keyed by (session, sf_dir, kind and
+training params) and stamped with the input file's fingerprint, so a
+regenerated corpus RETRAINS instead of serving a stale model. Values
+are plain driver data (k x dim ints, a handful of collected rows) —
+never persisted frames or catalog views — so a displaced model needs
+no release.
 
-``SPARK_GRAFT_MATERIALIZE=0`` (the materialized-intermediates escape
-hatch) forces in-query training — the one-shot-run posture, and what
-the row-identity tests pin the registry path against. Each query's
-DuckDB oracle retrains from scratch relationally either way, so the
-driver's hash gate verifies the registry path end to end.
+``SPARK_GRAFT_SERVING=off`` forces in-query training — the
+one-shot-run posture, and what the row-identity tests pin the registry
+path against. Each query's DuckDB oracle retrains from scratch
+relationally either way, so the oracle-parity gate verifies the
+registry path end to end.
 """
 
 from __future__ import annotations
@@ -35,11 +34,8 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from ..sources.readers import _fingerprint, read_table
-from .materialized import materialize_enabled
-
-# (session, sf_dir, kind, params) -> (embeddings fingerprint, model)
-_MODELS: dict[tuple, tuple] = {}
+from ..serving import serve
+from ..sources.readers import read_table
 
 
 def _model(
@@ -54,17 +50,11 @@ def _model(
     entry (embeddings for the vector family, documents for the
     tokenizer). ``table=None`` is for models trained on a SYNTHETIC
     corpus that is a pure function of the params already in the key —
-    there is no on-disk input whose regeneration could stale them."""
-    if not materialize_enabled():
-        return trainer()
-    fp = _fingerprint(f"{sf_dir}/{table}.parquet") if table else None
-    key = (spark, sf_dir, kind, params)
-    hit = _MODELS.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    value = trainer()
-    _MODELS[key] = (fp, value)  # displaced entry is plain data; overwrite
-    return value
+    there is no on-disk input whose regeneration could stale them.
+    The params are part of the entry NAME, so models of one kind with
+    different params (two k values) are held side by side."""
+    files = (table,) if table else ()
+    return serve(spark, sf_dir, f"model.{kind}{params}", files, trainer)
 
 
 def kmeans_centroids(
@@ -226,7 +216,7 @@ def cosine_prepared_queries(
 ) -> tuple:
     """A ``similarity.prepare_cosine_queries`` result for the standard
     ``vec_id < max_id`` query set, prepared once per corpus fingerprint
-    — the ``_COSINE_PREP`` doctrine shared across every
+    — the q_cosine_topk prepared-query doctrine shared across every
     ``cosine_topk_arrow`` consumer (recall audit, mutual-kNN, hard
     negatives, drift) instead of one collect job per call each.
     ``max_rows`` bounds the collected side (VERDICT r12 #6) -- see

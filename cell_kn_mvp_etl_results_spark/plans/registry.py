@@ -23,6 +23,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..serving import at_least, serve
+from ..sources.readers import TABLES
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 
@@ -788,8 +791,13 @@ assert len(_R13_GATED) == GATE_BUDGET, len(_R13_GATED)
 assert len(set(_R13_GATED)) == GATE_BUDGET
 
 
+# The live rotation: the one tuple both _effective_priority and the
+# _ordered() typo guard read.
+_GATED = _R13_GATED
+
+
 def _effective_priority(s: "QuerySpec") -> int:
-    return 10 if s.name in _R13_GATED else TAIL
+    return 10 if s.name in _GATED else TAIL
 
 
 # ---------------------------------------------------------------------------
@@ -808,60 +816,29 @@ def _effective_priority(s: "QuerySpec") -> int:
 # latency of an identical statement, not a from-scratch run (bench.py
 # publishes the cold mode for that; see BENCH_NOTES.md r7).
 #
-# Scope: active only when the steady-state table cache is on
-# (SPARK_GRAFT_CACHE_TABLES -- bench.py's steady mode), so the driver's
-# one-shot correctness runs and the bench's cold mode still measure the
-# full build+execute path. One entry per (application, sf_dir, cache
-# mode, query); the entry carries the table-file fingerprints, so a
-# regenerated table rebuilds the plan instead of serving a stale one --
-# the same invalidation contract as read_table's persist cache.
-#
-# Lifecycle (r10, VERDICT r9 #3): entries here are PLANS, not persisted
-# state -- a fingerprint mismatch overwrites the same (session, sf_dir,
-# mode, name) key, so the cache is bounded by |queries| x |sf_dirs| per
-# session and regeneration cannot accumulate entries. The caches that
-# DO pin persisted frames or catalog views (_SQL_VIEWS,
-# _MINHASH_SIG_VIEWS, _HOP_FRAMES, _UPSERT_DELTA_BANDS, _COSINE_PREP)
-# all evict their displaced scope via readers.evict_where --
-# unpersist + dropTempView -- before inserting a fresh entry
-# (tests/test_cache_lifecycle.py). Dead-session keys linger as plain
-# plan references until process exit; they pin no executor or catalog
-# state.
+# Scope: active only at SPARK_GRAFT_SERVING=plans (bench.py's prepared
+# regime), so one-shot correctness runs and the bench's
+# cold and rebuild regimes still measure the full build+execute path.
+# Each query's prepared DataFrame is a serving-store entry (serving.py)
+# stamped with every table file's fingerprint, so a regenerated table
+# rebuilds the plan instead of serving a stale one -- the same
+# invalidation contract as read_table's persist cache.
 # ---------------------------------------------------------------------------
-_PLAN_CACHE: dict[tuple, tuple] = {}  # key -> (fingerprints, DataFrame)
 
 
 def _memoized(name: str, fn: Builder) -> Builder:
     import functools
-    import os
 
     @functools.wraps(fn)
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        mode = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "")
-        # SPARK_GRAFT_PLAN_CACHE=0 disables the prepared-plan reuse
-        # while keeping the table cache -- the rebuild-per-run regime
-        # every pre-r7 steady measurement used; scale sweeps use it for
-        # round-over-round comparability (BENCH_NOTES r7).
-        if not mode or os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") in (
-            "0",
-            "false",
-        ):
+        if not at_least("plans"):
             return fn(spark, sf_dir)
-        from ..sources.readers import TABLES, _fingerprint
-
-        fps = tuple(
-            _fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in TABLES
-        )
         # session object, not applicationId: the cached DataFrame is
-        # bound to the session that built it (ADVICE r8 on _SQL_VIEWS;
-        # same trap here for newSession siblings)
-        key = (spark, sf_dir, mode, name)
-        hit = _PLAN_CACHE.get(key)
-        if hit is not None and hit[0] == fps:
-            return hit[1]
-        df = fn(spark, sf_dir)
-        _PLAN_CACHE[key] = (fps, df)
-        return df
+        # bound to the session that built it (ADVICE r8 on newSession
+        # siblings)
+        return serve(
+            spark, sf_dir, f"plan.{name}", TABLES, lambda: fn(spark, sf_dir)
+        )
 
     return build
 
@@ -895,7 +872,7 @@ def query(
 
 
 def _ordered() -> list[QuerySpec]:
-    unknown = set(_R12_GATED) - set(REGISTRY)
+    unknown = set(_GATED) - set(REGISTRY)
     if unknown:  # a typo here would silently burn gate slots
         raise ValueError(f"rotation names not registered: {sorted(unknown)}")
     return sorted(

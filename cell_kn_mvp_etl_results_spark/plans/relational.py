@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..functions.money import avg_money, cents, money, qty_long
 from ..functions.text import char_ngrams, hyphenate, stable_uuid, tokens
+from ..serving import serve
 from ..sources.readers import read_table
 from .registry import TAIL, query
 
@@ -97,12 +98,11 @@ def _broadcast_map_ok(sf_dir: str, table: str, selectivity: float) -> bool:
 # returns a fresh plan every time) -- no plan reuse; the prepared-plan
 # cache sits above this in registry._memoized and stays off in the
 # rebuild/cold regimes. View registration is catalog state keyed on
-# (application, sf_dir, table fingerprint): a regenerated file gets a
-# new view name, so stale data can never serve (read_table's
+# (session, sf_dir, table fingerprint) in the serving store: a
+# regenerated file gets a new view name and the displaced view is
+# dropped, so stale data can never serve (read_table's
 # cache-invalidation contract carries through).
 # ---------------------------------------------------------------------------
-
-_SQL_VIEWS: dict[tuple, str] = {}
 
 
 def _view(spark: SparkSession, sf_dir: str, table: str) -> str:
@@ -110,32 +110,20 @@ def _view(spark: SparkSession, sf_dir: str, table: str) -> str:
 
     from ..sources.readers import _fingerprint
 
-    fp = _fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
     # Keyed on the SparkSession OBJECT, not applicationId: temp views
     # are session-scoped while applicationId is shared across
     # spark.newSession() siblings -- an id-keyed cache would hand a
     # sibling a view name its catalog never registered (ADVICE r8).
-    # Holding the session in the key is intentional: the cached view
-    # is only valid while that exact session lives.
-    key = (spark, sf_dir, table, fp)
-    name = _SQL_VIEWS.get(key)
-    if name is None:
-        # A regenerated table gets a NEW view name; the displaced
-        # fingerprint's view is catalog state nothing can reach through
-        # this cache anymore -- drop it instead of letting the session
-        # catalog grow one orphan view per regeneration (VERDICT r9 #3).
-        from ..sources.readers import evict_where
-
-        evict_where(
-            _SQL_VIEWS,
-            lambda k: k[:3] == (spark, sf_dir, table),
-            lambda v: spark.catalog.dropTempView(v),
-        )
+    def build() -> str:
+        fp = _fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
         tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
         name = f"{table}_v{tag}"
         read_table(spark, sf_dir, table).createOrReplaceTempView(name)
-        _SQL_VIEWS[key] = name
-    return name
+        return name
+
+    return serve(
+        spark, sf_dir, f"view.{table}", (table,), build, spark.catalog.dropTempView
+    )
 
 
 # Exact-integer money/quantity idioms, the SQL spelling of
@@ -605,17 +593,8 @@ def _supplier_bucketed_names(
     return (li_t, "l_orderkey"), (omap_t, "o_orderkey")
 
 
-# Positive-probe memo for supplier_bucketed_layout_exists, keyed on
-# (session, warehouse dir, physical table names) -- the names already
-# carry the corpus fingerprint + bucket spec via _auto_name, so a
-# regenerated corpus or changed spec lands on a different key. Only
-# True is memoized (VERDICT r12 #2: the per-call Hadoop-FS probe --
-# catalog.tableExists + FileSystem.exists over py4j -- was re-paid on
-# EVERY builder call, the single largest per-call driver cost the r12
-# round added): a True answer is durable for the session short of an
-# explicit DROP of the paid-for layout, while a False answer must stay
-# re-probeable so a layout built mid-session is picked up.
-_SUPB_LAYOUT_OK: set = set()
+class _LayoutAbsent(Exception):
+    """Raised out of the layout probe's build so False is never stored."""
 
 
 def supplier_bucketed_layout_exists(
@@ -634,23 +613,35 @@ def supplier_bucketed_layout_exists(
     fire exactly where the layout matters most."""
     from .materialized import _warehouse_dir, physical_table_name
 
-    names = tuple(
-        physical_table_name(logical, col, num_buckets)
-        for logical, col in _supplier_bucketed_names(spark, sf_dir, num_buckets)
-    )
-    memo_key = (spark, spark.conf.get("spark.sql.warehouse.dir"), names)
-    if memo_key in _SUPB_LAYOUT_OK:
+    def probe() -> bool:
+        jvm = spark._jvm
+        hconf = spark._jsc.hadoopConfiguration()
+        for logical, col in _supplier_bucketed_names(spark, sf_dir, num_buckets):
+            t = physical_table_name(logical, col, num_buckets)
+            if spark.catalog.tableExists(t):
+                continue
+            p = jvm.org.apache.hadoop.fs.Path(f"{_warehouse_dir(spark, t)}/_SUCCESS")
+            if not p.getFileSystem(hconf).exists(p):
+                raise _LayoutAbsent
         return True
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for t in names:
-        if spark.catalog.tableExists(t):
-            continue
-        p = jvm.org.apache.hadoop.fs.Path(f"{_warehouse_dir(spark, t)}/_SUCCESS")
-        if not p.getFileSystem(hconf).exists(p):
-            return False
-    _SUPB_LAYOUT_OK.add(memo_key)
-    return True
+
+    # Positive-only memo (VERDICT r12 #2: the per-call Hadoop-FS probe
+    # was the largest per-call driver cost the r12 round added): a True
+    # answer is durable for the session short of an explicit DROP of
+    # the paid-for layout, while a False answer raises out of the build
+    # so nothing is stored and a layout built mid-session is picked up.
+    # The corpus fingerprint and warehouse dir key the entry.
+    try:
+        return serve(
+            spark,
+            sf_dir,
+            f"supb_layout{num_buckets}",
+            _SUPB_FILES,
+            probe,
+            params=(spark.conf.get("spark.sql.warehouse.dir"),),
+        )
+    except _LayoutAbsent:
+        return False
 
 
 def materialize_supplier_bucketed(
@@ -703,8 +694,10 @@ def materialize_supplier_bucketed(
     (li_t, li_col), (omap_t, omap_col) = _supplier_bucketed_names(
         spark, sf_dir, num_buckets
     )
-    li_df = ensure_table(spark, li_t, build_li, li_col, num_buckets)
-    omap_df = ensure_table(spark, omap_t, build_omap, omap_col, num_buckets)
+    li_df = ensure_table(spark, li_t, build_li, li_col, num_buckets, force=True)
+    omap_df = ensure_table(
+        spark, omap_t, build_omap, omap_col, num_buckets, force=True
+    )
     # Query through temp views over the RETURNED frames, not the raw
     # catalog names: in a fresh session the tables exist only on disk
     # (ensure_table tier 2 reads the surviving parquet; the in-memory
@@ -732,8 +725,8 @@ def q_supplier_volume_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query's profiled 100x floor -- runs with NO Exchange on either
     side; only the |suppkey x nations| partial-aggregate rows shuffle
     (the agg-below-join shape of the shipped above-gate branch,
-    unchanged). MEASURED at 100x (scripts/supplier_bucketed_100x.py,
-    BENCH_NOTES r10): the docstring claim the r9 verdict flagged read
+    unchanged). MEASURED at 100x (BENCH_NOTES r10): the docstring
+    claim the r9 verdict flagged read
     "bucketing removes the exchange+sort entirely" -- the measured
     truth is exchange YES, sort NO: Spark 4 no longer propagates disk
     sortBy ordering, so the SMJ keeps cheap per-bucket Sorts of
@@ -1643,7 +1636,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8 (VERDICT r7 #4): the resolved assignment is served from the
     # auto-materialized bucketed table -- blocking + CC run once per
     # supplier snapshot, not per call (16.1 s/call at 30x before).
-    # SPARK_GRAFT_MATERIALIZE=0 resolves inline (row-identical).
+    # SPARK_GRAFT_SERVING=off resolves inline (row-identical).
     s = read_table(spark, sf_dir, "supplier")
     comp = entity_components_frame(spark, sf_dir)
     ent = comp.groupBy(F.col("component").alias("entity_id")).agg(

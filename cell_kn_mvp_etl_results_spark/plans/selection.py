@@ -10,15 +10,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
+from ..serving import at_least, serve
 from ..sources.readers import read_table
 from .registry import TAIL, query
 
 _DSIR_BUCKETS = 1024
-
-# (session, sf_dir, documents fingerprint) -> checkpointed |sources|-row
-# group-signature frame for q_source_overlap (ADVICE r12; see the
-# builder for the lifecycle contract).
-_GROUP_SIG_FRAMES: dict[tuple, DataFrame] = {}
 
 
 @query(
@@ -167,33 +163,23 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_minhash_overlap,
         group_minhash_signatures,
     )
-    from .materialized import materialize_enabled
-
     d = read_table(spark, sf_dir, "documents")
-    # Fingerprint-keyed registry for the checkpointed |sources|-row
-    # group-signature frame (ADVICE r12): the operator's own per-call
+    # The checkpointed |sources|-row group-signature frame is a
+    # serving-store entry (ADVICE r12): the operator's own per-call
     # eager checkpoint was never tracked, so every rebuild leaked a
     # block for the application lifetime and even explain-only plan
     # builds ran the corpus scan. One checkpoint per corpus
-    # fingerprint, displaced entries evicted (the _UPSERT_DELTA_BANDS
-    # precedent); SPARK_GRAFT_MATERIALIZE=0 falls back to the per-run
-    # checkpoint inside the operator.
-    gsig = None
-    if materialize_enabled():
-        from ..sources.readers import _fingerprint, evict_where
-
-        key = (spark, sf_dir, _fingerprint(f"{sf_dir}/documents.parquet"))
-        gsig = _GROUP_SIG_FRAMES.get(key)
-        if gsig is None:
-            evict_where(
-                _GROUP_SIG_FRAMES,
-                lambda k: k[:2] == key[:2],
-                lambda v: v.unpersist(),
-            )
-            gsig = group_minhash_signatures(
-                d, "source", "text", num_perm=32
-            ).localCheckpoint(eager=True)
-            _GROUP_SIG_FRAMES[key] = gsig
+    # fingerprint; a displaced entry is unpersisted.
+    gsig = serve(
+        spark,
+        sf_dir,
+        "source_overlap.gsig",
+        ("documents",),
+        lambda: group_minhash_signatures(
+            d, "source", "text", num_perm=32
+        ).localCheckpoint(eager=True),
+        DataFrame.unpersist,
+    )
     # |sources|^2-row result: 1-partition sort instead of a
     # range-sampled global sort (the khop r8 precedent -- sampling
     # re-submits the child per run, and this child is corpus-sized).
@@ -272,11 +258,9 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically, so detector and metric gate together.
     """
     from ..operators import graph as gr
-
     from .materialized import (
         community_labels_frame,
         community_stats_frame,
-        materialize_enabled,
         pair_degrees_frame,
         simhash_pairs_frame,
     )
@@ -288,10 +272,10 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition instead of re-running the 2 LPA rounds. r10 (VERDICT r9
     # #6): the DEGREE side likewise -- a cold call reads the |V|-sized
     # persisted degrees instead of exploding the 89.6M-edge list. Under
-    # SPARK_GRAFT_MATERIALIZE=0 the inline pair regeneration is
+    # SPARK_GRAFT_SERVING=off the inline pair regeneration is
     # persisted and passed into the inline LPA + degree builds so all
     # three consumers still share one computation.
-    if materialize_enabled():
+    if at_least("derived"):
         # Fully-materialized metric path: labels, degrees, and the
         # intra-community rollup are all snapshot tables, so the pair
         # table is never touched -- don't even resolve it (its
@@ -299,8 +283,16 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = None
     else:
         # Inline mode: ONE persisted pair regeneration feeds the LPA
-        # build, the degree build, the stats build, and the metric.
-        pairs = simhash_pairs_frame(spark, sf_dir).persist()
+        # build, the degree build, the stats build, and the metric. A
+        # store entry, so the next call releases this call's copy.
+        pairs = serve(
+            spark,
+            sf_dir,
+            "modularity.pairs",
+            ("documents",),
+            lambda: simhash_pairs_frame(spark, sf_dir).persist(),
+            DataFrame.unpersist,
+        )
     labels = community_labels_frame(spark, sf_dir, iters=2, pairs=pairs)
     degrees = pair_degrees_frame(spark, sf_dir, pairs=pairs)
     intra = community_stats_frame(
@@ -596,7 +588,7 @@ def q_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r8 (VERDICT r7 #4): pair graph served from the shared auto-
     # materialized bucketed table (built once for every graph
-    # consumer); SPARK_GRAFT_MATERIALIZE=0 regenerates inline. The 30x
+    # consumer); SPARK_GRAFT_SERVING=off regenerates inline. The 30x
     # steady wall was 57 s, ~55 s of it the banded pair generation.
     pairs = simhash_pairs_frame(spark, sf_dir)
     # simhash_pairs returns DISTINCT pairs with id_a < id_b strictly,

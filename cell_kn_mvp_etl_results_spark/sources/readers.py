@@ -84,30 +84,22 @@ def _ltz_schema(schema: T.StructType) -> T.StructType:
     )
 
 
-# Opt-in steady-state table caching (SPARK_GRAFT_CACHE_TABLES="all" or
-# a comma list of table names). When enabled, read_table persists each
-# table's DataFrame once per (application, path, file fingerprint);
-# every later read of the same table builds an identical logical plan,
-# which Spark's CacheManager plan-matches to the in-memory columnar
-# copy -- the warm-scan posture of a long-running session serving
-# repeated queries. Tables above _CACHE_SPLIT_BYTES are persisted
-# REPARTITIONED to defaultParallelism: a sub-128MB single parquet file
-# scans as one partition, so caching it as-is would pin every
-# downstream computation over that table to a single thread -- the
-# opposite of the multi-executor layout the cache is modelling. The
-# fingerprint (mtime, size) in the key means an in-place regeneration
-# of the file (the driver rewrites testdata between rounds) unpersists
-# the stale copy instead of silently serving it.
-# OFF by default: at lake scale the fact tables do not fit in memory
-# and the cache would only add churn (bench.py turns it on; see
+# Steady-state table caching (SPARK_GRAFT_SERVING=tables or plans, see
+# serving.py). read_table persists each table's DataFrame once per
+# (session, path, file fingerprint); every later read of the same table
+# builds an identical logical plan, which Spark's CacheManager
+# plan-matches to the in-memory columnar copy -- the warm-scan posture
+# of a long-running session serving repeated queries. Tables above
+# _CACHE_SPLIT_BYTES are persisted REPARTITIONED to defaultParallelism:
+# a sub-128MB single parquet file scans as one partition, so caching it
+# as-is would pin every downstream computation over that table to a
+# single thread -- the opposite of the multi-executor layout the cache
+# is modelling. A regenerated file changes the fingerprint, so the store
+# unpersists the stale copy instead of silently serving it.
+# OFF at the default level: at lake scale the fact tables do not fit in
+# memory and the cache would only add churn (bench.py turns it on; see
 # BENCH_NOTES.md for the measurement rationale).
-_PERSISTED: dict[tuple, tuple] = {}  # (appId, path) -> (fingerprint, df)
 _CACHE_SPLIT_BYTES = 128 * 1024  # below this a single partition is fine
-
-
-def _cache_wanted(name: str) -> bool:
-    conf = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "")
-    return conf == "all" or name in {t.strip() for t in conf.split(",") if t.strip()}
 
 
 def _fingerprint(path: str) -> tuple:
@@ -137,31 +129,6 @@ def _fingerprint(path: str) -> tuple:
     return tuple(entries) if entries else (st.st_mtime_ns, st.st_size)
 
 
-def evict_where(cache: dict, pred, finalize=None) -> int:
-    """Shared cache-lifecycle helper (VERDICT r9 #3): pop every entry
-    whose KEY satisfies ``pred``, running ``finalize(value)``
-    best-effort first (unpersist a displaced frame, drop its temp
-    view). Every fingerprint-keyed memo in the package calls this
-    before inserting a fresh entry for the same scope, so a corpus
-    regeneration or a new sf_dir REPLACES steady-state serving state
-    instead of accumulating it -- the unbounded-growth leak the r9
-    advice flagged on _UPSERT_DELTA_BANDS applies to any
-    (session/app, sf_dir, fingerprint)-keyed dict whose old entries
-    pin persisted RDDs or catalog views. Dropping the dict reference
-    is itself load-bearing: Spark's ContextCleaner frees a
-    (local)checkpointed RDD's blocks only once the last reference is
-    gone."""
-    stale = [k for k in cache if pred(k)]
-    for k in stale:
-        v = cache.pop(k)
-        if finalize is not None:
-            try:
-                finalize(v)
-            except Exception:
-                pass  # best-effort: a dead session's views are already gone
-    return len(stale)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table from ``{sf_dir}/{name}.parquet``."""
     if name not in TABLES:
@@ -179,8 +146,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # emits micro-precision values, so the div-1000 conversion is exact.
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if _cache_wanted(name):
-        # Big tables cache in a parallel layout (see _PERSISTED note).
+    from ..serving import at_least, serve
+
+    if at_least("tables"):
+        # Big tables cache in a parallel layout (see the note above).
         # The repartition is part of the RETURNED plan every call, so
         # the CacheManager's canonical-plan match replaces it with the
         # InMemoryRelation on warm reads -- the shuffle runs once.
@@ -190,16 +159,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             big = False
         if big:
             df = df.repartition(spark.sparkContext.defaultParallelism)
-        key = (spark.sparkContext.applicationId, path)
-        fp = _fingerprint(path)
-        cached = _PERSISTED.get(key)
-        if cached is not None and cached[0] != fp:
-            cached[1].unpersist()
-            del _PERSISTED[key]
-            cached = None
-        if cached is None:
-            df.persist()
-            _PERSISTED[key] = (fp, df)
+        serve(
+            spark, sf_dir, f"table.{name}", (name,), df.persist, DataFrame.unpersist
+        )
     return df
 
 

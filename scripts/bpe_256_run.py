@@ -14,7 +14,7 @@ import time
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/scale_data30/sf1"
 n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 256
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
+os.environ.setdefault("SPARK_GRAFT_SERVING", "tables")
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

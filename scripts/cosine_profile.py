@@ -9,7 +9,7 @@ import sys
 import time
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
+os.environ.setdefault("SPARK_GRAFT_SERVING", "tables")
 
 from cell_kn_mvp_etl_results_spark.operators import similarity as sim
 from cell_kn_mvp_etl_results_spark.session import get_spark

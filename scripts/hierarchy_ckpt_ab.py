@@ -13,10 +13,10 @@ import sys
 import time
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/scale_data30/sf1"
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
-# The traversal loop runs at BUILD time (driver-side iteration), so the
-# prepared-plan cache must be off or every rep would reuse run 1's loop.
-os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"
+# Table cache on, prepared-plan cache off: the traversal loop runs at
+# BUILD time (driver-side iteration), so a reused plan would replay
+# run 1's loop.
+os.environ["SPARK_GRAFT_SERVING"] = "tables"
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

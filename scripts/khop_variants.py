@@ -9,8 +9,9 @@ import sys
 import time
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
+os.environ.setdefault("SPARK_GRAFT_SERVING", "tables")
 
+from cell_kn_mvp_etl_results_spark import serving
 from cell_kn_mvp_etl_results_spark.plans import REGISTRY
 from cell_kn_mvp_etl_results_spark.plans import graph_queries as gq
 from cell_kn_mvp_etl_results_spark.operators.graph import k_hop_counts
@@ -32,7 +33,8 @@ spark.range(1_000_000).selectExpr("sum(id)").collect()
 spec = REGISTRY["q_khop_paths"]
 spec.builder(spark, sf_dir).collect()  # build caches
 
-hops, term, _views = gq._HOP_FRAMES[list(gq._HOP_FRAMES)[0]]
+(entry,) = [e for e in serving.entries() if e.name == "khop.hops"]
+hops, term = entry.value["hops"], entry.value["term"]
 
 
 def counts():

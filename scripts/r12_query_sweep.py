@@ -2,9 +2,9 @@
 
 Times EVERY registered query at the bench scale factor with the bench's
 own session config and methodology (per-query warmup, median of 3
-timed runs), in BOTH the rebuild regime (warm table cache,
-SPARK_GRAFT_PLAN_CACHE=0 -- the from-scratch-per-run number the 2x bar
-is graded on) and the prepared regime, and captures
+timed runs), in BOTH the rebuild regime (SPARK_GRAFT_SERVING=tables:
+warm table cache, plans rebuilt -- the from-scratch-per-run number the
+2x bar is graded on) and the prepared regime (=plans), and captures
 ``explain("formatted")`` for every query into a directory.
 
 The timed action is ``collect()`` -- identical to bench.py -- so the
@@ -67,7 +67,6 @@ def main() -> None:
     os.environ.setdefault(
         "SPARK_GRAFT_DRIVER_MEM", f"{max(8, total * 24 // (1 << 30) + 1)}g"
     )
-    os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
 
     from cell_kn_mvp_etl_results_spark.plans import REGISTRY
     from cell_kn_mvp_etl_results_spark.session import get_spark
@@ -90,10 +89,10 @@ def main() -> None:
     if args.plans_dir:
         os.makedirs(args.plans_dir, exist_ok=True)
 
-    def timed(name: str, plan_cache: str) -> float:
-        os.environ["SPARK_GRAFT_PLAN_CACHE"] = plan_cache
+    def timed(name: str, level: str) -> float:
+        os.environ["SPARK_GRAFT_SERVING"] = level
         spec = REGISTRY[name]
-        spark.sparkContext.setJobDescription(f"sweep:{name}:pc{plan_cache}")
+        spark.sparkContext.setJobDescription(f"sweep:{name}:{level}")
         spec.builder(spark, sf_dir).collect()  # warmup
         samples = []
         for _ in range(args.runs):
@@ -108,11 +107,11 @@ def main() -> None:
     errors: dict[str, str] = {}
     for name in names:
         try:
-            rebuild[name] = timed(name, "0")
+            rebuild[name] = timed(name, "tables")
             if not args.skip_prepared:
-                prepared[name] = timed(name, "1")
+                prepared[name] = timed(name, "plans")
             if args.plans_dir:
-                os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"
+                os.environ["SPARK_GRAFT_SERVING"] = "tables"
                 df = REGISTRY[name].builder(spark, sf_dir)
                 with open(
                     os.path.join(args.plans_dir, f"{name}.txt"), "w"

@@ -23,8 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
-os.environ["SPARK_GRAFT_CACHE_TABLES"] = "all"
-os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"
+os.environ["SPARK_GRAFT_SERVING"] = "tables"
 
 from cell_kn_mvp_etl_results_spark.plans import REGISTRY
 from cell_kn_mvp_etl_results_spark.session import get_spark

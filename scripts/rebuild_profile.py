@@ -36,8 +36,7 @@ jg.GatewayClient.send_command = _counting
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "all"
-    os.environ["SPARK_GRAFT_PLAN_CACHE"] = "0"
+    os.environ["SPARK_GRAFT_SERVING"] = "tables"
     spark = get_spark(
         "rebuild-profile",
         shuffle_partitions=8,

@@ -7,8 +7,8 @@ order (100x first, on the coolest box) so round-over-round comparisons
 alternate the bias, and (c) sleeps between legs so the previous JVM's
 load drains.
 
-Each leg is the standard pair protocol: bench.py (rebuild regime,
-SPARK_GRAFT_PLAN_CACHE=0) then scripts/oracle_bench.py, same sf_dir.
+Each leg is the standard pair protocol: bench.py (its rebuild regime,
+SPARK_GRAFT_SERVING=tables) then scripts/oracle_bench.py, same sf_dir.
 
 Usage: python scripts/scale_sweep.py [order: e.g. 100,30,10] [gap_s]
 """
@@ -57,9 +57,7 @@ def main() -> None:
     rows = []
     for scale in order:
         sf_dir = SCALES[scale]
-        env = dict(
-            os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_PLAN_CACHE="0"
-        )
+        env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
         pre = box_state()
         s = run_json([sys.executable, "bench.py"], env)
         mid = box_state()

@@ -13,7 +13,7 @@ import sys
 import time
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/scale_data100/sf1"
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
+os.environ.setdefault("SPARK_GRAFT_SERVING", "tables")
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

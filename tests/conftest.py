@@ -13,8 +13,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("cell-kn-spark-tests", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # A per-run warehouse: materialized tables from earlier runs can
+    # never be recovered, so storage-state assertions start clean.
+    wh = str(tmp_path_factory.mktemp("warehouse"))
+    s = get_spark(
+        "cell-kn-spark-tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": wh},
+    )
     yield s
     s.stop()
 

@@ -1,26 +1,29 @@
 """Cache-lifecycle contract (VERDICT r9 #3 / ADVICE r9): every
-fingerprint-keyed steady-state memo must EVICT its displaced entry --
-unpersist the old frame, drop the old temp view -- when the corpus it
-was derived from regenerates, instead of pinning one generation of
-serving state per rewrite for the application's lifetime.
+serving-store entry (serving.py) must be RELEASED -- unpersist the old
+frame, drop the old temp view -- when the corpus it was derived from
+regenerates, instead of pinning one generation of serving state per
+rewrite for the application's lifetime.
 
-The tests regenerate a table in a tmp sf_dir (rewrite => new mtime, the
+The regeneration tests rewrite a table in a tmp sf_dir (new mtime, the
 exact thing the driver does to testdata between rounds) and assert the
-stale catalog/persistence state is gone.
+stale catalog/persistence state is gone; the store tests pin serve's
+lifecycle itself, including SPARK_GRAFT_SERVING=off holding no more
+Spark state after repeated calls than after one.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import subprocess
+import sys
 import time
 
 import pytest
 
-from cell_kn_mvp_etl_results_spark.sources.readers import (
-    _fingerprint,
-    evict_where,
-)
+from cell_kn_mvp_etl_results_spark import serving
+from cell_kn_mvp_etl_results_spark.sources.readers import _fingerprint
 
 from conftest import SF_DIR
 
@@ -47,6 +50,10 @@ def _regenerate(path: str) -> None:
     os.utime(target, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
 
 
+def _entries(d: str, name: str) -> list:
+    return [e for e in serving.entries() if e.sf_dir == d and e.name == name]
+
+
 def test_fingerprint_directory_uses_listing(tmp_path):
     # ADVICE r9: an in-place rewrite of a part file inside a
     # directory-backed parquet table does not change the directory's
@@ -65,30 +72,106 @@ def test_fingerprint_directory_uses_listing(tmp_path):
     assert fp1 != fp2
 
 
-def test_evict_where_runs_finalizer_and_pops():
-    cache = {("a", 1): "v1", ("a", 2): "v2", ("b", 1): "v3"}
-    seen = []
-    n = evict_where(cache, lambda k: k[0] == "a", seen.append)
-    assert n == 2
-    assert sorted(seen) == ["v1", "v2"]
-    assert cache == {("b", 1): "v3"}
+def test_serve_releases_displaced_entry(spark, tmp_path):
+    d = _copy_table(tmp_path, "region")
+    released = []
+    v1 = serving.serve(spark, d, "t", ("region",), lambda: ["v1"], released.append)
+    # a fingerprint match is a hit: no build, no release
+    assert serving.serve(spark, d, "t", ("region",), lambda: ["x"]) is v1
+    assert released == []
+    # other params in the same scope displace it
+    v2 = serving.serve(
+        spark, d, "t", ("region",), lambda: ["v2"], released.append, params=(2,)
+    )
+    assert released == [v1] and v2 == ["v2"]
+    # so does a regenerated input file
+    _regenerate(os.path.join(d, "region.parquet"))
+    v3 = serving.serve(
+        spark, d, "t", ("region",), lambda: ["v3"], released.append, params=(2,)
+    )
+    assert released == [v1, v2]
+    # one entry per scope, holding the latest value; other names untouched
+    serving.serve(spark, d, "u", (), lambda: "other")
+    assert [e.value for e in _entries(d, "t")] == [v3]
+    assert [e.value for e in _entries(d, "u")] == ["other"]
 
 
-def test_evict_where_swallows_finalizer_errors():
-    cache = {1: "x"}
+def test_serve_swallows_release_errors(spark, tmp_path):
+    d = str(tmp_path)
 
     def boom(v):
         raise RuntimeError("already dropped")
 
-    assert evict_where(cache, lambda k: True, boom) == 1
-    assert cache == {}
+    serving.serve(spark, d, "t", (), lambda: 1, boom)
+    assert serving.serve(spark, d, "t", (), lambda: 2, params=(1,)) == 2
+    assert [e.value for e in _entries(d, "t")] == [2]
+    assert serving.clear(spark) >= 1
+    assert _entries(d, "t") == []
+
+
+def test_serve_off_never_hits_and_keeps_one_entry(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SERVING", "off")
+    d = str(tmp_path)
+    released = []
+    values = [
+        serving.serve(spark, d, "t", (), object, released.append) for _ in range(3)
+    ]
+    assert len({id(v) for v in values}) == 3  # rebuilt on every call
+    assert released == values[:2]  # each call released the previous one
+    assert [e.value for e in _entries(d, "t")] == [values[2]]
+
+
+def test_serving_level_rejects_unknown_value(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SERVING", "0")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SERVING"):
+        serving.level()
+
+
+def test_stopped_session_entries_dropped_on_next_miss(tmp_path):
+    # Runs in a fresh process: stopping a session here would stop the
+    # shared test session.
+    script = """
+import json, sys
+from cell_kn_mvp_etl_results_spark import serving
+from cell_kn_mvp_etl_results_spark.session import get_spark
+
+d = sys.argv[1]
+a = get_spark("serving-dead-a", master="local[1]")
+df = serving.serve(
+    a, d, "frame", (), lambda: a.range(10).persist(), lambda v: v.unpersist()
+)
+df.count()
+held = [e.name for e in serving.entries() if e.session is a]
+a.stop()
+b = get_spark("serving-dead-b", master="local[1]")
+assert b is not a
+serving.serve(b, d, "other", (), lambda: 1)
+print(json.dumps({
+    "held": held,
+    "after": [(e.session is a, e.name) for e in serving.entries()],
+    "misses": serving.stats()["misses"],
+}))
+b.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("SPARK_GRAFT_SERVING", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["held"] == ["frame"]
+    assert out["after"] == [[False, "other"]]
+    assert out["misses"] == 2
 
 
 def test_sql_view_evicted_on_regeneration(spark, tmp_path):
-    from cell_kn_mvp_etl_results_spark.plans.relational import (
-        _SQL_VIEWS,
-        _view,
-    )
+    from cell_kn_mvp_etl_results_spark.plans.relational import _view
 
     d = _copy_table(tmp_path, "region")
     name1 = _view(spark, d, "region")
@@ -96,22 +179,18 @@ def test_sql_view_evicted_on_regeneration(spark, tmp_path):
     _regenerate(os.path.join(d, "region.parquet"))
     name2 = _view(spark, d, "region")
     assert name2 != name1
-    # the displaced view is gone from the catalog AND the memo
+    # the displaced view is gone from the catalog AND the store
     assert not spark.catalog.tableExists(name1)
-    keys = [k for k in _SQL_VIEWS if k[1] == d and k[2] == "region"]
-    assert len(keys) == 1 and _SQL_VIEWS[keys[0]] == name2
+    assert [e.value for e in _entries(d, "view.region")] == [name2]
 
 
 def test_minhash_sigs_view_unpersisted_on_regeneration(spark, tmp_path):
-    from cell_kn_mvp_etl_results_spark.plans.llmdata import (
-        _MINHASH_SIG_VIEWS,
-        _minhash_sigs_view,
-    )
+    from cell_kn_mvp_etl_results_spark.plans.llmdata import _minhash_sigs_view
 
     d = _copy_table(tmp_path, "documents")
     name1 = _minhash_sigs_view(spark, d)
     ((sigs1, cand1),) = [
-        (v[0], v[4]) for k, v in _MINHASH_SIG_VIEWS.items() if k[1] == d
+        (e.value[0], e.value[4]) for e in _entries(d, "minhash.views")
     ]
     assert sigs1.is_cached and cand1.is_cached
     _regenerate(os.path.join(d, "documents.parquet"))
@@ -120,50 +199,41 @@ def test_minhash_sigs_view_unpersisted_on_regeneration(spark, tmp_path):
     assert not spark.catalog.tableExists(name1)
     assert not sigs1.is_cached  # displaced signatures were unpersisted
     assert not cand1.is_cached  # displaced LSH index was unpersisted
-    assert len([k for k in _MINHASH_SIG_VIEWS if k[1] == d]) == 1
+    assert len(_entries(d, "minhash.views")) == 1
 
 
-def test_upsert_delta_bands_evicted_on_regeneration(
-    spark, tmp_path, monkeypatch
-):
-    # inline mode: the materialized-table layer would otherwise write a
-    # new warehouse table per fingerprint, which is not under test here
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "0")
+def test_upsert_delta_bands_evicted_on_regeneration(spark, tmp_path):
     from cell_kn_mvp_etl_results_spark.plans.extended2 import (
-        _UPSERT_DELTA_BANDS,
         pair_index_upsert_pairs,
     )
 
     d = _copy_table(tmp_path, "documents")
     pair_index_upsert_pairs(spark, d).count()
-    keys1 = [k for k in _UPSERT_DELTA_BANDS if k[1] == d]
-    assert len(keys1) == 1
+    (e1,) = _entries(d, "upsert.delta_bands")
+    pair_index_upsert_pairs(spark, d).count()
+    (again,) = _entries(d, "upsert.delta_bands")
+    assert again is e1  # same fingerprint: a hit, nothing rebuilt
     _regenerate(os.path.join(d, "documents.parquet"))
     pair_index_upsert_pairs(spark, d).count()
-    keys2 = [k for k in _UPSERT_DELTA_BANDS if k[1] == d]
-    assert len(keys2) == 1  # replaced, not accumulated
-    assert keys2[0] != keys1[0]
+    (e2,) = _entries(d, "upsert.delta_bands")  # replaced, not accumulated
+    assert e2.fingerprints != e1.fingerprints
+    assert e2.value is not e1.value
 
 
 def test_khop_hop_frames_evicted_on_regeneration(spark, tmp_path):
-    from cell_kn_mvp_etl_results_spark.plans.graph_queries import (
-        _HOP_FRAMES,
-        q_khop_paths,
-    )
+    from cell_kn_mvp_etl_results_spark.plans.graph_queries import q_khop_paths
 
     d = str(tmp_path)
     for t in ("customer", "orders", "lineitem", "supplier", "nation"):
         _copy_table(tmp_path, t)
     q_khop_paths(spark, d).count()
-    entries1 = {k: v for k, v in _HOP_FRAMES.items() if k[1] == d}
-    assert len(entries1) == 1
-    (hops1, term1, views1) = next(iter(entries1.values()))
+    (e1,) = _entries(d, "khop.hops")
+    hops1, term1, views1 = e1.value["hops"], e1.value["term"], e1.value["views"]
     assert term1.is_cached
     _regenerate(os.path.join(d, "lineitem.parquet"))
     q_khop_paths(spark, d).count()
-    entries2 = {k: v for k, v in _HOP_FRAMES.items() if k[1] == d}
-    assert len(entries2) == 1  # replaced, not accumulated
-    assert next(iter(entries2)) != next(iter(entries1))
+    (e2,) = _entries(d, "khop.hops")  # replaced, not accumulated
+    assert e2.fingerprints != e1.fingerprints
     assert not term1.is_cached
     assert all(not h.is_cached for h in hops1.values())
     for vn in views1.values():
@@ -173,13 +243,10 @@ def test_khop_hop_frames_evicted_on_regeneration(spark, tmp_path):
 def test_incr_cycle_index_unpersisted_on_regeneration(spark, tmp_path):
     # ADVICE r10: q_incremental_cycle's base LSH index was persisted in
     # the plan closure with no eviction path -- it now lives in the
-    # same fingerprint-keyed memo contract as every other serving memo.
+    # serving store like every other serving memo.
     import pyspark.sql.functions as F
 
-    from cell_kn_mvp_etl_results_spark.plans.llmdata import (
-        _INCR_CYCLE_IDX,
-        _incr_cycle_base_index,
-    )
+    from cell_kn_mvp_etl_results_spark.plans.llmdata import _incr_cycle_base_index
     from cell_kn_mvp_etl_results_spark.sources.readers import read_table
 
     d = _copy_table(tmp_path, "documents")
@@ -192,9 +259,53 @@ def test_incr_cycle_index_unpersisted_on_regeneration(spark, tmp_path):
     idx1 = _incr_cycle_base_index(spark, d, base())
     idx1.count()
     assert idx1.is_cached
-    assert len([k for k in _INCR_CYCLE_IDX if k[1] == d]) == 1
+    (e1,) = _entries(d, "incr_cycle.index")
+    assert e1.value is idx1
     _regenerate(os.path.join(d, "documents.parquet"))
     idx2 = _incr_cycle_base_index(spark, d, base())
     assert idx2 is not idx1
     assert not idx1.is_cached  # displaced index was unpersisted
-    assert len([k for k in _INCR_CYCLE_IDX if k[1] == d]) == 1
+    (e2,) = _entries(d, "incr_cycle.index")  # replaced, not accumulated
+    assert e2.value is idx2
+
+
+def _spark_state(spark, since: int) -> tuple[int, int]:
+    """(cached RDDs newer than RDD id ``since`` per the block manager,
+    temp views in the catalog). The id watermark keeps RDDs that
+    earlier tests left for the ContextCleaner out of the count: their
+    asynchronous cleanup would otherwise move it mid-test."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    rdds = sum(1 for i in infos if i.id() > since)
+    views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+    return rdds, views
+
+
+def test_off_level_holds_constant_state_across_calls(spark, tmp_path, monkeypatch):
+    """SPARK_GRAFT_SERVING=off rebuilds serving state on every call but
+    must not accumulate it: the store releases call N's frames and
+    views before call N+1 builds, and clear() returns the session to
+    where it started."""
+    from cell_kn_mvp_etl_results_spark.plans import REGISTRY
+
+    d = str(tmp_path)
+    for t in (
+        "customer", "orders", "lineitem", "supplier", "nation", "documents",
+        "embeddings",
+    ):
+        _copy_table(tmp_path, t)
+    monkeypatch.setenv("SPARK_GRAFT_SERVING", "off")
+    serving.clear(spark)
+    since = spark.sparkContext.parallelize([0]).id()
+    before = _spark_state(spark, since)
+    for name in ("q_dedup_minhash_lsh", "q_khop_paths", "q_cosine_topk"):
+        build = REGISTRY[name].builder
+        rows = [sorted(map(tuple, build(spark, d).collect()))]
+        after_first = _spark_state(spark, since)
+        for _ in range(2):
+            rows.append(sorted(map(tuple, build(spark, d).collect())))
+            assert _spark_state(spark, since) == after_first, name
+        assert rows[0] and rows[1] == rows[0] and rows[2] == rows[0], name
+    assert any(e.sf_dir == d for e in serving.entries())
+    serving.clear(spark)
+    assert not any(e.sf_dir == d for e in serving.entries())
+    assert _spark_state(spark, since) == before

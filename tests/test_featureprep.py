@@ -187,7 +187,7 @@ def test_zscore_moments_are_exact(spark, sf_dir):
         assert abs(sum(z * z for z in zs) - n) < 1e-9 * n
 
 
-def test_leakage_split_bucketed_is_row_identical(spark, sf_dir):
+def test_leakage_split_bucketed_is_row_identical(spark, sf_dir, monkeypatch):
     # The steady-state (materialized components) posture must return
     # exactly what the in-query build returns.
     from cell_kn_mvp_etl_results_spark.plans.clusters import (
@@ -195,21 +195,12 @@ def test_leakage_split_bucketed_is_row_identical(spark, sf_dir):
         q_split_leakage_safe,
     )
 
-    import os
-
     # Force the safe form down its ORIGINAL in-query path (since r8 its
     # default also reads the materialized table) so this pin still
-    # compares the two distinct computations. Save/restore any value
-    # the caller had exported (ADVICE r8: an unconditional pop
-    # clobbered it).
-    prior = os.environ.get("SPARK_GRAFT_MATERIALIZE")
-    os.environ["SPARK_GRAFT_MATERIALIZE"] = "0"
-    try:
-        a = sorted(map(tuple, q_split_leakage_safe(spark, sf_dir).collect()))
-    finally:
-        if prior is None:
-            os.environ.pop("SPARK_GRAFT_MATERIALIZE", None)
-        else:
-            os.environ["SPARK_GRAFT_MATERIALIZE"] = prior
+    # compares the two distinct computations; monkeypatch restores any
+    # value the caller had exported (ADVICE r8).
+    monkeypatch.setenv("SPARK_GRAFT_SERVING", "off")
+    a = sorted(map(tuple, q_split_leakage_safe(spark, sf_dir).collect()))
+    monkeypatch.undo()
     b = sorted(map(tuple, q_split_leakage_bucketed(spark, sf_dir).collect()))
     assert a == b

@@ -1,7 +1,7 @@
 """The r8 materialized-intermediates posture (plans/materialized.py):
 the DEFAULT call path of every simhash/jaccard graph consumer serves
 from the auto-build-or-reuse bucketed tables, and must be row-identical
-to the original in-query computation (SPARK_GRAFT_MATERIALIZE=0)."""
+to the original in-query computation (SPARK_GRAFT_SERVING=off)."""
 
 from __future__ import annotations
 
@@ -26,22 +26,17 @@ REWIRED = [
 ]
 
 
-def _rows(name, spark, sf_dir, materialize: str):
-    old = os.environ.get("SPARK_GRAFT_MATERIALIZE")
-    os.environ["SPARK_GRAFT_MATERIALIZE"] = materialize
-    try:
-        return sorted(map(tuple, REGISTRY[name].builder(spark, sf_dir).collect()))
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_MATERIALIZE", None)
-        else:
-            os.environ["SPARK_GRAFT_MATERIALIZE"] = old
+def _rows(name, spark, sf_dir, monkeypatch, level: str):
+    monkeypatch.setenv("SPARK_GRAFT_SERVING", level)
+    return sorted(map(tuple, REGISTRY[name].builder(spark, sf_dir).collect()))
 
 
 @pytest.mark.parametrize("name", REWIRED)
-def test_materialized_default_is_row_identical_to_inline(spark, sf_dir, name):
-    inline = _rows(name, spark, sf_dir, "0")
-    materialized = _rows(name, spark, sf_dir, "1")
+def test_materialized_default_is_row_identical_to_inline(
+    spark, sf_dir, name, monkeypatch
+):
+    inline = _rows(name, spark, sf_dir, monkeypatch, "off")
+    materialized = _rows(name, spark, sf_dir, monkeypatch, "derived")
     assert inline == materialized
     assert len(inline) > 0
 

@@ -13,6 +13,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from cell_kn_mvp_etl_results_spark import serving
+
 from conftest import SF_DIR
 
 
@@ -67,28 +69,21 @@ def test_pq_encode_matches_fit_codes(spark, sf_dir):
     assert got == sorted(map(tuple, codes.collect()))
 
 
-def test_registry_path_row_identical_to_inline(spark, sf_dir):
-    """SPARK_GRAFT_MATERIALIZE=0 (inline training) and =1 (registry)
+def test_registry_path_row_identical_to_inline(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_SERVING=off (inline training) and =derived (registry)
     must produce identical rows for every model-registry consumer."""
     from cell_kn_mvp_etl_results_spark.plans import REGISTRY
 
     names = ("q_semantic_clusters", "q_pq_topk", "q_ivfpq_topk", "q_ann_recall")
-    old = os.environ.get("SPARK_GRAFT_MATERIALIZE")
-    try:
-        rows = {}
-        for leg, mat in (("inline", "0"), ("registry", "1")):
-            os.environ["SPARK_GRAFT_MATERIALIZE"] = mat
-            rows[leg] = {
-                n: sorted(map(tuple, REGISTRY[n].builder(spark, sf_dir).collect()))
-                for n in names
-            }
-        for n in names:
-            assert rows["inline"][n] == rows["registry"][n], n
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_MATERIALIZE", None)
-        else:
-            os.environ["SPARK_GRAFT_MATERIALIZE"] = old
+    rows = {}
+    for level in ("off", "derived"):
+        monkeypatch.setenv("SPARK_GRAFT_SERVING", level)
+        rows[level] = {
+            n: sorted(map(tuple, REGISTRY[n].builder(spark, sf_dir).collect()))
+            for n in names
+        }
+    for n in names:
+        assert rows["off"][n] == rows["derived"][n], n
 
 
 def test_model_registry_memoizes_and_invalidates(spark, tmp_path):
@@ -104,24 +99,19 @@ def test_model_registry_memoizes_and_invalidates(spark, tmp_path):
     c3 = models.kmeans_centroids(spark, d, k=4, iters=1)
     assert c3 is not c1  # fingerprint moved -> retrained
     assert c3 == c1  # same bytes -> same deterministic model
+    held = [e.value for e in serving.entries() if e.sf_dir == d]
+    assert len(held) == 1 and held[0] is c3  # replaced, not accumulated
 
 
-def test_model_registry_disabled_trains_inline(spark, tmp_path):
+def test_model_registry_disabled_trains_inline(spark, tmp_path, monkeypatch):
     from cell_kn_mvp_etl_results_spark.plans import models
 
     d = _copy_embeddings(tmp_path)
-    old = os.environ.get("SPARK_GRAFT_MATERIALIZE")
-    os.environ["SPARK_GRAFT_MATERIALIZE"] = "0"
-    try:
-        c1 = models.kmeans_centroids(spark, d, k=4, iters=1)
-        c2 = models.kmeans_centroids(spark, d, k=4, iters=1)
-        assert c1 is not c2  # no memo when disabled
-        assert c1 == c2
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_MATERIALIZE", None)
-        else:
-            os.environ["SPARK_GRAFT_MATERIALIZE"] = old
+    monkeypatch.setenv("SPARK_GRAFT_SERVING", "off")
+    c1 = models.kmeans_centroids(spark, d, k=4, iters=1)
+    c2 = models.kmeans_centroids(spark, d, k=4, iters=1)
+    assert c1 is not c2  # no reuse when off
+    assert c1 == c2
 
 
 def test_quantized_query_rows_match_corpus(spark, tmp_path):

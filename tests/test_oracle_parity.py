@@ -169,3 +169,13 @@ def test_gate_budget_ordering():
         f"non-TAIL queries pushed past the gate budget: {stranded}; "
         f"mark redundant variants priority=TAIL or merge gates"
     )
+
+
+def test_rotation_guard_checks_live_tuple(monkeypatch):
+    """The _ordered() typo guard must read the same rotation tuple that
+    _effective_priority does: an unregistered name there raises."""
+    from cell_kn_mvp_etl_results_spark.plans import registry
+
+    monkeypatch.setattr(registry, "_GATED", registry._GATED + ("q_no_such",))
+    with pytest.raises(ValueError, match="q_no_such"):
+        registry._ordered()

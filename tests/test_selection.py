@@ -5,12 +5,14 @@ and known-graph metric values."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_results_spark.operators.graph import modularity
 from cell_kn_mvp_etl_results_spark.operators.selection import (
     dsir_importance,
     group_minhash_overlap,
+    group_minhash_signatures,
     weighted_sample,
 )
 
@@ -76,6 +78,22 @@ def test_group_overlap_identical_and_disjoint_groups(spark):
     }
     assert got[("a", "b")] == 1.0  # identical shingle sets
     assert got[("a", "c")] == 0.0 and got[("b", "c")] == 0.0
+
+
+def test_group_overlap_rejects_gsig_of_wrong_length(spark):
+    # A signature frame built with 16 permutations must not be scored
+    # as 32: n_match / 32 would silently halve every estimate.
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps", "a"), (2, "over the lazy dog", "b")],
+        "doc_id long, text string, src string",
+    )
+    gsig16 = group_minhash_signatures(df, "src", "text", num_perm=16)
+    with pytest.raises(ValueError, match="num_perm=32"):
+        group_minhash_overlap(df, "src", "text", num_perm=32, gsig=gsig16)
+    gsig32 = group_minhash_signatures(df, "src", "text", num_perm=32)
+    assert group_minhash_overlap(
+        df, "src", "text", num_perm=32, gsig=gsig32
+    ).count() == 1
 
 
 def test_modularity_two_cliques(spark):
