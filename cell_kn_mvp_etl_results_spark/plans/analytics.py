@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 
 @query(
@@ -64,10 +64,6 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_pivot",
     tags=("agg", "pivot"),
-    # r4 rotation: 2 green driver rows (r2-r3); its slot goes to the new
-    # q_interval_join so the interval-join operator earns a driver
-    # artifact row. Still oracle-checked by pytest.
-    priority=TAIL,
     oracle="""
 SELECT o_orderpriority,
        CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS F,
@@ -96,7 +92,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_event_debounce",
     tags=("window", "events", "streaming"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH g AS (
   SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
@@ -149,7 +144,6 @@ def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_gap_fill",
     tags=("window", "events", "timeseries"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH base AS (
   SELECT user_id AS key,

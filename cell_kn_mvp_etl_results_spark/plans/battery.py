@@ -81,11 +81,16 @@ def touched_edges(paths: DataFrame) -> DataFrame:
     """
 
     def _pairs(arr):
-        return F.transform(
-            F.sequence(F.lit(1), F.size(arr) - 1),
-            lambda i: F.struct(
-                F.element_at(arr, i).alias("src"),
-                F.element_at(arr, i + 1).alias("dst"),
+        # NULL below two entries (explode then drops the row): a one-node
+        # path has no edge, and sequence(1, 0) would count down to 0.
+        return F.when(
+            F.size(arr) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(arr) - 1),
+                lambda i: F.struct(
+                    F.element_at(arr, i).alias("src"),
+                    F.element_at(arr, i + 1).alias("dst"),
+                ),
             ),
         )
 

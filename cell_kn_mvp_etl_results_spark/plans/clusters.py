@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 from ..operators import dedup as dd
 from ..sources.readers import read_table
 from .llmdata import _SHINGLES_SQL
-from .registry import REGISTRY, TAIL, query
+from .registry import REGISTRY, query
 
 
 @query(
@@ -85,7 +85,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dedup_exemplar",
     # closure_oracle: see q_dedup_clusters -- same quadratic reach CTE.
     tags=("dedup", "graph", "W1", "closure_oracle"),
-    priority=TAIL,  # new in r5: pytest-gated; rotates into the budget next round
     oracle=f"""
 WITH RECURSIVE {_SHINGLES_SQL},
 sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -174,7 +173,6 @@ _semdedup_kmeans_oracle = _kmeans_oracle(k=8, iters=2, dim=64, quantize=4)
     # registered query cannot do because the unrolled-CTE oracle needs
     # a literal k.
     tags=("dedup", "similarity", "cluster", "smallscale_quadratic"),
-    priority=TAIL,  # new in r7: pytest-gated; rotates into the budget next round
     oracle=f"""
 WITH res AS (
 {_semdedup_kmeans_oracle}
@@ -267,7 +265,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_split_leakage_safe",
     # closure_oracle: same quadratic reach CTE as q_dedup_clusters.
     tags=("dedup", "sampling", "graph", "closure_oracle"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=f"""
 WITH RECURSIVE {_SHINGLES_SQL},
 sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -429,7 +426,6 @@ def materialize_dedup_components(
     "q_split_leakage_bucketed",
     # same output and (closure) oracle as q_split_leakage_safe
     tags=("dedup", "sampling", "graph", "scale", "closure_oracle"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=REGISTRY["q_split_leakage_safe"].oracle,
 )
 def q_split_leakage_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

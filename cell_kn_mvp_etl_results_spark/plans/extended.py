@@ -16,7 +16,7 @@ from ..operators.search import build_gram_index
 from ..operators.similarity import _quantized, dot
 from ..sources.readers import read_table
 from .graph_queries import _TUPLES_ORACLE_BODY, order_tuples
-from .registry import TAIL, query
+from .registry import query
 
 # Largest corpus the all-pairs cosine path may collect into a driver
 # matrix (~100 MB at 64 float64 dims). Above this, q_dedup_embedding
@@ -59,9 +59,6 @@ LIMIT 10
 @query(
     "q_search_grams",
     tags=("text", "T6"),
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3); q_search_prefix holds the other in-budget search
-    # gate while q_ngram_index rotates to TAIL.
     oracle=_search_oracle(),
 )
 def q_search_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,8 +327,6 @@ def q_bnode_reification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_graph_edges",
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3); q_graph_vertices keeps the other T7 gate.
     tags=("graph", "T7"),
     oracle=f"""
 WITH t AS ({_TUPLES_ORACLE_BODY})

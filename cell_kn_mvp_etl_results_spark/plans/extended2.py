@@ -10,7 +10,7 @@ from pyspark.sql.window import Window
 from ..operators import dedup as dd
 from ..serving import serve
 from ..sources.readers import read_table
-from .registry import REGISTRY, TAIL, query
+from .registry import REGISTRY, query
 
 _SIMHASH_BODY = """
 toks AS (
@@ -179,7 +179,6 @@ def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_pair_index_upsert",
     tags=("dedup", "graph", "scale"),
-    priority=TAIL,  # added r8; r9 gate form is this aggregate (VERDICT r8 #4)
     oracle=f"""
 WITH {_SIMHASH_BODY},
 p AS (
@@ -256,7 +255,6 @@ def q_pair_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_first_band_pairs",
     tags=("dedup", "scale"),
-    priority=TAIL,  # added r10 -- promoted in the r10 rotation (first driver row)
     oracle=f"""
 WITH {_SIMHASH_BODY},
 p AS (
@@ -377,7 +375,6 @@ def q_token_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dup_triangles",
     tags=("dedup", "graph"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=f"""
 WITH {_SIMHASH_BODY},
 e AS (
@@ -439,7 +436,6 @@ def q_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_clustering_coeff",
     tags=("dedup", "graph"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=f"""
 WITH {_SIMHASH_BODY},
 e AS (
@@ -555,7 +551,6 @@ SELECT id, score FROM {prev} ORDER BY id
 @query(
     "q_pagerank",
     tags=("graph", "dedup"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=_pagerank_oracle(),
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,7 +671,6 @@ ORDER BY vec_id"""
 @query(
     "q_semantic_clusters",
     tags=("similarity", "cluster"),
-    priority=TAIL,  # new in r6: pytest-gated; rotates into the budget next round
     oracle=_kmeans_oracle(k=8, iters=2, dim=64, quantize=4),
 )
 def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -710,7 +704,6 @@ def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cluster_exemplars",
     tags=("similarity", "cluster", "sampling"),
-    priority=TAIL,  # new in r6: pytest-gated; rotates into the budget next round
     oracle=f"""
 WITH res AS (
 {_kmeans_oracle(k=8, iters=2, dim=64, quantize=4)}
@@ -760,7 +753,6 @@ def q_cluster_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ivf_topk",
     tags=("similarity", "cluster"),
-    priority=TAIL,  # new in r7: pytest-gated; rotates into the budget next round
     oracle=_kmeans_oracle_ctes(k=8, iters=2, dim=64, quantize=4)
     + """,
 asg AS (
@@ -920,7 +912,6 @@ SELECT id, label FROM {prev} ORDER BY id
 @query(
     "q_communities",
     tags=("graph", "dedup"),
-    priority=TAIL,  # new in r6: pytest-gated; rotates into the budget next round
     oracle=_lpa_oracle(iters=2),
 )
 def q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1081,7 +1072,6 @@ w0 AS MATERIALIZED (
 @query(
     "q_bpe_merges",
     tags=("text", "tokenizer"),
-    priority=TAIL,  # new in r6: pytest-gated; rotates into the budget next round
     oracle=_bpe_oracle(n_merges=8),
 )
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1110,7 +1100,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_bpe_segment",
     tags=("text", "tokenizer"),
-    priority=TAIL,  # new in r6: pytest-gated; rotates into the budget next round
     oracle=_bpe_oracle(n_merges=8, segment=True),
 )
 def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1152,7 +1141,6 @@ def _natural_vocab_oracle(n_merges: int = 12) -> str:
 @query(
     "q_bpe_natural_vocab",
     tags=("text", "tokenizer"),
-    priority=TAIL,  # added r10 -- promoted in the r10 rotation (first driver row)
     oracle=_natural_vocab_oracle(n_merges=12),
 )
 def q_bpe_natural_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,7 +1172,6 @@ def q_bpe_natural_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_tokenize_pack",
     tags=("text", "tokenizer", "packing"),
-    priority=TAIL,  # new in r7: pytest-gated; rotates into the budget next round
     oracle=_bpe_oracle(n_merges=8, pack_capacity=2048),
 )
 def q_tokenize_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,7 +1216,6 @@ def q_tokenize_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cluster_purity",
     tags=("similarity", "cluster", "eval"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=f"""
 WITH res AS (
 {_kmeans_oracle(k=8, iters=2, dim=64, quantize=4)}
@@ -1326,7 +1312,6 @@ ORDER BY id
     # The Spark side is fine there (23.7 s steady); only the ORACLE is
     # size-gated, per the r6 bounded-oracle doctrine.
     tags=("graph", "dedup", "closure_oracle"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=_kcore_oracle(k=2, iters=3),
 )
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,7 +1337,6 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ann_recall",
     tags=("similarity", "cluster", "eval"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     # The IVF side is the REGISTERED q_ivf_topk oracle verbatim (same
     # constants by construction); the brute-force base is the
     # q_cosine_topk shape at k=3.
@@ -1494,7 +1478,6 @@ ORDER BY rank
 @query(
     "q_coreset",
     tags=("similarity", "cluster", "sampling"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=_kcenter_oracle(m=6, dim=64, quantize=4),
 )
 def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1517,7 +1500,6 @@ def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_snapshot_diff",
     tags=("dedup", "incremental"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH old AS (
   SELECT doc_id, source, text FROM documents WHERE doc_id % 7 != 3
@@ -1729,7 +1711,6 @@ ORDER BY q_id, rank"""
 @query(
     "q_pq_topk",
     tags=("similarity", "cluster"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=_pq_oracle(
         m=4, k=8, iters=2, dim=64, quantize=4, n_queries=4, topk=5
     ),
@@ -1769,7 +1750,6 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_bm25",
     tags=("text", "search"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id AS id,
@@ -1829,7 +1809,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_incremental_rollup",
     tags=("dedup", "incremental", "agg"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH new AS (
   SELECT doc_id, source,
@@ -1878,7 +1857,6 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_mixture_weights",
     tags=("sampling", "mixture"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH per AS (
   SELECT source,
@@ -1999,7 +1977,6 @@ ORDER BY q_id, rank"""
 @query(
     "q_ivfpq_topk",
     tags=("similarity", "cluster"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=_ivfpq_oracle(
         coarse_k=8,
         coarse_iters=2,
@@ -2050,7 +2027,6 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_quality_drift",
     tags=("dedup", "incremental", "text"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH old AS (
   SELECT doc_id, source, text FROM documents WHERE doc_id % 7 != 3
@@ -2154,7 +2130,6 @@ def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_hybrid_rrf",
     tags=("search", "similarity"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id AS id,

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 _N_BINS = 8
 _TOKEN_BUDGET = 64
@@ -48,7 +48,6 @@ ORDER BY bin
 @query(
     "q_quantile_bins",
     tags=("profiling", "featureprep"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_quantile_bins_oracle(),
 )
 def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +112,6 @@ LIMIT 200
 @query(
     "q_curriculum_order",
     tags=("sampling", "featureprep"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_curriculum_oracle(),
 )
 def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,7 +160,6 @@ ORDER BY doc_id
 @query(
     "q_truncate_budget",
     tags=("textanalysis", "featureprep"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_truncate_oracle(),
 )
 def q_truncate_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,7 +234,6 @@ FROM d GROUP BY label ORDER BY label
 @query(
     "q_embedding_drift",
     tags=("similarity", "profiling", "featureprep"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_embedding_drift_oracle(),
 )
 def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,7 +320,6 @@ ORDER BY d.doc_id
 @query(
     "q_zscore_by_source",
     tags=("textanalysis", "featureprep"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_zscore_oracle(),
 )
 def q_zscore_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,7 +381,6 @@ ORDER BY source
 @query(
     "q_dedup_weighted_stats",
     tags=("dedup", "profiling", "featureprep"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_dedup_weighted_oracle(),
 )
 def q_dedup_weighted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,7 @@ from ..operators.graph import (
 )
 from ..serving import serve
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 
 def _khop_edge(df, src_coll, src_key, dst_coll, dst_key, label):
@@ -291,9 +291,6 @@ def q_graph_vertices(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_attr_pivot",
     tags=("graph", "A7"),
-    # r4 rotation: 3 green driver rows (r1 err fixed in r2); the
-    # promoted q_collect_sorted_set carries A7 this round.
-    priority=TAIL,
     oracle=f"""
 WITH t AS ({_TUPLES_ORACLE_BODY}),
 attrs AS (
@@ -495,7 +492,6 @@ SELECT start, n_paths, n_terminals FROM (
 @query(
     "q_khop_paths_bucketed",
     tags=("graph", "J10", "scale"),
-    priority=TAIL,  # new in r6: pytest-gated; rotates into the budget next round
     oracle="""
 WITH e1 AS (SELECT DISTINCT 'C_' || o_custkey AS s, 'O_' || o_orderkey AS d FROM orders),
 e2 AS (SELECT DISTINCT 'O_' || l_orderkey AS s, 'P_' || l_partkey AS d FROM lineitem),
@@ -639,7 +635,6 @@ def q_hierarchy_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_path_revenue",
     tags=("graph", "J10", "A5"),
-    priority=TAIL,  # new in r5: pytest-gated; rotates into the budget next round
     oracle="""
 WITH e1 AS (
   SELECT 'C_' || o_custkey AS s, o_orderkey AS d,

@@ -19,7 +19,7 @@ from ..operators import similarity as sim
 from ..operators import textanalysis as ta
 from ..serving import serve
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 # ---------------------------------------------------------------------------
 # Exact dedup / fingerprinting.
@@ -97,7 +97,6 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_containment",
     tags=("dedup",),
-    priority=TAIL,  # r5-new; r6 rotation promotes (registry.py plan)
     oracle=f"""
 WITH {_SHINGLES_SQL},
 sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -366,7 +365,6 @@ ORDER BY delta_id
 @query(
     "q_dedup_incremental",
     tags=("dedup", "scale"),
-    priority=TAIL,  # new in r8 -- pytest-parity now, driver row in the r9 rotation
     oracle=_incremental_minhash_oracle(),
 )
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -475,7 +473,6 @@ def _incr_cycle_base_index(spark: SparkSession, sf_dir: str, base) -> DataFrame:
 @query(
     "q_incremental_cycle",
     tags=("dedup", "scale"),
-    priority=TAIL,  # added r10 -- promoted in the r10 rotation (first driver row)
     oracle=_incremental_cycle_oracle(),
 )
 def q_incremental_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,8 +748,7 @@ ORDER BY id
 """
 
 
-# r4 rotation: 3 green driver rows; slot goes to the new q_corpus_logfreq.
-@query("q_lang_id", tags=("text",), priority=TAIL, oracle=_langid_oracle())
+@query("q_lang_id", tags=("text",), oracle=_langid_oracle())
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-token language ID: argmax marker-hit count, alphabetical
     tie-break (CASE order fixed in builder and oracle)."""
@@ -763,9 +759,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_token_stats_by_source",
     tags=("text",),
-    # r4 rotation: 3 green driver rows; the text family keeps five
-    # in-budget gates, and this slot goes to the new q_pack_sequences.
-    priority=TAIL,
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, source, unnest(string_split_regex(trim(text), '\s+')) AS tok
@@ -851,7 +844,6 @@ ORDER BY stats.source
 @query(
     "q_token_stats_hll",
     tags=("sketch", "text", "report"),
-    priority=TAIL,  # added r11 -- first driver row via _R11_GATED
     oracle=_token_stats_hll_oracle(),
 )
 def q_token_stats_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -926,9 +918,6 @@ def q_corpus_logfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_adaptive_quality",
     tags=("quality", "window"),
-    # New in r4 (past the 50-entry budget; pytest-oracle-checked now,
-    # first driver row via the r5 rotation).
-    priority=TAIL,
     oracle=r"""
 WITH sig AS (
   SELECT doc_id, source,
@@ -1007,9 +996,6 @@ def q_adaptive_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_curation_funnel",
     tags=("pipeline", "dedup", "quality"),
-    # New in r4 (past the 50-entry budget; pytest-oracle-checked now,
-    # first driver row via the r5 rotation).
-    priority=TAIL,
     oracle=r"""
 WITH tq AS (
   SELECT doc_id, text,
@@ -1120,9 +1106,6 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_tfidf_keywords",
     tags=("text", "keywords"),
-    # New in r4 (past the 50-entry budget; pytest-oracle-checked now,
-    # first driver row via the r5 rotation).
-    priority=TAIL,
     oracle=r"""
 WITH toks AS (
   SELECT doc_id AS id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
@@ -1169,9 +1152,6 @@ ORDER BY o_orderkey
 @query(
     "q_zorder_key",
     tags=("layout", "scale"),
-    # New in r4 (past the 50-entry budget; pytest-oracle-checked now,
-    # first driver row via the r5 rotation).
-    priority=TAIL,
     oracle=_zorder_oracle(),
 )
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1192,9 +1172,6 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_embedding_normalize",
     tags=("similarity", "preprocess"),
-    # New in r4 (past the 50-entry budget; pytest-oracle-checked now,
-    # first driver row via the r5 rotation).
-    priority=TAIL,
     oracle="""
 WITH q AS (
   SELECT vec_id,
@@ -1239,9 +1216,6 @@ def q_embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_collocations",
     tags=("text", "association"),
-    # New in r4 (past the 50-entry budget this round; pytest-oracle-
-    # checked now, first driver row via the r5 rotation).
-    priority=TAIL,
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t
@@ -1407,7 +1381,6 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_decode_image",
     tags=("multimodal",),
-    priority=TAIL,  # added r11 -- first driver row via _R11_GATED
     oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id,
@@ -1464,7 +1437,6 @@ def q_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_decode_image_bmp",
     tags=("multimodal",),
-    priority=TAIL,  # added r11 post-rotation -- named first in the r12 promotion list
     oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id,
@@ -1514,7 +1486,6 @@ def q_decode_image_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_decode_audio",
     tags=("multimodal",),
-    priority=TAIL,  # added r11 -- first driver row via _R11_GATED
     oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, 64 + doc_id % 32 AS n FROM documents
@@ -1563,7 +1534,6 @@ def q_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_decode_video",
     tags=("multimodal",),
-    priority=TAIL,  # added r12 -- named first in the r13 promotion list
     oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, 2 + doc_id % 4 AS n_frames FROM documents
@@ -1926,7 +1896,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dup_spans",
     tags=("dedup", "text"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -1973,7 +1942,6 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_balanced_shards",
     tags=("packing", "sampling"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=r"""
 WITH sized AS (
   SELECT doc_id AS id, md5(CAST(doc_id AS VARCHAR)) AS h,
@@ -2012,7 +1980,6 @@ def q_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ngram_novelty",
     tags=("dedup", "text"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -2046,7 +2013,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_countmin_tokens",
     tags=("sketch", "text"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=r"""
 WITH toks AS (
   SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
@@ -2182,7 +2148,6 @@ ORDER BY source
 @query(
     "q_hll_distinct",
     tags=("sketch", "text"),
-    priority=TAIL,  # added r10 -- r11 rotation promotes it (registry plan)
     oracle=_hll_oracle(),
 )
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2282,7 +2247,6 @@ ORDER BY source
 @query(
     "q_hll_incremental",
     tags=("sketch", "scale"),
-    priority=TAIL,  # added r10 -- r11 rotation promotes it (registry plan)
     oracle=_hll_est_oracle(),
 )
 def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2395,7 +2359,6 @@ ORDER BY src_a, src_b
 @query(
     "q_hll_overlap",
     tags=("sketch", "text", "scale"),
-    priority=TAIL,  # added r10 -- r11 rotation promotes it (registry plan)
     oracle=_hll_overlap_oracle(),
 )
 def q_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2535,7 +2498,6 @@ ORDER BY source, rn
 @query(
     "q_kmv_sample",
     tags=("sketch", "sampling"),
-    priority=TAIL,  # added r12 -- named in the r13 promotion list
     oracle=_kmv_sample_oracle(),
 )
 def q_kmv_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2588,7 +2550,6 @@ ORDER BY source
 @query(
     "q_kmv_distinct",
     tags=("sketch", "text"),
-    priority=TAIL,  # added r12 -- named in the r13 promotion list
     oracle=_kmv_distinct_oracle(),
 )
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2642,7 +2603,6 @@ ORDER BY source
 @query(
     "q_kmv_incremental",
     tags=("sketch", "scale"),
-    priority=TAIL,  # added r12 -- named in the r13 promotion list
     oracle=_kmv_incr_oracle(),
 )
 def q_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2731,7 +2691,6 @@ ORDER BY e.src_a, e.src_b
 @query(
     "q_kmv_overlap",
     tags=("sketch", "text", "scale"),
-    priority=TAIL,  # added r12 -- named in the r13 promotion list
     oracle=_kmv_overlap_oracle(),
 )
 def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2820,7 +2779,6 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_bloom_decontaminate",
     tags=("sketch", "dedup"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -2977,7 +2935,6 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_jaccard_prefix",
     tags=("dedup",),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=f"""
 WITH {_SHINGLES_SQL},
 shh AS (
@@ -3039,7 +2996,6 @@ def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_contaminated_spans",
     tags=("dedup", "sketch"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -3108,9 +3064,7 @@ def q_contaminated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bigram LM scoring and cross-corpus near-dup decontamination (new in
-# r7 -- past the r7 gate set; pytest-oracle-checked now, driver rows
-# via the r8 rotation like every prior round's additions).
+# Bigram LM scoring and cross-corpus near-dup decontamination.
 # ---------------------------------------------------------------------------
 
 # Content-addressed 5% holdout split (the same split q_decontaminate /
@@ -3148,7 +3102,6 @@ def _holdout_split(
 @query(
     "q_lm_score",
     tags=("text", "quality", "lm"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=rf"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -3279,7 +3232,6 @@ ORDER BY id, bench_id
 @query(
     "q_cross_neardup",
     tags=("dedup", "decontamination"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=_cross_minhash_oracle(),
 )
 def q_cross_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3344,7 +3296,6 @@ def q_cross_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corpus_card",
     tags=("text", "report"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH sig AS (
   SELECT source,
@@ -3396,7 +3347,6 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_hard_negatives",
     tags=("similarity", "training"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH qv AS (
   SELECT vec_id, label,
@@ -3454,7 +3404,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_split_manifest",
     tags=("sampling", "report"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH sig AS (
   SELECT source,
@@ -3517,7 +3466,6 @@ def q_split_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_vocab_coverage",
     tags=("text", "tokenizer"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH toks AS (
   SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
@@ -3550,7 +3498,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_label_rebalance",
     tags=("sampling", "training"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH counts AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
 quota AS (SELECT min(n) AS m FROM counts),
@@ -3601,7 +3548,6 @@ def q_label_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_doc_stitch",
     tags=("dedup", "text"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS t FROM documents
@@ -3636,7 +3582,6 @@ def q_doc_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dedup_sweep",
     tags=("dedup", "eval"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle=f"""
 WITH {_SHINGLES_SQL},
 sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),

@@ -12,7 +12,7 @@ from pyspark.sql.window import Window
 
 from ..operators.intervals import interval_join
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 
 @query(
@@ -131,9 +131,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sample_hash",
     tags=("sampling",),
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3); q_sample_stratified and q_mixture_sample anchor the
-    # sampling family.
     oracle="""
 SELECT lang,
        count(*) AS n_sampled,

@@ -20,7 +20,7 @@ from ..functions.money import avg_money, cents, money, qty_long
 from ..functions.text import char_ngrams, hyphenate, stable_uuid, tokens
 from ..serving import serve
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 
 def _parquet_rows(sf_dir: str, table: str) -> int:
@@ -217,10 +217,6 @@ ORDER BY l_returnflag, l_linestatus
 @query(
     "q_min_size_filter",
     tags=("filter", "F1", "F8"),
-    # r4 rotation: 3 green driver rows (r1-r3); q_compound_predicate
-    # keeps the filter-family gate while the promoted tail queries earn
-    # their first driver artifact rows. Still oracle-checked by pytest.
-    priority=TAIL,
     oracle="""
 SELECT l_orderkey, l_linenumber, CAST(round(l_quantity) AS BIGINT) AS qty
 FROM lineitem
@@ -285,10 +281,6 @@ def q_compound_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_equi_join",
     tags=("join", "J1", "J2"),
-    # r4 rotation: 3 green driver rows; join family stays anchored by
-    # q_interval_join/q_asof_join/q_khop* this round. Slot goes to the
-    # new q_boilerplate.
-    priority=TAIL,
     oracle="""
 SELECT o.o_orderkey, c.c_name, o.o_totalprice
 FROM orders o
@@ -316,9 +308,6 @@ def q_equi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_anti_join",
     tags=("join", "F5", "J12"),
-    # r4 rotation: 3 green driver rows; join family stays anchored by
-    # q_equi_join/q_asof_join/q_khop_paths.
-    priority=TAIL,
     oracle="""
 SELECT c_custkey, c_name
 FROM customer c
@@ -344,8 +333,6 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_semi_join",
     tags=("join", "J12"),
-    # r4 rotation: 3 green driver rows.
-    priority=TAIL,
     oracle="""
 SELECT c_custkey, c_name
 FROM customer c
@@ -371,9 +358,6 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_lookup_first_of_many",
     tags=("join", "J3", "W1"),
-    # r4 rotation: 3 green driver rows; q_top1_per_group (promoted)
-    # exercises the same first-of-many window shape this round.
-    priority=TAIL,
     oracle="""
 SELECT o_orderkey, p_name AS first_part_name
 FROM (
@@ -715,7 +699,6 @@ def materialize_supplier_bucketed(
 @query(
     "q_supplier_volume_bucketed",
     tags=("join", "agg", "J10", "scale"),
-    priority=TAIL,  # added r10 -- r11 rotation promotes it (same posture as khop's twin)
     oracle=_SUPPLIER_ORACLE,
 )
 def q_supplier_volume_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,9 +846,6 @@ LIMIT 10
 @query(
     "q_top1_per_group",
     tags=("window", "W1"),
-    # r4 rotation: promoted into the driver budget so it earns a driver
-    # artifact row (pytest-only through r3); q_hierarchy_longest keeps
-    # the other W1 gate.
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice
 FROM (
@@ -985,9 +965,6 @@ def q_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_rolling_window",
     tags=("window", "events", "range-frame"),
-    # New in r4 (past the 50-entry budget this round; pytest-oracle-
-    # checked now, first driver row via the r5 rotation).
-    priority=TAIL,
     oracle="""
 WITH daily AS (
   SELECT user_id,
@@ -1035,9 +1012,6 @@ def q_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_json_props",
     tags=("scalar", "C9", "events"),
-    # r4 rotation: 3 green driver rows; events coverage stays via
-    # q_sessionize/q_hourly_rollup/q_asof_join.
-    priority=TAIL,
     oracle="""
 SELECT
   CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
@@ -1073,9 +1047,6 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_union_distinct",
     tags=("setop", "U1"),
-    # r4 rotation: 3 green driver rows; q_except (promoted) carries the
-    # setop family this round.
-    priority=TAIL,
     oracle="""
 SELECT c_name AS name FROM customer WHERE c_acctbal >= 9000
 UNION
@@ -1099,8 +1070,6 @@ def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_except_all",
     tags=("setop", "U2"),
-    # r4 rotation: 3 green driver rows; swaps with its twin q_except.
-    priority=TAIL,
     oracle="""
 SELECT o_orderpriority FROM orders WHERE year(o_orderdate) = 1997
 EXCEPT ALL
@@ -1120,7 +1089,6 @@ def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_except",
-    # r4 rotation: promoted (q_except_all rotates to TAIL this round).
     tags=("setop", "U2"),
     oracle="""
 SELECT DISTINCT n_name FROM nation n JOIN customer c ON c.c_nationkey = n.n_nationkey
@@ -1148,8 +1116,6 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_hyphenate",
     tags=("scalar", "C1", "C13"),
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3); q_stable_uuid carries the scalar family to TAIL.
     oracle="""
 SELECT p_partkey,
        regexp_replace(p_name, '[ _,/]+', '-', 'g') AS slug,
@@ -1175,9 +1141,6 @@ def q_hyphenate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stable_uuid",
     tags=("scalar", "C2"),
-    # r4 rotation: 3 green driver rows; q_hyphenate (promoted) carries
-    # the scalar-map family this round.
-    priority=TAIL,
     oracle="""
 SELECT c_custkey, substr(sha256('cust' || c_name), 1, 12) AS uuid
 FROM customer
@@ -1198,9 +1161,6 @@ def q_stable_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_distinct_tokens",
     tags=("agg", "A1", "explode"),
-    # r4 rotation: 3 green driver rows; agg family anchored by
-    # q_pricing_summary and the promoted q_collect_sorted_set.
-    priority=TAIL,
     oracle="""
 SELECT tok, count(*) AS n_parts
 FROM (SELECT unnest(string_split(p_type, ' ')) AS tok FROM part) t
@@ -1223,9 +1183,6 @@ def q_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ngram_index",
     tags=("text", "T6"),
-    # r4 rotation: 3 green driver rows; T6 stays anchored by
-    # q_search_prefix plus the promoted q_search_grams.
-    priority=TAIL,
     oracle="""
 SELECT gram, count(DISTINCT p_partkey) AS n_parts
 FROM (
@@ -1256,8 +1213,6 @@ def q_ngram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_acctbal_stats",
     tags=("agg", "A5"),
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3); q_pricing_summary (headline) anchors A5.
     oracle="""
 SELECT c_mktsegment,
        count(*) AS n_customers,
@@ -1293,8 +1248,6 @@ def q_acctbal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_collect_sorted_set",
     tags=("agg", "A7"),
-    # r4 rotation: promoted for a driver artifact row; q_attr_pivot
-    # (3 green driver rows) rotates to TAIL this round.
     oracle="""
 SELECT o_custkey,
        array_to_string(list_sort(list(DISTINCT o_orderpriority)), '|')
@@ -1337,7 +1290,6 @@ _DECAY_ANCHOR_DAY = 19753
 @query(
     "q_decayed_rollup",
     tags=("events", "window"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle=f"""
 WITH daily AS (
   SELECT user_id,
@@ -1396,7 +1348,6 @@ def q_decayed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_event_funnel",
     tags=("events", "window"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle="""
 WITH v AS (
   SELECT user_id, min(ts) AS t1 FROM events
@@ -1468,7 +1419,6 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cohort_retention",
     tags=("events", "window"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle="""
 WITH activity AS (
   SELECT DISTINCT user_id,
@@ -1531,7 +1481,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_fuzzy_name_pairs",
     tags=("lookup", "dedup"),
-    priority=TAIL,  # new in r5 -- pytest-parity now, driver row in the r6 rotation
     oracle="""
 WITH k AS (SELECT s_suppkey AS id, s_name AS key FROM supplier),
 v AS (
@@ -1582,7 +1531,6 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark fixpoint is linear-per-round and its 30x rows stand as the
     # scale evidence (BENCH_NOTES).
     tags=("lookup", "dedup", "graph", "closure_oracle"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH RECURSIVE k AS (SELECT s_suppkey AS id, s_name AS key FROM supplier),
 v AS (
@@ -1656,7 +1604,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_table_stats",
     tags=("agg", "profile"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH s AS (
   SELECT 'l_linenumber' AS col_name,
@@ -1707,7 +1654,6 @@ def q_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_key_skew",
     tags=("agg", "profile"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH pairs AS (
   SELECT 'l_orderkey' AS col_name, l_orderkey AS k FROM lineitem
@@ -1756,7 +1702,6 @@ def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_skew_chooser_join",
     tags=("join", "scale", "profile"),
-    priority=TAIL,  # added r12 -- named in the r13 promotion list
     oracle=f"""
 WITH fact AS (
   SELECT CASE WHEN l_orderkey % 2 = 0 THEN 1 ELSE l_suppkey END AS sk,
@@ -1821,7 +1766,6 @@ def q_skew_chooser_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_fk_integrity",
     tags=("join", "profile"),
-    priority=TAIL,  # new in r7 -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 SELECT * FROM (
   SELECT 'customer.c_nationkey->nation' AS fk_name,
@@ -1892,7 +1836,6 @@ def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_product_profit",
     tags=("relational", "J1", "A5"),
-    priority=TAIL,  # new in r8 -- pytest-parity now, driver row in the r9 rotation
     oracle="""
 WITH amounts AS (
   SELECT s.s_nationkey,

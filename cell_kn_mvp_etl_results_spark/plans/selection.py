@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from ..operators import dedup as dd
 from ..serving import at_least, serve
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 _DSIR_BUCKETS = 1024
 
@@ -20,7 +20,6 @@ _DSIR_BUCKETS = 1024
 @query(
     "q_weighted_sample",
     tags=("sampling", "selection"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 SELECT doc_id AS id,
        greatest(n_chars, 1) AS weight,
@@ -51,7 +50,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dsir_select",
     tags=("sampling", "selection", "textanalysis"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=rf"""
 WITH toks AS (
   SELECT doc_id, source = 'src0' AS is_target,
@@ -148,7 +146,6 @@ ORDER BY src_a, src_b
 @query(
     "q_source_overlap",
     tags=("dedup", "profiling"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_source_overlap_oracle(),
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,7 +242,6 @@ GROUP BY m, nv.n_vertices
 @query(
     "q_modularity",
     tags=("graph", "dedup"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_modularity_oracle(iters=2),
 )
 def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,7 +376,6 @@ SELECT rank, id, rel, mmr FROM ({allp}) ORDER BY rank
 @query(
     "q_mmr_rerank",
     tags=("similarity", "selection"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_mmr_oracle(n_candidates=16, k=8),
 )
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,7 +398,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ingest_quota",
     tags=("streaming", "sampling"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle="""
 WITH ev AS (
   SELECT event_id, user_id,
@@ -516,7 +510,6 @@ ORDER BY q_id, rank
 @query(
     "q_jl_topk",
     tags=("similarity",),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_jl_oracle(),
 )
 def q_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,7 +566,6 @@ ORDER BY bin
 @query(
     "q_degree_hist",
     tags=("graph", "profiling"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_degree_hist_oracle(),
 )
 def q_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,7 +642,6 @@ ORDER BY id_a, id_b
 @query(
     "q_mutual_knn",
     tags=("similarity", "dedup"),
-    priority=TAIL,  # new in r7 continuation -- pytest-parity now, driver row in the r8 rotation
     oracle=_mutual_knn_oracle(),
 )
 def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import k_hop
 from ..sources.readers import read_table
-from .registry import TAIL, query
+from .registry import query
 
 
 def _edges_1hop(o):
@@ -26,8 +26,6 @@ def _edges_1hop(o):
 
 @query(
     "q_khop1",
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3); see q_khop_any_unique for the family note.
     tags=("graph", "J10"),
     oracle="""
 SELECT 'C_' || o_custkey AS start, count(*) AS n_paths
@@ -54,8 +52,6 @@ def q_khop1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_khop5",
-    # r4 rotation: promoted for a driver artifact row (pytest-only
-    # through r3).
     tags=("graph", "J10"),
     oracle="""
 WITH e1 AS (SELECT DISTINCT n_regionkey AS src, n_nationkey AS dst FROM nation),
@@ -125,9 +121,6 @@ def q_khop5(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_khop_any_unique",
     tags=("graph", "J10"),
-    # r4 rotation: the whole khop variant family is promoted this round
-    # so each earns a driver artifact row at least once; q_khop_paths
-    # (headline, 3 green rows) stays in-budget as the family anchor.
     oracle="""
 WITH e AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
 anchors AS (SELECT DISTINCT p_partkey FROM part WHERE p_size >= 48)

@@ -12,6 +12,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# Parent directory of this package. Python workers import the package
+# by name (mapInPandas / UDF functions pickle as module references), and
+# the driver may run from any directory without the package installed.
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -42,6 +46,8 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Spark adds this to the Python workers' PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         .config("spark.sql.parquet.filterPushdown", "true")
         # The synthetic events table stores TIMESTAMP(NANOS) parquet,
         # which Spark cannot read natively; read as long and convert in

@@ -82,6 +82,32 @@ def test_touched_edges_undirected_orientation(spark):
     assert [(r.src_coll, r.dst_coll) for r in te] == [("BGS", "BMC")]
 
 
+def test_touched_edges_one_node_hierarchy_path(spark):
+    # A terminal with no outbound hierarchy edge has a one-node walk: it
+    # adds no edge (and must not index position 0); longer walks add
+    # their consecutive pairs as before.
+    paths = spark.createDataFrame(
+        [
+            (["CS_a", "CL_1"], "CL_1"),
+            (["CS_b", "CL_2"], "CL_2/CL_3/CL_4"),
+            (["CS_c", "CL_5"], None),
+        ],
+        "path array<string>, hierarchy_path string",
+    )
+    got = sorted(tuple(r) for r in touched_edges(paths).collect())
+    assert got == [
+        ("CL", "2", "CL", "3"),
+        ("CL", "3", "CL", "4"),
+        ("CS", "a", "CL", "1"),
+        ("CS", "b", "CL", "2"),
+        ("CS", "c", "CL", "5"),
+    ]
+    only_leaf = paths.limit(1)
+    assert [tuple(r) for r in touched_edges(only_leaf).collect()] == [
+        ("CS", "a", "CL", "1")
+    ]
+
+
 def test_triple_components_report(spark, tmp_path):
     rows = [
         ("CS_c1", "HAS", "BMC_m1", None),

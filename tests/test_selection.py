@@ -131,6 +131,25 @@ def test_modularity_single_community_is_zero(spark):
     assert row.q_ppm == 0 and row.n_communities == 1
 
 
+def test_modularity_assume_canonical_checks_contract(spark, monkeypatch):
+    # SPARK_GRAFT_CHECK_CANONICAL=1 turns the caller's canonical-form
+    # promise (a < b, no duplicates) into a checked one.
+    monkeypatch.setenv("SPARK_GRAFT_CHECK_CANONICAL", "1")
+    canon = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4)]
+    labels = spark.createDataFrame(
+        [(0, 0), (1, 0), (2, 0), (3, 3), (4, 3)], "id long, label long"
+    )
+
+    def edges(rows):
+        return spark.createDataFrame(rows, "id_a long, id_b long")
+
+    for bad in (canon + [(2, 3)], canon + [(4, 3)], canon + [(1, 1)]):
+        with pytest.raises(ValueError, match="not canonical"):
+            modularity(edges(bad), labels, assume_canonical=True)
+    fast = modularity(edges(canon), labels, assume_canonical=True).collect()
+    assert fast == modularity(edges(canon), labels).collect()
+
+
 def test_mmr_skips_near_duplicate_candidates(spark):
     # Query along e1. Candidates: an exact duplicate pair (ids 1, 2)
     # and a relevant-but-different vector (id 3). Plain top-2 would
