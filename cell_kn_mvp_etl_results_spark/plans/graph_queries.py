@@ -353,30 +353,31 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``AqlQuerySetBuilder.java:136-147``). Each hop is an equi-join on
     the edges relation; collection filters prune before each join.
     """
-    # Cache layout = join layout, one relation PER HOP: each hop's edge
-    # side is persisted pre-filtered to its destination collection and
-    # partitioned on the (src_coll, src_key) pair the hop joins on --
-    # the in-memory analog of the per-collection-pair partitioned lake
-    # layout (SCALE.md graph section; ``materialize_khop_bucketed`` is
-    # the same layout written to disk once). A unioned cache forces
-    # every hop to scan and filter the WHOLE edge set (115MB x 2 hops at
-    # the 10x corpus); per-hop relations scan only their own (measured
-    # 23%, BENCH_NOTES.md r5), and each already satisfies the join's
-    # required distribution so only the frontier shuffles per hop.
-    # The hop/terminal frames and their views are steady-state serving
-    # state (serving.py): re-deriving them per call costs ~0.35 s of
+    # One cached relation PER HOP, pre-filtered to its collection pair:
+    # a unioned cache forces every hop to scan and filter the WHOLE edge
+    # set (115MB x 2 hops at the 10x corpus); per-hop relations scan
+    # only their own (measured 23%, BENCH_NOTES.md r5).
+    # ``materialize_khop_bucketed`` is the on-disk steady-state layout.
+    # The hop/terminal frames and their views are serving state
+    # (serving.py): re-deriving them per call costs ~0.35 s of
     # driver-side analysis + CacheManager plan normalization (measured
     # at sf0.1) even when every byte is already cached. A regenerated
     # orders/lineitem file misses, and the store unpersists the
     # displaced hop/terminal frames and drops their temp views before
     # the fresh build (VERDICT r9 #3).
     def build() -> dict:
-        # Persisted SORTED on the join key: InMemoryTableScan propagates
-        # the cached plan's outputPartitioning AND outputOrdering, so
-        # every traversal's sort-merge join skips re-sorting the (large)
-        # edge side -- only the frontier sorts per run. The sort is paid
-        # once at build (cache layout = join layout, extended to
-        # ordering; measured 7.47 -> 6.67 s steady at the 30x corpus).
+        # persist() is lazy: the build runs no Spark job. The first
+        # query fills the hop and terminal caches inside its own
+        # execution, and later calls read them through the same temp
+        # views. With AQE allowed to repartition cached plans
+        # (session.get_spark), neither the fill nor the stages reading
+        # the cache run one task per shuffle partition.
+        # Each cache is hash-partitioned on (collection literal, key)
+        # and sorted on the key. The hop join still exchanges on the
+        # (src_coll, src_key) columns, but the hash is the same, so each
+        # reducer receives one cached partition already in join order
+        # and its sort is cheap: warm calls take 1.4 s vs 1.75 s without
+        # the layout (sf0.1, AQE off, 4 cores).
         rels = khop_edge_relations(spark, sf_dir)
         hops = {
             coll: rels[coll]
@@ -388,22 +389,15 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The LAST hop never materializes: the counting plan aggregates
         # paths under the final join (counting semiring + exact terminal
         # bitmaps, see operators/graph.k_hop_counts). The per-part
-        # terminal summary is pure edge data, so it persists beside the
-        # hop relations, partitioned on the key the counting join probes
-        # -- at the 10x corpus this plan replaced a 37M-row path
-        # materialization + 20.8M-pair distinct shuffle (BENCH_NOTES r5).
+        # terminal summary is pure edge data, so it is cached beside the
+        # hop relations -- at the 10x corpus this plan replaced a
+        # 37M-row path materialization + 20.8M-pair distinct shuffle
+        # (BENCH_NOTES r5).
         term = (
             terminal_stats(rels["S"], "S")
             .repartition(F.col("node_coll"), F.col("node_key"))
             .sortWithinPartitions("node_coll", "node_key")
         ).persist()
-        # Materialize the deduped relations once: the dedup shuffles run
-        # as a single parallel job, and the hop joins then read cached
-        # partitions with exact size stats (measured ~25% faster than
-        # recomputing per hop at sf0.1; scripts/khop_experiment.py).
-        for h in hops.values():
-            h.count()
-        term.count()
         # SQL-text serving posture (r9, VERDICT r8 #2): register the
         # persisted frames as temp views ONCE per fingerprint; every
         # call then constructs its plan with a single spark.sql parse
@@ -412,10 +406,11 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         # relational.py `_view` posture extended to the traversal
         # headliner). The temp views wrap the EXACT persisted
         # DataFrames, so the CacheManager plan-matches them and the
-        # physical plan -- InMemoryTableScan-fed SMJs, semiring
-        # aggregation, bitmap_or -- is unchanged (pinned by
-        # tests/test_plan_quality.test_khop_counts_never_materializes_
-        # last_hop and test_khop_sql_text_plan_shape).
+        # physical plan -- InMemoryTableScan-fed joins, semiring
+        # aggregation, bitmap_or -- matches the DataFrame operator's
+        # (pinned by tests/test_plan_quality.test_khop_counts_never_
+        # materializes_last_hop and tests/test_plan_gates.test_sql_text_
+        # khop_matches_dataframe_operator).
         import hashlib
 
         from ..sources.readers import _fingerprint
@@ -456,7 +451,7 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same logical plan as k_hop_counts(hops, start, ["O","P","S"],
     # terminal=term, compress_frontier=False) + the C_ projection:
     # start carries a literal coll so each hop join is on the
-    # (src_coll, src_key) pair the persisted layout is partitioned on.
+    # (src_coll, src_key) pair.
     # The final REPARTITION(1) + SORT BY gives the |start|-bounded
     # result a total order without global-sort RANGE SAMPLING, which
     # re-submits a sampling job per run (~0.17 s of every sf0.1

@@ -106,7 +106,7 @@ assert len(set(GATED)) == GATE_BUDGET
 # ---------------------------------------------------------------------------
 # Prepared-plan cache (steady-state serving posture).
 #
-# Measured at sf0.1 (scripts/khop_variants.py): q_khop_paths' steady run
+# Measured at sf0.1 (BENCH_NOTES.md r7): q_khop_paths' steady run
 # costs 0.64 s rebuilt per call vs 0.033 s re-collecting the SAME
 # DataFrame -- ~95% of the repeated-query wall is driver-side
 # re-analysis + CacheManager plan normalization, not execution. A

@@ -29,7 +29,8 @@ def get_spark(
     Scale posture: AQE on (runtime coalescing + skew-join splitting),
     explicit shuffle partitioning, Arrow for any pandas interchange,
     UTC session time so timestamp semantics are deterministic across
-    engines and machines.
+    engines and machines. AQE may also change a cached plan's output
+    partitioning, so it coalesces shuffles inside persisted frames too.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -41,6 +42,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Off by default in Spark: every cached frame, and every stage
+        # reading one, would keep one task per shuffle partition.
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

@@ -122,13 +122,20 @@ def extract_subgraph(
     left join + coalesce per SURVEY.md K5).
 
     ``path_endpoints`` carries (src_coll, src_key, dst_coll, dst_key)
-    rows for every traversed edge (the union of the battery's hops).
+    rows for every traversed edge (the union of the battery's hops), in
+    traversal order. An ANY-direction hop walks a stored edge in either
+    direction, so a stored edge is touched when it matches a pair in
+    either orientation.
     The reference dedupes client-side with an O(n^2) List.contains scan
     (``PhenotypeGraphBuilder.java:125-127``) -- here it is dropDuplicates.
     """
+    key = ["src_coll", "src_key", "dst_coll", "dst_key"]
+    reversed_pairs = path_endpoints.select(
+        *(F.col(a).alias(b) for a, b in zip(key, key[2:] + key[:2]))
+    )
     touched_edges = edges.join(
-        path_endpoints.dropDuplicates(),
-        ["src_coll", "src_key", "dst_coll", "dst_key"],
+        path_endpoints.select(key).unionByName(reversed_pairs).dropDuplicates(),
+        key,
         "left_semi",
     )
     touched_vertices = (

@@ -82,6 +82,27 @@ def test_touched_edges_undirected_orientation(spark):
     assert [(r.src_coll, r.dst_coll) for r in te] == [("BGS", "BMC")]
 
 
+def test_subgraph_keeps_edge_crossed_backwards(spark):
+    # CS-BMC-GS reaches GS_TP53 over the stored GS_TP53 -PART_OF-> BMC_m1
+    # edge walked in reverse: the touched pair is (BMC_m1, GS_TP53), and
+    # the stored edge must still be harvested.
+    g = graph(spark)
+    specs = [PathSpec("CS-BMC-GS", anchor="CS", hops=["BMC", "GS"])]
+    out = run_battery(g["vertices"], g["edges"], specs)
+    sub = extract_subgraph(g["edges"], out["_touched_edges"], g["vertex_attrs"])
+    edges = {
+        (r.src_coll, r.src_key, r.dst_coll, r.dst_key, r.label)
+        for r in sub["edges"].collect()
+    }
+    assert ("GS", "TP53", "BMC", "m1", "PART_OF") in edges
+    assert ("CS", "c1", "BMC", "m1", "HAS_MARKER_SET") in edges
+    # untouched edges stay out, in either direction
+    assert not any(e[4] in ("INVOLVED_IN", "subClassOf") for e in edges)
+    assert ("BMC", "m1", "BGS", "g1", "PART_OF") not in edges
+    verts = {(r.coll, r.key) for r in sub["vertices"].collect()}
+    assert verts == {("CS", "c1"), ("BMC", "m1"), ("GS", "TP53")}
+
+
 def test_touched_edges_one_node_hierarchy_path(spark):
     # A terminal with no outbound hierarchy edge has a one-node walk: it
     # adds no edge (and must not index position 0); longer walks add

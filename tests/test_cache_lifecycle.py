@@ -54,6 +54,40 @@ def _entries(d: str, name: str) -> list:
     return [e for e in serving.entries() if e.sf_dir == d and e.name == name]
 
 
+def _cached_rdds(spark, since: int) -> dict[int, int]:
+    """{RDD id: cached bytes} for every RDD newer than RDD id ``since``
+    that holds blocks, per the block manager. The id watermark keeps
+    RDDs that earlier tests left for the ContextCleaner out: their
+    asynchronous cleanup would otherwise move the count mid-test."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {
+        i.id(): i.memSize() + i.diskSize() for i in infos if i.id() > since
+    }
+
+
+def _cache_rdd_id(spark, df) -> int:
+    """Id of the RDD that holds ``df``'s cached blocks. Call it once the
+    cache is filled: on an unfilled cache it would create the RDD."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    builder = cm.lookupCachedData(df._jdf).get().cachedRepresentation().cacheBuilder()
+    return builder.cachedColumnBuffers().id()
+
+
+def _jobs_in(spark, fn):
+    """(fn(), ids of the Spark jobs submitted while it ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-in-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_fingerprint_directory_uses_listing(tmp_path):
     # ADVICE r9: an in-place rewrite of a part file inside a
     # directory-backed parquet table does not change the directory's
@@ -220,24 +254,58 @@ def test_upsert_delta_bands_evicted_on_regeneration(spark, tmp_path):
     assert e2.value is not e1.value
 
 
+def _khop_lake(tmp_path) -> str:
+    for t in ("customer", "orders", "lineitem", "supplier", "nation"):
+        _copy_table(tmp_path, t)
+    return str(tmp_path)
+
+
+def _khop_frames(entry) -> list:
+    return [*entry.value["hops"].values(), entry.value["term"]]
+
+
 def test_khop_hop_frames_evicted_on_regeneration(spark, tmp_path):
     from cell_kn_mvp_etl_results_spark.plans.graph_queries import q_khop_paths
 
-    d = str(tmp_path)
-    for t in ("customer", "orders", "lineitem", "supplier", "nation"):
-        _copy_table(tmp_path, t)
+    d = _khop_lake(tmp_path)
+    since = spark.sparkContext.parallelize([0]).id()
     q_khop_paths(spark, d).count()
     (e1,) = _entries(d, "khop.hops")
-    hops1, term1, views1 = e1.value["hops"], e1.value["term"], e1.value["views"]
-    assert term1.is_cached
+    ids1 = [_cache_rdd_id(spark, f) for f in _khop_frames(e1)]
+    assert set(ids1) <= set(_cached_rdds(spark, since))
+    views1 = e1.value["views"]
     _regenerate(os.path.join(d, "lineitem.parquet"))
     q_khop_paths(spark, d).count()
     (e2,) = _entries(d, "khop.hops")  # replaced, not accumulated
     assert e2.fingerprints != e1.fingerprints
-    assert not term1.is_cached
-    assert all(not h.is_cached for h in hops1.values())
+    # the displaced frames' blocks are gone from the block manager
+    assert not set(ids1) & set(_cached_rdds(spark, since))
     for vn in views1.values():
         assert not spark.catalog.tableExists(vn)
+
+
+def test_khop_cache_fills_on_first_use(spark, tmp_path):
+    """q_khop_paths' builder only declares its hop and terminal caches:
+    the first query fills them inside its own execution, and a second
+    call reuses them, submitting no Spark job before its collect."""
+    from cell_kn_mvp_etl_results_spark.plans.graph_queries import q_khop_paths
+
+    d = _khop_lake(tmp_path)
+    since = spark.sparkContext.parallelize([0]).id()
+    df = q_khop_paths(spark, d)
+    assert _cached_rdds(spark, since) == {}  # nothing filled yet
+    rows, jobs = _jobs_in(spark, lambda: sorted(map(tuple, df.collect())))
+    assert rows and jobs
+    (entry,) = _entries(d, "khop.hops")
+    filled = _cached_rdds(spark, since)
+    for frame in _khop_frames(entry):
+        assert filled.get(_cache_rdd_id(spark, frame), 0) > 0
+    state = _spark_state(spark, since)
+    df2, builder_jobs = _jobs_in(spark, lambda: q_khop_paths(spark, d))
+    assert builder_jobs == []
+    assert sorted(map(tuple, df2.collect())) == rows
+    assert _spark_state(spark, since) == state  # no cached RDD added
+    assert _entries(d, "khop.hops") == [entry]
 
 
 def test_incr_cycle_index_unpersisted_on_regeneration(spark, tmp_path):
@@ -271,13 +339,9 @@ def test_incr_cycle_index_unpersisted_on_regeneration(spark, tmp_path):
 
 def _spark_state(spark, since: int) -> tuple[int, int]:
     """(cached RDDs newer than RDD id ``since`` per the block manager,
-    temp views in the catalog). The id watermark keeps RDDs that
-    earlier tests left for the ContextCleaner out of the count: their
-    asynchronous cleanup would otherwise move it mid-test."""
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    rdds = sum(1 for i in infos if i.id() > since)
+    temp views in the catalog)."""
     views = sum(1 for t in spark.catalog.listTables() if t.isTemporary)
-    return rdds, views
+    return len(_cached_rdds(spark, since)), views
 
 
 def test_off_level_holds_constant_state_across_calls(spark, tmp_path, monkeypatch):

@@ -1,6 +1,7 @@
 """get_spark contract: a session built from any working directory runs
 the Arrow/pandas UDF queries, whose Python workers import this package
-by name."""
+by name, and AQE may repartition cached plans unless extra_conf says
+otherwise."""
 
 from __future__ import annotations
 
@@ -8,8 +9,12 @@ import json
 import os
 import subprocess
 import sys
+from unittest import mock
+
+from pyspark.sql import SparkSession
 
 from cell_kn_mvp_etl_results_spark.plans import REGISTRY
+from cell_kn_mvp_etl_results_spark.session import get_spark
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,3 +53,17 @@ spark.stop()
     got = json.loads(proc.stdout.strip().splitlines()[-1])
     want = _rows(REGISTRY["q_decode_image"].builder(spark, sf_dir))
     assert want and got == want
+
+
+def test_aqe_may_repartition_cached_plans(spark):
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert spark.conf.get(key) == "true"
+    # extra_conf still overrides it. getOrCreate is stubbed to hand back
+    # the builder, so its options are read without starting a session.
+    with mock.patch.object(
+        SparkSession.Builder, "getOrCreate", autospec=True, side_effect=lambda b: b
+    ):
+        default = get_spark()._options
+        overridden = get_spark(extra_conf={key: "false"})._options
+    assert default[key] == "true"
+    assert overridden[key] == "false"
