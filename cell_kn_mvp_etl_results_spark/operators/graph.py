@@ -30,20 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-# Checkpoint cadence of hierarchy_longest_path's frontier loop.
-# MEASURED (r7, scripts/hierarchy_ckpt_ab.py, 30x corpus, interleaved
-# medians): cadence 1 = 5.9 s, cadence 4 = 11.5 s -- the r6 verdict's
-# every-4-rounds suggestion is 2x SLOWER here and is rejected. Why:
-# every round already runs a blocking isEmpty probe, so deferring the
-# checkpoint saves no barrier; it only makes that probe, the next
-# rounds' joins, and the final union re-execute the uncheckpointed
-# join chain (the frontier is large while the depth is small, so
-# recompute dwarfs materialization). Per-round checkpointing keeps
-# each round's work exactly one join. The cadence stays a knob for
-# genuinely deep-and-narrow hierarchies, where the trade could flip.
-HIERARCHY_CKPT_EVERY = 1
-
-
 def split_term(term_col) -> tuple:
     """Split a term like ``CL_0000235`` into (coll, key) at the first
     ``_`` (reference key scheme: ``OntologyParserLoader.py:41-43``,
@@ -552,14 +538,13 @@ def hierarchy_longest_path(
 
     Implementation: driver-side frontier-expansion loop (the one operator
     that genuinely needs iteration, SURVEY.md section 4). Each iteration
-    is a single equi-join; frontiers are localCheckpointed every
-    ``_CKPT_EVERY`` rounds to cut lineage growth -- a per-round eager
-    checkpoint is a blocking materialization per depth (up to 64 of
-    them at adversarial depth, r6 verdict #8), while a bounded cadence
-    caps both the lineage (<= _CKPT_EVERY joins deep, each over the
-    persisted src-partitioned edge cache) and the number of barriers.
-    The early-exit isEmpty probe stays per-round (it is a take(1), not
-    a materialization). Ties on depth break by
+    is a single equi-join, and each round's frontier is
+    localCheckpointed eagerly, so no round re-executes an earlier join.
+    Checkpointing every 4th round instead was measured 2x slower at the
+    30x corpus (5.9 s vs 11.5 s, BENCH_NOTES r7): each round already
+    runs a blocking isEmpty probe, so a deferred checkpoint saves no
+    barrier and makes the probe, the next rounds' joins and the final
+    union recompute the uncheckpointed join chain. Ties on depth break by
     lexicographically smallest path string, so results are deterministic.
     Cycle safety: a path never revisits its own vertices (checked with
     array_contains), matching AQL's default path uniqueness.
@@ -586,7 +571,6 @@ def hierarchy_longest_path(
     )
     all_paths = frontier
     depth = 0
-    since_ckpt = 0
     while depth < max_depth:
         nxt = (
             frontier.join(e, frontier.node == e.src)
@@ -598,11 +582,7 @@ def hierarchy_longest_path(
                 F.concat_ws("/", "path", "dst").alias("path"),
                 F.concat(F.col("visited"), F.array(F.col("dst"))).alias("visited"),
             )
-        )
-        since_ckpt += 1
-        if since_ckpt >= HIERARCHY_CKPT_EVERY:
-            nxt = nxt.localCheckpoint(eager=True)
-            since_ckpt = 0
+        ).localCheckpoint(eager=True)
         if nxt.isEmpty():
             break
         all_paths = all_paths.union(nxt)

@@ -381,47 +381,6 @@ def _split_summary(
     )
 
 
-def materialize_dedup_components(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str = "dedup_components",
-    num_buckets: int = 32,
-) -> str:
-    """One-time steady-state build: compute the exact near-dup
-    connected components (jaccard_pairs -> connected_components, the
-    q_dedup_clusters machinery) and persist them BUCKETED + sorted on
-    doc_id -- the ``materialize_khop_bucketed`` doctrine applied to the
-    dedup layer. The iterative CC fixpoint over the pair graph (at 30x:
-    ~63M edges, the whole 176 s wall of q_split_leakage_safe) is paid
-    HERE, once, at dedup/compaction time; every downstream consumer
-    (leakage-safe splitting, dedup-weighted stats, exemplar serving)
-    reads co-located components and pays one map-side hash.
-    """
-    from .materialized import build_components
-
-    comp = build_components(spark, sf_dir)
-    # drop BOTH the catalog entry and any orphaned managed location
-    # (in-memory catalog: the entry dies with the session, the
-    # warehouse directory survives and saveAsTable refuses it)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{wh}/{table}")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
-    from ..operators.scale import write_bucketed
-
-    write_bucketed(
-        comp.repartition(num_buckets, "doc_id"),
-        table,
-        "doc_id",
-        num_buckets=num_buckets,
-        sort_col="doc_id",
-    )
-    return table
-
-
 @query(
     "q_split_leakage_bucketed",
     # same output and (closure) oracle as q_split_leakage_safe
@@ -431,9 +390,9 @@ def materialize_dedup_components(
 def q_split_leakage_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``q_split_leakage_safe`` in its STEADY-STATE DEPLOYMENT posture:
     the near-dup components live on disk as a bucketed table
-    (``materialize_dedup_components``), so the iterative CC fixpoint --
-    at 30x, ~all of the 176 s in-query wall -- is dedup-time work, not
-    split-time work. Row-identical to q_split_leakage_safe (same
+    (``materialized.dedup_components_frame``), so the iterative CC
+    fixpoint -- at 30x, ~all of the 176 s in-query wall -- is dedup-time
+    work, not split-time work. Row-identical to q_split_leakage_safe (same
     oracle; also pinned by tests/test_featureprep.py); the query
     itself is one component scan + map-side split hash + token join +
     3-row aggregate. Measured at 30x: 206 s one-time build, then

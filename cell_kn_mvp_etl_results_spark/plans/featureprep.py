@@ -396,7 +396,7 @@ def q_dedup_weighted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same hash key (no second shuffle of the corpus side under
     AQE's exchange reuse), then a |sources|-row aggregate. At scale
     this reads the already-materialized dedup layer instead
-    (materialize_dedup_components doctrine).
+    (``materialized.dedup_components_frame``).
     """
     from ..functions.text import tokens as _tokens
 

@@ -24,7 +24,7 @@ from ..operators.graph import (
     path_fold,
     terminal_stats,
 )
-from ..serving import serve
+from ..serving import _auto_name, serve
 from ..sources.readers import read_table
 from .registry import query
 
@@ -55,8 +55,8 @@ def khop_edge_relations(
 ) -> dict[str, DataFrame]:
     """The three typed hop relations of the C->O->P->S battery, keyed by
     destination collection -- shared by the in-memory cached plan
-    (q_khop_paths) and the bucketed on-disk steady-state build
-    (materialize_khop_bucketed)."""
+    (q_khop_paths) and the bucketed on-disk steady-state layout
+    (khop_bucketed_tables)."""
     o = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem")
     return {
@@ -73,101 +73,73 @@ def _khop_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One shared bucket count for the khop lake layout: the BUILD
-# (materialize_khop_bucketed) and the cross-session RECOVERY
-# (register_surviving_bucketed call in q_khop_paths_bucketed) must
-# declare the same spec, and the table-name fingerprint folds it in so
-# a changed count lands on different tables instead of a surviving
-# directory with a drifted spec (ADVICE r10).
-KHOP_NUM_BUCKETS = 32
+_KHOP_FILES = ("orders", "lineitem")
 
 
-def materialize_khop_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    num_buckets: int = KHOP_NUM_BUCKETS,
-    prefix: str = "khop",
-) -> dict[str, str]:
-    """One-time steady-state build: write each hop relation and the
-    per-part terminal summary as BUCKETED + per-bucket-sorted tables on
-    the traversal's join key (``operators/scale.write_bucketed``
-    doctrine, applied to the khop battery). The dedup shuffles and the
-    layout sort are paid HERE, once, at ingest/compaction time -- every
-    subsequent traversal reads co-located buckets and shuffles only the
-    frontier (plan-asserted in tests/test_scale_ops.py). The
-    repartition before the write hash-matches Spark's bucket function,
-    so each bucket lands in exactly ONE file and the scan reports both
-    partitioning and ordering.
+def khop_bucketed_tables(
+    spark: SparkSession, sf_dir: str, num_buckets: int = 32
+) -> dict[str, DataFrame]:
+    """The steady-state khop layout: the two hop relations bucketed on
+    ``src_key`` and the per-part terminal summary bucketed on
+    ``node_key``, each built, reused or recovered from a surviving
+    warehouse directory by ``materialized.ensure_table`` (always
+    materialized, even under ``SPARK_GRAFT_SERVING=off``). The dedup
+    shuffles and the layout sort are paid once per fingerprint; every
+    later traversal reads co-located buckets and shuffles only the
+    frontier (plan-asserted in tests/test_scale_ops.py). This is the
+    deployment posture SCALE.md's graph section argues for;
+    q_khop_paths' persisted cache is the same layout held in memory
+    for a single application.
 
-    Returns {collection-or-"term": table name}. This is the deployment
-    posture SCALE.md's graph section argues for; q_khop_paths' persisted
-    cache is the same layout held in memory for a single application.
+    Only the KEY columns are stored: each table is one collection
+    pair, so the coll/label constants are re-attached as literals at
+    read time (khop_paths_bucketed). Storing them would do more than
+    waste bytes -- a constant read from parquet is a real column, so
+    the hop join would carry (node_coll, node_key) keys and the planner
+    would refuse the single-key bucket layout (it disables the bucketed
+    scan and re-shuffles the edge side); literals constant-fold out of
+    the join condition, which is exactly what keeps the bucketed scan
+    exchange-free.
     """
-    def drop(table: str) -> None:
-        # Drop BOTH the catalog entry and any orphaned managed location:
-        # with the default in-memory catalog the entry dies with the
-        # session but the warehouse directory survives, and saveAsTable
-        # refuses to reuse it.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{wh}/{table}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
+    from .materialized import ensure_table
 
-    rels = khop_edge_relations(spark, sf_dir)
-    names: dict[str, str] = {}
-    # Only the KEY columns are stored: each table is one collection
-    # pair, so the coll/label constants are re-attached as literals at
-    # read time (khop_paths_bucketed). Storing them would do more than
-    # waste bytes -- a constant read from parquet is a real column, so
-    # the hop join would carry (node_coll, node_key) keys and the
-    # planner would refuse the single-key bucket layout (it disables
-    # the bucketed scan and re-shuffles the edge side); literals
-    # constant-fold out of the join condition, which is exactly what
-    # keeps the bucketed scan exchange-free.
-    from ..operators.scale import write_bucketed
+    def rels() -> dict[str, DataFrame]:
+        return khop_edge_relations(spark, sf_dir)
 
-    for coll in ("O", "P"):
-        t = f"{prefix}_hop_{coll.lower()}"
-        drop(t)
-        write_bucketed(
-            rels[coll]
-            .select("src_key", "dst_key")
-            .repartition(num_buckets, "src_key"),
-            t,
-            "src_key",
+    specs = {
+        "hop_o": ("src_key", lambda: rels()["O"].select("src_key", "dst_key")),
+        "hop_p": ("src_key", lambda: rels()["P"].select("src_key", "dst_key")),
+        "term_s": (
+            "node_key",
+            lambda: terminal_stats(rels()["S"], "S").select(
+                "node_key", "_bkt", "_bm", "_deg"
+            ),
+        ),
+    }
+    return {
+        name: ensure_table(
+            spark,
+            _auto_name(f"khop_{name}_auto", sf_dir, files=_KHOP_FILES),
+            build,
+            key,
             num_buckets=num_buckets,
-            sort_col="src_key",
+            force=True,
         )
-        names[coll] = t
-    t = f"{prefix}_term_s"
-    drop(t)
-    write_bucketed(
-        terminal_stats(rels["S"], "S")
-        .select("node_key", "_bkt", "_bm", "_deg")
-        .repartition(num_buckets, "node_key"),
-        t,
-        "node_key",
-        num_buckets=num_buckets,
-        sort_col="node_key",
-    )
-    names["term"] = t
-    return names
+        for name, (key, build) in specs.items()
+    }
 
 
 def khop_paths_bucketed(
-    spark: SparkSession, sf_dir: str, prefix: str = "khop"
+    spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame]
 ) -> DataFrame:
-    """``q_khop_paths`` reading the PRE-BUCKETED hop tables written by
-    ``materialize_khop_bucketed`` -- row-identical output (test-pinned),
-    but the edge-relation build (3 dedup shuffles + layout sort) is out
-    of the query entirely: per hop, the bucketed scan satisfies the
-    join's required distribution, so only the frontier exchanges."""
+    """``q_khop_paths`` over the frames ``khop_bucketed_tables`` returns
+    -- row-identical output (test-pinned), but the edge-relation build
+    (3 dedup shuffles + layout sort) is out of the query entirely: per
+    hop, the bucketed scan satisfies the join's required distribution,
+    so only the frontier exchanges."""
 
-    def hop(table: str, src_coll: str, dst_coll: str, label: str):
-        return spark.table(table).select(
+    def hop(df: DataFrame, src_coll: str, dst_coll: str, label: str):
+        return df.select(
             F.lit(src_coll).alias("src_coll"),
             "src_key",
             F.lit(dst_coll).alias("dst_coll"),
@@ -176,10 +148,10 @@ def khop_paths_bucketed(
         )
 
     hops = {
-        "O": hop(f"{prefix}_hop_o", "C", "O", "PLACED"),
-        "P": hop(f"{prefix}_hop_p", "O", "P", "CONTAINS"),
+        "O": hop(tables["hop_o"], "C", "O", "PLACED"),
+        "P": hop(tables["hop_p"], "O", "P", "CONTAINS"),
     }
-    term = spark.table(f"{prefix}_term_s").select(
+    term = tables["term_s"].select(
         F.lit("P").alias("node_coll"), "node_key", "_bkt", "_bm", "_deg"
     )
     return (
@@ -357,7 +329,7 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a unioned cache forces every hop to scan and filter the WHOLE edge
     # set (115MB x 2 hops at the 10x corpus); per-hop relations scan
     # only their own (measured 23%, BENCH_NOTES.md r5).
-    # ``materialize_khop_bucketed`` is the on-disk steady-state layout.
+    # ``khop_bucketed_tables`` is the on-disk steady-state layout.
     # The hop/terminal frames and their views are serving state
     # (serving.py): re-deriving them per call costs ~0.35 s of
     # driver-side analysis + CacheManager plan normalization (measured
@@ -411,18 +383,11 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (pinned by tests/test_plan_quality.test_khop_counts_never_
         # materializes_last_hop and tests/test_plan_gates.test_sql_text_
         # khop_matches_dataframe_operator).
-        import hashlib
-
-        from ..sources.readers import _fingerprint
-
-        fps = tuple(
-            _fingerprint(f"{sf_dir}/{t}.parquet") for t in ("orders", "lineitem")
-        )
-        tag = hashlib.md5(repr((sf_dir, fps)).encode()).hexdigest()[:8]
+        tag = _auto_name("khop", sf_dir, files=_KHOP_FILES)
         views = {
-            "hop_o": f"khop_hop_o_{tag}",
-            "hop_p": f"khop_hop_p_{tag}",
-            "term": f"khop_term_{tag}",
+            "hop_o": f"{tag}_hop_o",
+            "hop_p": f"{tag}_hop_p",
+            "term": f"{tag}_term",
         }
         hops["O"].createOrReplaceTempView(views["hop_o"])
         hops["P"].createOrReplaceTempView(views["hop_p"])
@@ -437,7 +402,7 @@ def q_khop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.catalog.dropTempView(vn)
 
     views = serve(
-        spark, sf_dir, "khop.hops", ("orders", "lineitem"), build, release
+        spark, sf_dir, "khop.hops", _KHOP_FILES, build, release
     )["views"]
     from .relational import _view
 
@@ -517,50 +482,14 @@ def q_khop_paths_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-time build); 100x corpus 3.16 s steady vs the 30.1 s DuckDB
     oracle -- 0.10x (BENCH_NOTES r6).
 
-    First use per (sf_dir, table fingerprints) auto-materializes the
-    tables -- the test/driver convenience path; a deployment runs
-    ``materialize_khop_bucketed`` at ingest/compaction time instead.
+    First use per (sf_dir, table fingerprints) materializes the tables;
+    a later call, or a later session over the same warehouse, reuses
+    or recovers them and rebuilds only a missing one
+    (``materialized.ensure_table``).
     """
-    import hashlib
-
-    from ..sources.readers import _fingerprint
-
-    fp = hashlib.md5(
-        repr(
-            (
-                sf_dir,
-                _fingerprint(f"{sf_dir}/orders.parquet"),
-                _fingerprint(f"{sf_dir}/lineitem.parquet"),
-                KHOP_NUM_BUCKETS,
-            )
-        ).encode()
-    ).hexdigest()[:8]
-    prefix = f"khop_auto_{fp}"
-    if not spark.catalog.tableExists(f"{prefix}_term_s"):
-        # r10: a previous session's tables may survive on disk with
-        # their catalog entries gone -- re-register the bucketed layout
-        # instead of re-paying the build (materialized.
-        # register_surviving_bucketed); rebuild only what's missing.
-        from .materialized import register_surviving_bucketed
-
-        specs = {
-            f"{prefix}_hop_o": "src_key",
-            f"{prefix}_hop_p": "src_key",
-            f"{prefix}_term_s": "node_key",
-        }
-        recovered = {
-            t: register_surviving_bucketed(
-                spark, t, key, num_buckets=KHOP_NUM_BUCKETS
-            )
-            is not None
-            for t, key in specs.items()
-            if not spark.catalog.tableExists(t)
-        }
-        if not all(recovered.values()):
-            materialize_khop_bucketed(
-                spark, sf_dir, num_buckets=KHOP_NUM_BUCKETS, prefix=prefix
-            )
-    return khop_paths_bucketed(spark, sf_dir, prefix=prefix)
+    return khop_paths_bucketed(
+        spark, sf_dir, khop_bucketed_tables(spark, sf_dir)
+    )
 
 
 @query(

@@ -17,7 +17,7 @@ from ..operators import dedup as dd
 from ..operators import packing as pk
 from ..operators import similarity as sim
 from ..operators import textanalysis as ta
-from ..serving import serve
+from ..serving import _auto_name, serve
 from ..sources.readers import read_table
 from .registry import query
 
@@ -220,28 +220,23 @@ def _register_minhash_views(spark: SparkSession, sf_dir: str) -> tuple:
     buckets, candidate pairs). The signature and candidate-pair frames
     are persisted: without them one statement would re-execute the
     signature pipeline once per view reference (~5x)."""
-    import hashlib
-
-    from ..sources.readers import _fingerprint
-
-    fp = _fingerprint(f"{sf_dir}/documents.parquet")
     d = read_table(spark, sf_dir, "documents")
     sigs = dd.minhash_signatures_wide(
         d, "doc_id", "text", num_perm=MINHASH_NUM_PERM
     ).persist()
-    tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
-    name = f"minhash_sigs_{tag}"
+    tag = _auto_name("minhash", sf_dir)
+    name = f"{tag}_sigs"
     sigs.createOrReplaceTempView(name)
     structs = dd.band_structs_sql(
         num_perm=MINHASH_NUM_PERM, bands=MINHASH_BANDS
     )
-    bname = f"minhash_buckets_{tag}"
+    bname = f"{tag}_buckets"
     spark.sql(f"""
 SELECT id, t.band, t.bucket
 FROM {name}
 LATERAL VIEW inline(array({structs})) t AS band, bucket
 """).createOrReplaceTempView(bname)
-    cname = f"minhash_cand_{tag}"
+    cname = f"{tag}_cand"
     cand = spark.sql(f"""
 SELECT DISTINCT p.id_a, p.id_b FROM (
   SELECT /*+ BROADCAST(big) */ array_sort(collect_set(b.id)) AS ids
@@ -607,10 +602,6 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_gates.py), so the per-call plan build is a handful
     of py4j calls around the Arrow scorer.
     """
-    import hashlib
-
-    from ..sources.readers import _fingerprint
-
     e = read_table(spark, sf_dir, "embeddings")
 
     # The collected+quantized query matrix (data, not plan) and the
@@ -656,9 +647,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             prepared=prepared,
             coalesce_to=coalesce_to,
         )
-        fp = _fingerprint(f"{sf_dir}/embeddings.parquet")
-        tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
-        view = f"cosine_scored_{tag}"
+        view = _auto_name("cosine_scored", sf_dir, files=("embeddings",))
         scored.createOrReplaceTempView(view)
         return view
 

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from ..functions.money import avg_money, cents, money, qty_long
 from ..functions.text import char_ngrams, hyphenate, stable_uuid, tokens
-from ..serving import serve
+from ..serving import _auto_name, serve
 from ..sources.readers import read_table
 from .registry import query
 
@@ -106,18 +106,12 @@ def _broadcast_map_ok(sf_dir: str, table: str, selectivity: float) -> bool:
 
 
 def _view(spark: SparkSession, sf_dir: str, table: str) -> str:
-    import hashlib
-
-    from ..sources.readers import _fingerprint
-
     # Keyed on the SparkSession OBJECT, not applicationId: temp views
     # are session-scoped while applicationId is shared across
     # spark.newSession() siblings -- an id-keyed cache would hand a
     # sibling a view name its catalog never registered (ADVICE r8).
     def build() -> str:
-        fp = _fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
-        tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
-        name = f"{table}_v{tag}"
+        name = _auto_name(f"{table}_v", sf_dir, files=(table,))
         read_table(spark, sf_dir, table).createOrReplaceTempView(name)
         return name
 
@@ -568,8 +562,6 @@ def _supplier_bucketed_names(
     """((logical, bucket_col)...) for the supplier twin's two tables --
     one derivation shared by the builder and the routing probe so the
     two can never disagree about which layout they are talking about."""
-    from .materialized import _auto_name
-
     li_t = _auto_name("supb_li_auto", sf_dir, num_buckets, files=_SUPB_FILES)
     omap_t = _auto_name(
         "supb_omap_auto", sf_dir, num_buckets, files=_SUPB_FILES
@@ -643,9 +635,9 @@ def materialize_supplier_bucketed(
     q_local_supplier_volume's dominant 100x cost (BENCH_NOTES r9) is
     paid HERE once, at ingest/compaction time; every subsequent run's
     fact-fact SMJ reads co-located buckets with NO exchange on either
-    side (``operators/scale.write_bucketed`` doctrine -- the
-    ``materialize_khop_bucketed`` posture applied to the relational
-    headliner; per-bucket Sorts remain, see q_supplier_volume_bucketed).
+    side (``materialized.ensure_table``, the lifecycle the khop hop
+    tables use too, applied to the relational headliner; per-bucket
+    Sorts remain, see q_supplier_volume_bucketed).
     Returns the two VIEW names to query."""
     from .materialized import ensure_table
 

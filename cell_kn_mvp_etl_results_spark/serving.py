@@ -34,6 +34,7 @@ state store):
 
 from __future__ import annotations
 
+import hashlib
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -69,6 +70,26 @@ def level() -> str:
 
 def at_least(name: str) -> bool:
     return LEVELS.index(level()) >= LEVELS.index(name)
+
+
+def _auto_name(
+    prefix: str, sf_dir: str, *params, files: tuple = ("documents",)
+) -> str:
+    """``{prefix}_{hash}`` where the hash covers ``sf_dir``, the
+    fingerprints of ``{sf_dir}/{t}.parquet`` for ``t`` in ``files`` and
+    ``params``: the one name derivation for temp views and on-disk
+    tables, so a regenerated input or changed parameters get a new
+    name instead of stale rows."""
+    fp = hashlib.md5(
+        repr(
+            (
+                sf_dir,
+                tuple(_fingerprint(f"{sf_dir}/{t}.parquet") for t in files),
+                params,
+            )
+        ).encode()
+    ).hexdigest()[:8]
+    return f"{prefix}_{fp}"
 
 
 def _release(entry: Entry) -> None:

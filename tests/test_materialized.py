@@ -449,3 +449,21 @@ def test_register_surviving_recovers_reserved_word_sort_col(spark):
     spark.sql("DROP TABLE rsb_resv_copy")
     shutil.rmtree(dst)
     spark.sql("DROP TABLE rsb_resv_src")
+
+
+def test_bucketed_tables_have_one_writer():
+    """One lifecycle for on-disk tables: ``write_bucketed`` and
+    ``saveAsTable`` are called only by ``operators/scale.py`` (the
+    writer itself) and ``plans/materialized.py`` (``ensure_table``)."""
+    import pathlib
+    import re
+
+    from cell_kn_mvp_etl_results_spark.plans import materialized
+
+    pkg = pathlib.Path(materialized.__file__).resolve().parents[1]
+    writers = {
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if re.search(r"\b(write_bucketed|saveAsTable)\(", p.read_text())
+    }
+    assert writers == {"operators/scale.py", "plans/materialized.py"}

@@ -193,9 +193,9 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
     frontier exchanges per hop."""
     from cell_kn_mvp_etl_results_spark.plans import graph_queries as gq
 
-    gq.materialize_khop_bucketed(spark, sf_dir, num_buckets=4, prefix="khop_t")
+    tables = gq.khop_bucketed_tables(spark, sf_dir, num_buckets=4)
     want = sorted(map(tuple, gq.q_khop_paths(spark, sf_dir).collect()))
-    got_df = gq.khop_paths_bucketed(spark, sf_dir, prefix="khop_t")
+    got_df = gq.khop_paths_bucketed(spark, sf_dir, tables)
     assert sorted(map(tuple, got_df.collect())) == want
     assert len(want) > 0
 
@@ -203,7 +203,7 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         plan = (
-            gq.khop_paths_bucketed(spark, sf_dir, prefix="khop_t")
+            gq.khop_paths_bucketed(spark, sf_dir, tables)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -213,7 +213,7 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
     lines = plan.splitlines()
     scans = [
         i for i, ln in enumerate(lines)
-        if "FileScan parquet" in ln and "khop_t_" in ln
+        if "FileScan parquet" in ln and "khop_" in ln and "_key4" in ln
     ]
     assert len(scans) == 3
     assert plan.count("Bucketed: true") == 3
@@ -230,6 +230,51 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
                 assert "Exchange hashpartitioning" not in lines[j], lines[j]
                 indent = pind
             j -= 1
+
+
+def test_khop_bucketed_rebuilds_only_a_dropped_table(spark, tmp_path):
+    """The khop tables share one build/reuse/recover path: a second
+    call rewrites none of them, and after one table is dropped the next
+    call rebuilds that table alone (the other two keep their files) and
+    still returns q_khop_paths' rows."""
+    import os
+    import shutil
+
+    from conftest import SF_DIR
+
+    from cell_kn_mvp_etl_results_spark.plans import graph_queries as gq
+
+    d = str(tmp_path)
+    for t in ("customer", "orders", "lineitem"):
+        src = os.path.join(SF_DIR, f"{t}.parquet")
+        copy = shutil.copytree if os.path.isdir(src) else shutil.copy2
+        copy(src, os.path.join(d, f"{t}.parquet"))
+
+    def tables() -> set:
+        return {t.name for t in spark.catalog.listTables() if not t.isTemporary}
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def files(table: str) -> list:
+        return sorted(os.listdir(os.path.join(wh, table)))
+
+    before = tables()
+    rows = [sorted(map(tuple, gq.q_khop_paths_bucketed(spark, d).collect()))]
+    created = sorted(tables() - before)
+    assert len(created) == 3
+    written = {t: files(t) for t in created}
+    rows.append(sorted(map(tuple, gq.q_khop_paths_bucketed(spark, d).collect())))
+    assert {t: files(t) for t in created} == written
+
+    (hop_o,) = [t for t in created if "hop_o" in t]
+    spark.sql(f"DROP TABLE {hop_o}")
+    rows.append(sorted(map(tuple, gq.q_khop_paths_bucketed(spark, d).collect())))
+    assert spark.catalog.tableExists(hop_o)
+    kept = {t: v for t, v in written.items() if t != hop_o}
+    assert {t: files(t) for t in kept} == kept
+    want = sorted(map(tuple, gq.q_khop_paths(spark, d).collect()))
+    assert len(want) > 0
+    assert rows == [want] * 3
 
 
 def test_column_stats_exact(spark):
