@@ -21,14 +21,12 @@ the standard JMH-style protocol; a long-running engine amortizes
 compilation, and the median rejects one-off scheduler/GC hiccups that a
 single sample on a shared box cannot (observed 1.5-3x inflation under
 concurrent load; see BENCH_NOTES.md).
-AQE is disabled for the local measurement: its stage-materialization
-barriers cost ~2x wall-clock at local[N]/sub-GB scale while buying
-nothing (AQE remains the default in session.get_spark for real
-deployments; override with SPARK_GRAFT_AQE=true to measure with it).
+Every regime, and the scripts under scripts/, measure in the session
+``local_session`` builds: shuffle partitions and heap sized from the
+input bytes, AQE and constraint propagation off, JVM warmed up.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default all cores),
-     SPARK_GRAFT_AQE    (default false for the bench process).
+     SPARK_GRAFT_CPUS   (default all cores).
 """
 
 from __future__ import annotations
@@ -40,6 +38,8 @@ import subprocess
 import sys
 import tempfile
 import time
+
+from pyspark.sql import SparkSession
 
 from cell_kn_mvp_etl_results_spark.plans import REGISTRY
 from cell_kn_mvp_etl_results_spark.session import get_spark
@@ -61,18 +61,11 @@ def _true_cold_child() -> None:
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     wh = tempfile.mkdtemp(prefix="bench-truecold-wh-")
     try:
-        spark = get_spark(
+        spark = local_session(
             "cell-kn-spark-bench-truecold",
-            extra_conf={
-                "spark.sql.adaptive.enabled": os.environ.get(
-                    "SPARK_GRAFT_AQE", "false"
-                ),
-                "spark.sql.constraintPropagation.enabled": "false",
-                "spark.sql.warehouse.dir": wh,
-            },
+            sf_dir,
+            extra_conf={"spark.sql.warehouse.dir": wh},
         )
-        spark.sparkContext.setLogLevel("ERROR")
-        spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
         out: dict[str, float] = {}
         for name, spec in sorted(
             (n, s) for n, s in REGISTRY.items() if s.headline
@@ -87,17 +80,12 @@ def _true_cold_child() -> None:
         shutil.rmtree(wh, ignore_errors=True)
 
 
-def _run_true_cold(sf_dir: str, shuffle: int) -> "dict[str, float] | None":
+def _run_true_cold(sf_dir: str) -> "dict[str, float] | None":
     """Run the true-cold regime in a subprocess so the serving store,
     the Spark catalog and the JVM are provably fresh. A failed child
     is reported on stderr (return code + stderr tail) and yields None."""
-    env = dict(os.environ)
-    env.update(
-        {
-            "SPARK_GRAFT_SF_DIR": sf_dir,
-            "SPARK_GRAFT_SERVING": "off",
-            "SPARK_GRAFT_SHUFFLE": str(shuffle),
-        }
+    env = dict(
+        os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_SERVING="off"
     )
     rc, err = None, b""
     try:
@@ -129,23 +117,25 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "false")
-    # Local-measurement sizing: with AQE off and sub-GB shuffles the
-    # partition count must track the DATA, not the core count. At
-    # sf0.1 (~17MB of parquet) 8 static partitions measured ~15%
-    # faster than 32 (scheduling overhead dominates); at the 10x
-    # derived corpus (~170MB) the multi-million-row traversal shuffles
-    # need the full 32 (khop: 11.3s at 8 -> 7.5s at 32, equal load).
-    # ~4MB of source per shuffle task, clamped to [8, cores], mirrors
-    # what AQE's advisory partition sizing would pick at cluster scale.
-    # SPARK_GRAFT_SHUFFLE overrides; production sizing is in SCALE.md.
+def local_session(
+    app_name: str, sf_dir: str, extra_conf: dict[str, str] | None = None
+) -> SparkSession:
+    """The local-measurement session for ``sf_dir``: bench.py's regimes
+    and every measuring script under scripts/ run in it, so one input
+    always gets one session, sized as below. ``extra_conf`` adds keys
+    (e.g. a throwaway warehouse)."""
+    # With AQE off and sub-GB shuffles the partition count must track
+    # the DATA, not the core count. At sf0.1 (~17MB of parquet) 8
+    # static partitions measured ~15% faster than 32 (scheduling
+    # overhead dominates); at the 10x derived corpus (~170MB) the
+    # multi-million-row traversal shuffles need the full 32 (khop:
+    # 11.3s at 8 -> 7.5s at 32, equal load). ~4MB of source per
+    # shuffle task, clamped to [8, cores], mirrors what AQE's advisory
+    # partition sizing would pick at cluster scale. Production sizing
+    # is in SCALE.md.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     sf_bytes = _dir_bytes(sf_dir)
-    auto_shuffle = max(8, min(cpus, sf_bytes // (4 << 20)))
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", auto_shuffle))
+    shuffle = max(8, min(cpus, sf_bytes // (4 << 20)))
     # Data-proportional JVM heap (local mode: driver heap = whole JVM):
     # the steady-state table cache + wide aggregations need ~24x the
     # parquet bytes in heap at derived-corpus scales (the 8 GB default
@@ -154,28 +144,40 @@ def main() -> None:
     os.environ.setdefault(
         "SPARK_GRAFT_DRIVER_MEM", f"{max(8, sf_bytes * 24 // (1 << 30) + 1)}g"
     )
-    # Constraint propagation spends O(plan-size) optimizer time inferring
-    # IsNotNull/transitive predicates each (re)plan -- measured 8-19% of
-    # per-query wall at this scale, with nothing inferred that the
-    # hand-written plans don't already push down. Off for the local
-    # measurement only; at lake scale inferred constraints feed join
-    # pruning, so session.get_spark keeps the default.
+    spark = get_spark(
+        app_name,
+        shuffle_partitions=shuffle,
+        extra_conf={
+            # AQE's stage-materialization barriers cost ~2x wall-clock
+            # at local[N]/sub-GB scale while buying nothing; it stays
+            # the default in session.get_spark for real deployments.
+            "spark.sql.adaptive.enabled": "false",
+            # Constraint propagation spends O(plan-size) optimizer time
+            # inferring IsNotNull/transitive predicates each (re)plan --
+            # measured 8-19% of per-query wall at this scale, with
+            # nothing inferred that the hand-written plans don't
+            # already push down. At lake scale inferred constraints
+            # feed join pruning, so session.get_spark keeps the default.
+            "spark.sql.constraintPropagation.enabled": "false",
+            **(extra_conf or {}),
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+    return spark
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").split("sf")[-1]
     # TRUE-COLD first, in a SUBPROCESS, before this process's session
     # exists (no core contention, and provably no shared state): the
     # one regime with zero reuse of any kind -- fresh JVM, empty
     # serving store, SPARK_GRAFT_SERVING=off, temp warehouse.
     # First-call timing per query (see _true_cold_child).
-    true_cold = _run_true_cold(sf_dir, shuffle)
-    spark = get_spark(
-        "cell-kn-spark-bench",
-        shuffle_partitions=shuffle,
-        extra_conf={
-            "spark.sql.adaptive.enabled": aqe,
-            "spark.sql.constraintPropagation.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
+    true_cold = _run_true_cold(sf_dir)
+    spark = local_session("cell-kn-spark-bench", sf_dir)
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     headline = {n: s for n, s in REGISTRY.items() if s.headline}
 

@@ -34,24 +34,13 @@ task brief calls for.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["kmeans_integer", "kmeans_fit", "kmeans_assign"]
 
 
-def _sq_dist(vec: Column, centroid: list[int]) -> Column:
-    """Exact integer squared distance between an array<long> column and
-    a centroid literal -- pure Catalyst, codegen-friendly."""
-    lit = F.array(*[F.lit(int(v)).cast("long") for v in centroid])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-# -- SQL-text twins of the distance/argmin builders (r12 optimization) -----
+# -- distance/argmin builders, as SQL text (r12 optimization) --------------
 #
 # Composing the k x dim centroid literals through the Column API costs
 # one py4j round trip per literal plus several per lambda; an 8x64
@@ -60,14 +49,14 @@ def _sq_dist(vec: Column, centroid: list[int]) -> Column:
 # for q_ivf_topk, OPTIMIZATION_r12.md). Emitting the SAME expression as
 # one SQL string hands the JVM a single parse; the parsed Catalyst tree
 # is identical (zip_with/aggregate/array_position/array_min with long
-# literals), so plans and rows are unchanged by construction -- the
-# khop "SQL-text over registered views" doctrine applied to expression
-# construction.
+# literals) -- the khop "SQL-text over registered views" doctrine
+# applied to expression construction.
 
 
 def _sq_dist_sql(vec_sql: str, centroid: list[int]) -> str:
-    """``_sq_dist`` as SQL text over the array-typed expression
-    ``vec_sql`` -- the same aggregate(zip_with(...)) tree, one parse."""
+    """Exact integer squared distance between the array<long>
+    expression ``vec_sql`` and a centroid literal, as SQL text: one
+    aggregate(zip_with(...)) tree, one parse."""
     lits = ", ".join(f"{int(v)}L" for v in centroid)
     return (
         f"aggregate(zip_with({vec_sql}, array({lits}), "
@@ -86,7 +75,7 @@ def _dists_array_sql(vec_sql: str, cents: dict[int, list[int]]) -> str:
 
 def _argmin_cluster_sql(dists_sql: str) -> str:
     """First-index argmin over the distance array: ties break toward
-    the lowest cluster id, exactly as the Column twin."""
+    the lowest cluster id."""
     return f"(array_position({dists_sql}, array_min({dists_sql})) - 1)"
 
 

@@ -430,18 +430,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Row-form signatures (id, i, h) -- posexplode of the wide form."""
-    wide = minhash_signatures_wide(df, id_col, text_col, num_perm, shingle_n)
-    return wide.select("id", F.posexplode("sig").alias("i", "h"))
-
-
 def band_structs_sql(num_perm: int = 32, bands: int = 8) -> str:
     """The banding expression as SQL text: ``bands`` struct(band,
     bucket) terms, each bucket the md5 of the band's ordered minhash

@@ -575,7 +575,7 @@ def decode_aware_layout(
     (:func:`repartition_for_decode`). Returns (frame, decision).
 
     Measured at ~76-98 MB per media kind with a 12x6MB heavy tail
-    (scripts/decode_scale_ab.py, BENCH_NOTES r12): when the tail is
+    (BENCH_NOTES r12, "Decode at payload volume"): when the tail is
     CLUSTERED in the source layout (the lake's large-originals-in-one-
     prefix case) the max partition carries ~12x the mean and the
     repartition wins 1.4-3.6x; when ingest already spreads the tail,
@@ -590,10 +590,9 @@ def decode_aware_layout(
     sizes from the lake listing (or parquet footer column sizes) give
     the balance WITHOUT scanning payload bytes. When omitted, the
     diagnosis pass executes ``df``'s upstream once to sum payload
-    lengths -- PERSIST ``df`` first (as scripts/decode_scale_ab.py
-    does), or the measuring pass plus the decode each re-scan the
-    source and the chooser costs more than the repartition it
-    arbitrates."""
+    lengths -- PERSIST ``df`` first (as that measurement did), or the
+    measuring pass plus the decode each re-scan the source and the
+    chooser costs more than the repartition it arbitrates."""
     mx, mean = (
         profile
         if profile is not None

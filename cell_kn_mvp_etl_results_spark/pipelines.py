@@ -54,9 +54,15 @@ def run_graph_load(spark: SparkSession, tuples_path: str, graph_path: str) -> di
     Dangling edge annotations (quads whose endpoint pair matches no
     edge) are dropped before the write, with the per-collection-pair
     skip counts returned under ``"skipped_annotations"``."""
+    return _load_graph(read_tuples_json(spark, tuples_path), graph_path)
+
+
+def _load_graph(tuples: DataFrame, graph_path: str) -> dict:
+    """Assemble ``tuples`` into the property graph, drop its dangling
+    edge annotations, write it to ``graph_path`` and return the graph
+    tables plus the dropped counts under ``"skipped_annotations"``."""
     from .operators.graph import split_edge_annotations
 
-    tuples = read_tuples_json(spark, tuples_path)
     g = graph_from_tuples(tuples)
     kept, dangling = split_edge_annotations(g["edge_attrs"], g["edges"])
     g = {**g, "edge_attrs": kept}
@@ -117,7 +123,6 @@ def run_ontology_load(
     per-collection skip counts come back under ``"skipped_tuples"``."""
     from pyspark.sql import functions as SF
 
-    from .operators.graph import split_edge_annotations
     from .operators.rdf import owl_xml_to_triples, read_ntriples, resolve_bnodes
 
     if ontology_path.endswith((".nt", ".ntriples")):
@@ -175,11 +180,7 @@ def run_ontology_load(
             .agg(SF.count(SF.lit(1)).alias("n_skipped"))
         )
         all_triples = all_triples.filter(keep)
-    g = graph_from_tuples(all_triples)
-    kept, dangling = split_edge_annotations(g["edge_attrs"], g["edges"])
-    g = {**g, "edge_attrs": kept}
-    write_graph(g, graph_path)
-    out_graph = {**g, "skipped_annotations": dangling}
+    out_graph = _load_graph(all_triples, graph_path)
     if skipped_tuples is not None:
         out_graph["skipped_tuples"] = skipped_tuples
     return out_graph

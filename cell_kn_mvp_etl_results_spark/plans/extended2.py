@@ -99,23 +99,24 @@ def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = read_table(spark, sf_dir, "documents")
     # The delta's band frame is consumed THREE times below (base probe
-    # + both sides of the delta self-join); un-checkpointed, each
-    # consumer re-tokenizes and re-shuffles the delta's text through
-    # simhash's token aggregation (3 scans + 3 shuffles of
-    # |delta| x tokens rows per call, measured as most of the warm
-    # per-call cost at 30x). The checkpointed 2 x |delta| band rows are
-    # DATA derived from the corpus, not plan, so they are a serving-store
-    # entry per corpus fingerprint like q_cosine_topk's query matrix;
-    # the tiny pinned relation also gives the planner exact stats, so
-    # both probe joins pick broadcast on their own. A displaced entry is
-    # unpersisted and its reference dropped, which lets the
-    # ContextCleaner free the localCheckpoint blocks (ADVICE r9).
+    # + both sides of the delta self-join); unpinned, each consumer
+    # re-tokenizes and re-shuffles the delta's text through simhash's
+    # token aggregation (3 scans + 3 shuffles of |delta| x tokens rows
+    # per call, measured as most of the warm per-call cost at 30x).
+    # The pinned 2 x |delta| band rows are DATA derived from the
+    # corpus, not plan, so they are a serving-store entry per corpus
+    # fingerprint like q_cosine_topk's query matrix; filled eagerly,
+    # the tiny cached relation also gives the planner exact stats, so
+    # both probe joins pick broadcast on their own. Persisted rather
+    # than localCheckpointed: unpersisting a displaced entry frees its
+    # blocks at once (ADVICE r9), which DataFrame.unpersist cannot do
+    # for a checkpoint RDD.
     def build() -> DataFrame:
         delta = d.filter(F.col("doc_id") % 10 == 0)
         h_delta = dd.simhash(delta, "doc_id", "text", bits=32)
-        return dd.simhash_bands(h_delta, bands=2, bits=32).localCheckpoint(
-            eager=True
-        )
+        bands = dd.simhash_bands(h_delta, bands=2, bits=32)
+        bands.persist().count()
+        return bands
 
     bands_delta = serve(
         spark,
@@ -1153,8 +1154,9 @@ def q_bpe_natural_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately ignored: the registered oracle must be one fixed SQL
     string, and this gate certifies tokenizer-training semantics on
     realistic vocabulary structure, not testdata-scale behavior (the
-    4096-merge / 16k-word certification lives in
-    scripts/bpe_largevocab_run.py + tests/test_bpe.py).
+    4096-merge / 16k-word certification is recorded in BENCH_NOTES r9,
+    "Certified-batched BPE at a real vocabulary", and pinned by
+    tests/test_bpe.py).
     """
     from .models import natural_vocab_bpe_rows
 

@@ -10,7 +10,7 @@ serving deployment persists next to its index — the FAISS
 train/add/search lifecycle; the kmeans_fit/pq module docstrings say so
 explicitly. Re-running Lloyd's driver-synced corpus jobs per query
 call was ~42% of the all-registry rebuild-regime sweep
-(scripts/r12_query_sweep.py; OPTIMIZATION_r12.md).
+(scripts/query_sweep.py; OPTIMIZATION_r12.md).
 
 Same serving doctrine as the minhash signature/LSH-index views, the
 khop hop frames and the cosine prepared matrices: each model is a

@@ -450,7 +450,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
       (l_suppkey, cust_nation, n_name) collapse the fact-sized stream
       to |S| x |nations| rows before the broadcast supplier probe and
       the final 6-row agg. A/B at the 100x corpus (interleaved
-      medians, scripts/supplier_combo_ab.py): omap-SMJ 6.1-8.3 s ->
+      medians, BENCH_NOTES r9): omap-SMJ 6.1-8.3 s ->
       agg-below 4.5-5.9 s, consistent across rounds. Losers recorded:
       runtime-Bloom injection 12.7 s (filter build cost exceeds the
       34%-selectivity savings); broadcast-okeys semi-reduction 9.2 s

@@ -161,20 +161,20 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_minhash_signatures,
     )
     d = read_table(spark, sf_dir, "documents")
-    # The checkpointed |sources|-row group-signature frame is a
-    # serving-store entry (ADVICE r12): the operator's own per-call
-    # eager checkpoint was never tracked, so every rebuild leaked a
-    # block for the application lifetime and even explain-only plan
-    # builds ran the corpus scan. One checkpoint per corpus
-    # fingerprint; a displaced entry is unpersisted.
+    # The pinned |sources|-row group-signature frame is a serving-store
+    # entry (ADVICE r12): the operator's own per-call eager checkpoint
+    # was never tracked, so every rebuild leaked a block for the
+    # application lifetime and even explain-only plan builds ran the
+    # corpus scan. One persisted frame per corpus fingerprint, filled
+    # eagerly; persist (not localCheckpoint) so that unpersisting a
+    # displaced entry frees its blocks.
+    def build() -> DataFrame:
+        gsig = group_minhash_signatures(d, "source", "text", num_perm=32)
+        gsig.persist().count()
+        return gsig
+
     gsig = serve(
-        spark,
-        sf_dir,
-        "source_overlap.gsig",
-        ("documents",),
-        lambda: group_minhash_signatures(
-            d, "source", "text", num_perm=32
-        ).localCheckpoint(eager=True),
+        spark, sf_dir, "source_overlap.gsig", ("documents",), build,
         DataFrame.unpersist,
     )
     # |sources|^2-row result: 1-partition sort instead of a

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 # Parent directory of this package. Python workers import the package
 # by name (mapInPandas / UDF functions pickle as module references), and
 # the driver may run from any directory without the package installed.

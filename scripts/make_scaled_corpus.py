@@ -104,12 +104,11 @@ def _replica(df: DataFrame, table: str, i: int, strides: dict[str, int]) -> Data
 
 
 def main(out_root: str, replicas: int) -> None:
-    from cell_kn_mvp_etl_results_spark.session import get_spark
+    from bench import local_session
 
     out = os.path.join(out_root, "sf1")
     os.makedirs(out, exist_ok=True)
-    spark = get_spark("make-scaled-corpus")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("make-scaled-corpus", SRC)
     strides = _strides(spark)
     print("strides:", strides)
     for table in SCALED_TABLES:

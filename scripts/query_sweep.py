@@ -1,8 +1,8 @@
-"""r12 optimization-round measurement sweep (guide section 1: measure first).
+"""All-registry measurement sweep (measure first, then optimize).
 
-Times EVERY registered query at the bench scale factor with the bench's
-own session config and methodology (per-query warmup, median of 3
-timed runs), in BOTH the rebuild regime (SPARK_GRAFT_SERVING=tables:
+Times EVERY registered query at the bench scale factor in bench.py's
+own session (``bench.local_session``) and methodology (per-query
+warmup, median of 3 timed runs), in BOTH the rebuild regime (SPARK_GRAFT_SERVING=tables:
 warm table cache, plans rebuilt -- the from-scratch-per-run number the
 2x bar is graded on) and the prepared regime (=plans), and captures
 ``explain("formatted")`` for every query into a directory.
@@ -14,7 +14,7 @@ result pull; headliner results are <= a few hundred rows, so collect
 vs noop differ by <1 ms here -- measured in OPTIMIZATION_r12.md.)
 
 Usage:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/r12_query_sweep.py \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/query_sweep.py \
       [--plans-dir plans/r12/sweep] [--only name1,name2] [--runs 3]
 
 Prints one JSON line: {"rebuild": {name: sec}, "prepared": {name: sec},
@@ -52,35 +52,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
-    # Mirror bench.py's sizing exactly (AQE off locally, data-derived
-    # shuffle partitions, data-proportional heap, steady table cache).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    total = 0
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    auto_shuffle = max(8, min(cpus, total // (4 << 20)))
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", auto_shuffle))
-    os.environ.setdefault(
-        "SPARK_GRAFT_DRIVER_MEM", f"{max(8, total * 24 // (1 << 30) + 1)}g"
-    )
-
+    from bench import local_session
     from cell_kn_mvp_etl_results_spark.plans import REGISTRY
-    from cell_kn_mvp_etl_results_spark.session import get_spark
 
-    spark = get_spark(
-        "r12-query-sweep",
-        shuffle_partitions=shuffle,
-        extra_conf={
-            "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),
-            "spark.sql.constraintPropagation.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = local_session("query-sweep", sf_dir)
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     names = sorted(REGISTRY)
     if args.only:

@@ -1,14 +1,15 @@
-"""Rebuild-regime phase profile for the headliners: per run, split
+"""Rebuild-regime phase profile for the headliners, in bench.py's
+session (``bench.local_session``): per run, split
   build   -- builder() call (py4j plan construction / spark.sql parse +
              analysis + any per-call jobs the builder runs)
   plan    -- force executedPlan (optimization + physical planning +
              codegen source generation)
   exec    -- collect() on the already-planned DataFrame
-so the 2x-bar margin work attacks the right phase (VERDICT r11 #2:
-"profile their rebuild-regime stages, not driver time").
+so optimization work attacks the phase that actually costs.
 
 Usage:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/r12_replan_profile.py [runs]
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/replan_profile.py [runs]
+R12_ONLY=name1,name2 limits the run to those queries.
 Prints one JSON line {name: {"build": med, "plan": med, "exec": med}}.
 """
 
@@ -22,26 +23,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 os.environ["SPARK_GRAFT_SERVING"] = "tables"
 
-from cell_kn_mvp_etl_results_spark.plans import REGISTRY
-from cell_kn_mvp_etl_results_spark.session import get_spark
+from bench import local_session  # noqa: E402
+from cell_kn_mvp_etl_results_spark.plans import REGISTRY  # noqa: E402
 
 
 def main() -> None:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 5
     only = os.environ.get("R12_ONLY", "")
-    spark = get_spark(
-        "r12-replan-profile",
-        shuffle_partitions=8,
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.constraintPropagation.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = local_session("replan-profile", sf_dir)
     names = (
         [n for n in only.split(",") if n]
         if only

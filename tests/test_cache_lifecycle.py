@@ -242,8 +242,11 @@ def test_upsert_delta_bands_evicted_on_regeneration(spark, tmp_path):
     )
 
     d = _copy_table(tmp_path, "documents")
+    since = spark.sparkContext.parallelize([0]).id()
     pair_index_upsert_pairs(spark, d).count()
     (e1,) = _entries(d, "upsert.delta_bands")
+    held1 = set(_cached_rdds(spark, since))
+    assert held1  # the entry's bands hold blocks
     pair_index_upsert_pairs(spark, d).count()
     (again,) = _entries(d, "upsert.delta_bands")
     assert again is e1  # same fingerprint: a hit, nothing rebuilt
@@ -252,6 +255,25 @@ def test_upsert_delta_bands_evicted_on_regeneration(spark, tmp_path):
     (e2,) = _entries(d, "upsert.delta_bands")  # replaced, not accumulated
     assert e2.fingerprints != e1.fingerprints
     assert e2.value is not e1.value
+    # the displaced bands' blocks are gone from the block manager
+    assert not held1 & set(_cached_rdds(spark, since))
+
+
+def test_source_overlap_gsig_evicted_on_regeneration(spark, tmp_path):
+    from cell_kn_mvp_etl_results_spark.plans.selection import q_source_overlap
+
+    d = _copy_table(tmp_path, "documents")
+    since = spark.sparkContext.parallelize([0]).id()
+    rows = sorted(map(tuple, q_source_overlap(spark, d).collect()))
+    (e1,) = _entries(d, "source_overlap.gsig")
+    held1 = set(_cached_rdds(spark, since))
+    assert rows and held1  # the entry's signatures hold blocks
+    _regenerate(os.path.join(d, "documents.parquet"))
+    assert sorted(map(tuple, q_source_overlap(spark, d).collect())) == rows
+    (e2,) = _entries(d, "source_overlap.gsig")  # replaced, not accumulated
+    assert e2.fingerprints != e1.fingerprints
+    # the displaced signatures' blocks are gone from the block manager
+    assert not held1 & set(_cached_rdds(spark, since))
 
 
 def _khop_lake(tmp_path) -> str:

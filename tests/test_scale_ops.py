@@ -438,9 +438,9 @@ def test_choose_skew_remedy_thresholds():
 
 
 def test_skew_aware_join_routes_and_is_row_identical(spark):
-    """The chooser on the skew_join_ab synthetic (scaled down): one hot
-    key owns half the fact. Every route returns the plain join's rows;
-    the route itself follows the measured doctrine."""
+    """The chooser on SCALE.md's skew-remedy synthetic (scaled down):
+    one hot key owns half the fact. Every route returns the plain
+    join's rows; the route itself follows the measured doctrine."""
     from cell_kn_mvp_etl_results_spark.operators.scale import (
         skew_aware_join,
     )
