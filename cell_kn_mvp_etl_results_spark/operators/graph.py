@@ -55,8 +55,9 @@ def graph_from_tuples(
     or URI-object (reference constructs vertices from both ends,
     ``ResultsGraphBuilder.java:103-142``).
 
-    The two passes of the reference (construct then update) are two
-    lineages over one cached input; dedup-by-key HashSets
+    The two passes of the reference (construct then update) are four
+    lineages over ``tuples``; the caller caches it so they read it once
+    (``pipelines._load_graph`` does). Dedup-by-key HashSets
     (``ResultsGraphBuilder.java:124-137``) become dropDuplicates.
 
     ``attr_promotion`` resolves the reference's own divergence on

@@ -60,13 +60,23 @@ def run_graph_load(spark: SparkSession, tuples_path: str, graph_path: str) -> di
 def _load_graph(tuples: DataFrame, graph_path: str) -> dict:
     """Assemble ``tuples`` into the property graph, drop its dangling
     edge annotations, write it to ``graph_path`` and return the graph
-    tables plus the dropped counts under ``"skipped_annotations"``."""
+    tables plus the dropped counts under ``"skipped_annotations"``.
+
+    ``tuples`` is cached for the write: all four components derive from
+    it, and ``edge_attrs`` reads it once more through the semi-join
+    against ``edges``, so without the cache its upstream lineage (file
+    scan, parse, pivots) would run five times. The cache is released
+    when the write ends, failed or not."""
     from .operators.graph import split_edge_annotations
 
-    g = graph_from_tuples(tuples)
-    kept, dangling = split_edge_annotations(g["edge_attrs"], g["edges"])
-    g = {**g, "edge_attrs": kept}
-    write_graph(g, graph_path)
+    tuples = tuples.persist()
+    try:
+        g = graph_from_tuples(tuples)
+        kept, dangling = split_edge_annotations(g["edge_attrs"], g["edges"])
+        g = {**g, "edge_attrs": kept}
+        write_graph(g, graph_path)
+    finally:
+        tuples.unpersist()
     return {**g, "skipped_annotations": dangling}
 
 

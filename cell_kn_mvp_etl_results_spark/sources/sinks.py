@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 
 def write_tuples_json(
@@ -71,32 +72,67 @@ def write_tuples_json(
     writer.write.mode("overwrite").json(path)
 
 
+def _nullable(*cols: str) -> StructType:
+    """Nullable string columns, ``values`` an array of strings."""
+    return StructType(
+        [
+            StructField(c, ArrayType(StringType()) if c == "values" else StringType())
+            for c in cols
+        ]
+    )
+
+
+# The on-disk column order of each graph table: data columns first,
+# partition columns last -- the order schema inference gives a
+# partitioned write of graph_from_tuples' outputs (parquet stores every
+# column as nullable).
+_GRAPH_SCHEMAS = {
+    "vertices": _nullable("key", "coll"),
+    "vertex_attrs": _nullable("key", "attr", "values", "coll"),
+    "edges": _nullable("src_key", "dst_key", "label", "src_coll", "dst_coll"),
+    "edge_attrs": _nullable(
+        "src_key", "dst_key", "attr", "values", "src_coll", "dst_coll"
+    ),
+}
+_GRAPH_PARTITIONS = {
+    "vertices": ("coll",),
+    "vertex_attrs": ("coll",),
+    "edges": ("src_coll", "dst_coll"),
+    "edge_attrs": ("src_coll", "dst_coll"),
+}
+
+
 def write_graph(graph: dict[str, DataFrame], base_path: str) -> None:
     """K3/K4: persist the property graph as parquet tables; edges (and
     edge attrs) partitioned by (src_coll, dst_coll) for partition-pruned
     typed-path queries.
 
-    An EMPTY component is written unpartitioned: partitioned writes of
-    empty DataFrames produce no files at all, and the read side then
-    cannot infer a schema (found by driving a minimal graph through the
-    CLI)."""
-
-    def write(df: DataFrame, name: str, *part_cols: str) -> None:
-        writer = df.write.mode("overwrite")
-        if part_cols and not df.isEmpty():
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(os.path.join(base_path, name))
-
-    write(graph["vertices"], "vertices", "coll")
-    write(graph["vertex_attrs"], "vertex_attrs", "coll")
-    write(graph["edges"], "edges", "src_coll", "dst_coll")
-    write(graph["edge_attrs"], "edge_attrs", "src_coll", "dst_coll")
+    Each component is written partitioned, once. A partitioned write of
+    an EMPTY frame leaves no data file, and a table with no file has no
+    schema for a plain ``spark.read.parquet`` to infer (found by driving
+    a minimal graph through the CLI). So the table directory is listed
+    afterwards through the Hadoop FileSystem API (no Spark job), and a
+    write that made no partition directory is redone as ``limit(0)``
+    unpartitioned: one empty parquet file that carries the schema. An
+    emptiness probe before the write would re-run the component's whole
+    lineage."""
+    for name, part_cols in _GRAPH_PARTITIONS.items():
+        df = graph[name]
+        path = os.path.join(base_path, name)
+        df.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
+        if not _hadoop_has_subdir(df.sparkSession, path):
+            df.limit(0).write.mode("overwrite").parquet(path)
 
 
 def read_graph(spark: SparkSession, base_path: str) -> dict[str, DataFrame]:
+    """Read the four tables ``write_graph`` wrote, by the schemas in
+    ``_GRAPH_SCHEMAS`` -- the one statement of the on-disk column
+    order. A known schema needs no footer-reading Spark job, and an
+    empty component (written unpartitioned) reads back with the same
+    columns, in the same order, as a full one."""
     return {
-        name: spark.read.parquet(os.path.join(base_path, name))
-        for name in ("vertices", "vertex_attrs", "edges", "edge_attrs")
+        name: spark.read.schema(schema).parquet(os.path.join(base_path, name))
+        for name, schema in _GRAPH_SCHEMAS.items()
     }
 
 
@@ -226,6 +262,14 @@ def _hadoop_path_bytes(spark: SparkSession, path: str) -> int:
     if not fs.exists(jpath):
         return 0
     return int(fs.getContentSummary(jpath).getLength())
+
+
+def _hadoop_has_subdir(spark: SparkSession, path: str) -> bool:
+    """Whether the directory ``path`` holds a subdirectory, listed
+    through the Hadoop FileSystem API (any scheme; no Spark job)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return any(st.isDirectory() for st in fs.listStatus(jpath))
 
 
 def compact_table(

@@ -3,6 +3,8 @@ typed-path query (the full reference lifecycle through open formats)."""
 
 from __future__ import annotations
 
+import pytest
+
 
 NSFOREST_CSV = (
     "clusterName,clusterSize,f_score,precision,TP,FP,FN,TN,marker_count,"
@@ -119,6 +121,65 @@ def test_ontology_load_stage(spark, tmp_path):
     assert len(ea) == 1
     assert ea[0].attr == "hasDbXref" and ea[0].values == ["PMID:99"]
     assert g["skipped_annotations"].count() == 0
+
+
+def test_load_releases_its_tuples_cache(spark, tmp_path, monkeypatch):
+    """run_ontology_load and run_graph_load cache their tuples for the
+    write and release them after it, failed or not, per Spark's own
+    storage state: the cache manager holds the tuples during the write,
+    the write fills one more persistent RDD (the failing one too: its
+    job runs before the output directory is made), and every load
+    leaves the persistent RDDs as it found them."""
+    from pyspark import StorageLevel
+
+    import cell_kn_mvp_etl_results_spark.pipelines as pl
+    from test_rdf import OWL_FIXTURE
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    inputs, seen = [], []
+    real_build, real_write = pl.graph_from_tuples, pl.write_graph
+
+    def recording_build(tuples):
+        inputs.append(tuples)
+        return real_build(tuples)
+
+    def recording_write(g, path):
+        level = inputs[-1].storageLevel
+        try:
+            real_write(g, path)
+        finally:
+            seen.append((level, persisted()))
+
+    monkeypatch.setattr(pl, "graph_from_tuples", recording_build)
+    monkeypatch.setattr(pl, "write_graph", recording_write)
+    owl = tmp_path / "tiny.owl"
+    owl.write_text(OWL_FIXTURE)
+    csv = tmp_path / "nsforest.csv"
+    csv.write_text(NSFOREST_CSV)
+    tuples_dir = str(tmp_path / "tuples")
+    pl.run_nsforest_pipeline(spark, str(csv), tuples_dir)
+    graph_is_a_file = tmp_path / "graph_is_a_file"
+    graph_is_a_file.write_text("")
+
+    loads = [
+        (lambda: pl.run_ontology_load(spark, str(owl), str(tmp_path / "onto")), False),
+        (lambda: pl.run_graph_load(spark, tuples_dir, str(tmp_path / "graph")), False),
+        (lambda: pl.run_graph_load(spark, tuples_dir, str(graph_is_a_file)), True),
+    ]
+    for i, (load, fails) in enumerate(loads):
+        before = persisted()
+        if fails:
+            with pytest.raises(Exception, match="not a directory"):
+                load()
+        else:
+            load()
+        level, during = seen[i]
+        assert level != StorageLevel.NONE, i
+        assert len(during - before) == 1, i
+        assert inputs[i].storageLevel == StorageLevel.NONE, i
+        assert persisted() == before, i
 
 
 AUTHOR_CSV = (

@@ -74,6 +74,48 @@ def test_write_read_graph_partitioned(spark, tmp_path):
     assert back["vertices"].count() == g["vertices"].count()
 
 
+def test_empty_components_read_back_like_full(spark, tmp_path):
+    """An empty component is written unpartitioned (a partitioned write
+    of no rows leaves no file to carry the schema), yet read_graph
+    returns it with the columns, in the order, of a full one; a plain
+    schema-less read still loads it."""
+    full = str(tmp_path / "full")
+    sinks.write_graph(graph_from_tuples(tuples_df(spark)), full)
+    want = {
+        n: spark.read.parquet(os.path.join(full, n)).columns
+        for n in sinks._GRAPH_SCHEMAS
+    }
+    no_quads = tuples_df(spark).filter(F.col("lit").isNull())
+    for label, tuples, empty in (
+        ("no_quads", no_quads, {"edge_attrs"}),
+        ("no_tuples", tuples_df(spark).limit(0), set(want)),
+    ):
+        base = str(tmp_path / label)
+        sinks.write_graph(graph_from_tuples(tuples), base)
+        back = sinks.read_graph(spark, base)
+        assert {n: df.columns for n, df in back.items()} == want, label
+        for name in empty:
+            assert back[name].count() == 0, (label, name)
+            assert spark.read.parquet(os.path.join(base, name)).count() == 0
+
+
+def test_read_graph_runs_no_job_and_schemas_match_inference(spark, tmp_path):
+    """read_graph plans from _GRAPH_SCHEMAS, so it submits no Spark job;
+    each entry is exactly what inference reads from a full graph, so
+    the dict cannot drift from graph_from_tuples' outputs."""
+    from test_cache_lifecycle import _jobs_in
+
+    base = str(tmp_path / "graph")
+    sinks.write_graph(graph_from_tuples(tuples_df(spark)), base)
+    g, jobs = _jobs_in(spark, lambda: sinks.read_graph(spark, base))
+    assert jobs == []
+    _, jobs = _jobs_in(spark, g["edges"].collect)
+    assert jobs  # the job group does see the jobs a read runs
+    for name, schema in sinks._GRAPH_SCHEMAS.items():
+        assert spark.read.parquet(os.path.join(base, name)).schema == schema, name
+        assert g[name].schema == schema, name
+
+
 def test_upsert_vertices_idempotent(spark):
     a = spark.createDataFrame([("CL", "1"), ("CL", "2")], "coll string, key string")
     b = spark.createDataFrame([("CL", "2"), ("GO", "3")], "coll string, key string")
