@@ -158,10 +158,10 @@ def jaccard_pairs(
     mode; the gate corpus stays under the cap either way).
 
     Caching: the shingle relation is persisted for reuse across the
-    candidate and verify joins; the reference drops when the returned
-    plan is garbage-collected (Spark's ContextCleaner unpersists
-    unreferenced RDDs), so repeated calls do not accumulate cache
-    beyond live plans.
+    candidate and verify joins, and nothing releases it: the
+    CacheManager holds a persisted relation until ``unpersist`` is
+    called, even after the returned plan is garbage-collected, so each
+    call leaves one more cached relation behind.
 
     Returns (id_a, id_b, inter, union_sz, jaccard), id_a < id_b.
     """

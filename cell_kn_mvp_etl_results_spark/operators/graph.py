@@ -25,27 +25,22 @@ terminates on empty frontier (depth cap 64 mirrors the reference's
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def split_term(term_col) -> tuple:
-    """Split a term like ``CL_0000235`` into (coll, key) at the first
-    ``_`` (reference key scheme: ``OntologyParserLoader.py:41-43``,
-    vertex ``_key`` = term suffix)."""
-    c = F.col(term_col) if isinstance(term_col, str) else term_col
-    return (
-        F.substring_index(c, "_", 1).alias("coll"),
-        F.regexp_replace(c, r"^[^_]*_", "").alias("key"),
-    )
+def split_term(term) -> tuple[Column, Column]:
+    """The key scheme, stated once: a term like ``CL_0000235`` is
+    (coll, key) with coll the text before the first ``_`` and key the
+    rest, which may itself contain ``_`` (reference key scheme:
+    ``OntologyParserLoader.py:41-43``, vertex ``_key`` = term suffix).
+    Returns the two Columns unaliased."""
+    c = F.col(term) if isinstance(term, str) else term
+    return F.substring_index(c, "_", 1), F.regexp_replace(c, r"^[^_]*_", "")
 
 
-def graph_from_tuples(
-    tuples: DataFrame,
-    attr_promotion: str = "list",
-    uri_prefixes: list[str] | None = None,
-) -> dict[str, DataFrame]:
+def graph_from_tuples(tuples: DataFrame) -> dict[str, DataFrame]:
     """Assemble the property graph from the tuples IR (T7 two-pass build,
     ``ResultsGraphBuilder.java:103-303`` / ``OntologyParserLoader.py:1112-1168``).
 
@@ -60,32 +55,19 @@ def graph_from_tuples(
     (``pipelines._load_graph`` does). Dedup-by-key HashSets
     (``ResultsGraphBuilder.java:124-137``) become dropDuplicates.
 
-    ``attr_promotion`` resolves the reference's own divergence on
-    duplicate predicates: the Python loader promotes scalar -> list
-    (``OntologyParserLoader.py:913-921``, 'list', default) while the
-    Java loader overwrites last-wins (``ResultsGraphBuilder.java:185-189``,
-    'last'). Emission order is not reproducible distributed, so 'last'
-    is defined as the max value under string ordering -- deterministic,
-    and identical to Java's behavior whenever the duplicates carry one
-    distinct value (the common case the Java code relies on).
+    Duplicate predicates promote scalar -> deduped sorted list, the
+    Python loader's semantics (``OntologyParserLoader.py:913-921``); the
+    Java loader overwrites last-wins instead
+    (``ResultsGraphBuilder.java:185-189``), a divergence this engine does
+    not reproduce.
     """
-    if attr_promotion not in ("list", "last"):
-        raise ValueError(f"attr_promotion must be 'list' or 'last', got {attr_promotion!r}")
-    # URI-vs-literal dispatch, most reliable signal first:
-    # 1. an is_literal column threaded from the RDF readers (exact);
-    # 2. a caller-supplied whitelist of vertex-collection prefixes
-    #    (the reference's VALID_VERTICES set, OntologyParserLoader.py:41-44);
-    # 3. the shape heuristic -- which misreads literal values that
-    #    happen to look like CURIEs ("Homo_sapiens"), so prefer 1/2.
+    # URI-vs-literal dispatch: an is_literal column threaded from the
+    # RDF readers is exact; without it, the shape heuristic misreads
+    # literal values that happen to look like CURIEs ("Homo_sapiens").
     if "is_literal" in tuples.columns:
         # downstream selects are all explicit projections, so the extra
         # column never reaches the outputs
         is_uri = ~F.coalesce(F.col("is_literal"), F.lit(False))
-    elif uri_prefixes is not None:
-        import re as _re
-
-        pat = "|".join(_re.escape(p) for p in uri_prefixes)
-        is_uri = F.col("o").contains("http") | F.col("o").rlike(rf"^({pat})_")
     else:
         is_uri = F.col("o").contains("http") | F.col("o").rlike(r"^[A-Za-z]+_")
     if "lit" not in tuples.columns:
@@ -93,9 +75,6 @@ def graph_from_tuples(
         tuples = tuples.withColumn("lit", F.lit(None).cast("string"))
     triples = tuples.filter(F.col("lit").isNull())
     quads = tuples.filter(F.col("lit").isNotNull())
-
-    edge_triples = triples.filter(is_uri)
-    attr_triples = triples.filter(~is_uri)
 
     # One Generate pass instead of three (r12 optimization): edge and
     # attr triples partition `triples` on is_uri, so
@@ -112,46 +91,32 @@ def graph_from_tuples(
         F.when(is_uri, F.array(F.col("o"))).otherwise(_empty),
     )
     vertices = triples.select(F.explode(_terms).alias("term")).distinct()
-
-    edges = edge_triples.select(
-        F.substring_index("s", "_", 1).alias("src_coll"),
-        F.regexp_replace("s", r"^[^_]*_", "").alias("src_key"),
-        F.substring_index("o", "_", 1).alias("dst_coll"),
-        F.regexp_replace("o", r"^[^_]*_", "").alias("dst_key"),
-        F.col("p").alias("label"),
-    ).dropDuplicates()
-
-    # A7 attribute pivot with list promotion (collect_set semantics --
-    # the Python reference appends to a list on duplicate predicates,
-    # OntologyParserLoader.py:913-921; Java last-wins diverges, we
-    # document and take the Python list semantics).
-    value_agg = (
-        F.sort_array(F.collect_set("o"))
-        if attr_promotion == "list"
-        else F.array(F.max("o"))
+    t_coll, t_key = split_term("term")
+    s_coll, s_key = split_term("s")
+    o_coll, o_key = split_term("o")
+    edge_cols = (
+        s_coll.alias("src_coll"),
+        s_key.alias("src_key"),
+        o_coll.alias("dst_coll"),
+        o_key.alias("dst_key"),
+    )
+    edges = (
+        triples.filter(is_uri)
+        .select(*edge_cols, F.col("p").alias("label"))
+        .dropDuplicates()
     )
     vertex_attrs = (
-        attr_triples.groupBy(
-            F.substring_index("s", "_", 1).alias("coll"),
-            F.regexp_replace("s", r"^[^_]*_", "").alias("key"),
-            F.col("p").alias("attr"),
-        )
-        .agg(value_agg.alias("values"))
+        triples.filter(~is_uri)
+        .groupBy(s_coll.alias("coll"), s_key.alias("key"), F.col("p").alias("attr"))
+        .agg(F.sort_array(F.collect_set("o")).alias("values"))
     )
-
     edge_attrs = (
-        quads.groupBy(
-            F.substring_index("s", "_", 1).alias("src_coll"),
-            F.regexp_replace("s", r"^[^_]*_", "").alias("src_key"),
-            F.substring_index("o", "_", 1).alias("dst_coll"),
-            F.regexp_replace("o", r"^[^_]*_", "").alias("dst_key"),
-            F.col("p").alias("attr"),
-        )
+        quads.groupBy(*edge_cols, F.col("p").alias("attr"))
         .agg(F.sort_array(F.collect_set("lit")).alias("values"))
     )
 
     return {
-        "vertices": vertices.select(*split_term("term")),
+        "vertices": vertices.select(t_coll.alias("coll"), t_key.alias("key")),
         "edges": edges,
         "vertex_attrs": vertex_attrs,
         "edge_attrs": edge_attrs,
@@ -169,8 +134,8 @@ def split_edge_annotations(
     skip-with-metric: ``kept`` is the semi-join against the edge
     relation on the (src, dst) endpoint pair, ``dangling`` comes back
     aggregated per collection pair so the skip count is inspectable
-    without driver-side counters (same shape as
-    :func:`filter_valid_vertices`).
+    without driver-side counters (same shape as the VALID_VERTICES
+    gate's ``skipped_tuples``, ``pipelines.run_ontology_load``).
 
     Scale: both joins are on narrow (coll, key) pairs; the annotation
     side is typically dimension-scale next to the edge table, so AQE
@@ -187,25 +152,6 @@ def split_edge_annotations(
     return kept, dangling
 
 
-def filter_valid_vertices(
-    tuples: DataFrame, valid_colls: list[str]
-) -> tuple[DataFrame, DataFrame]:
-    """F9: keep only tuples whose subject collection is whitelisted
-    (the reference's VALID_VERTICES gate, ``OntologyParserLoader.py:41-44``,
-    ``:660-663``), and report what was skipped -- the reference tracks
-    skip counts; here they come back as a (coll, n_skipped) DataFrame
-    so the metric is inspectable without driver-side counters.
-    """
-    coll = F.substring_index("s", "_", 1)
-    kept = tuples.filter(coll.isin(*valid_colls))
-    skipped = (
-        tuples.filter(~coll.isin(*valid_colls))
-        .groupBy(coll.alias("coll"))
-        .agg(F.count(F.lit(1)).alias("n_skipped"))
-    )
-    return kept, skipped
-
-
 def undirected(edges: DataFrame) -> DataFrame:
     """ANY-direction edge view (AQL traversals run ANY direction,
     ``AqlQuerySetBuilder.java:33``): union of edges with src/dst swapped."""
@@ -220,6 +166,50 @@ def undirected(edges: DataFrame) -> DataFrame:
     # (partition cols last), and a positional union would silently put
     # keys in coll slots.
     return edges.select(flipped.columns).unionByName(flipped)
+
+
+def typed_edges(
+    df: DataFrame,
+    src_coll: str,
+    src_key: str,
+    dst_coll: str,
+    dst_key: str,
+    label: str,
+) -> DataFrame:
+    """One deduped typed edge relation: every distinct (``src_key``,
+    ``dst_key``) pair of ``df`` as an edge ``src_coll`` -> ``dst_coll``
+    labelled ``label``, in the 5-column edges schema.
+
+    Dedup runs on the two raw key columns BEFORE the constant coll/label
+    literals are attached, and the keys keep their source type (longs
+    for the star schema), so the distinct shuffle carries exactly 16
+    bytes per edge instead of two variable-length strings. Keys are
+    stringified only where a path string is built (``concat_ws``).
+    """
+    return (
+        df.select(
+            F.col(src_key).alias("src_key"), F.col(dst_key).alias("dst_key")
+        )
+        .dropDuplicates()
+        .select(
+            F.lit(src_coll).alias("src_coll"),
+            "src_key",
+            F.lit(dst_coll).alias("dst_coll"),
+            "dst_key",
+            F.lit(label).alias("label"),
+        )
+    )
+
+
+def _hop_edges(
+    edges: DataFrame | dict[str, DataFrame], coll: str
+) -> DataFrame:
+    """The edges a hop into ``coll`` may take: the mapping's own
+    relation when ``edges`` is a ``dst_coll -> edges`` mapping (see
+    ``k_hop``), else the edge table filtered on ``dst_coll``."""
+    if isinstance(edges, dict):
+        return edges[coll]
+    return edges.filter(F.col("dst_coll") == coll)
 
 
 def k_hop(
@@ -267,14 +257,12 @@ def k_hop(
     """
     if unique_edges is None:
         unique_edges = any_direction
-    if isinstance(edges, dict):
-        if any_direction:
+    if any_direction:
+        if isinstance(edges, dict):
             raise ValueError(
                 "per-collection edge maps support directed traversal only"
             )
-        e = None
-    else:
-        e = undirected(edges) if any_direction else edges
+        edges = undirected(edges)
     cur = start.select(
         F.col("coll").alias("v0_coll"),
         F.col("key").alias("v0_key"),
@@ -288,8 +276,7 @@ def k_hop(
     if unique_edges:
         cur = cur.withColumn("used_edges", F.array().cast("array<string>"))
     for coll in hop_colls:
-        src = edges[coll] if e is None else e.filter(F.col("dst_coll") == coll)
-        hop = src.select(
+        hop = _hop_edges(edges, coll).select(
             F.col("src_coll").alias("node_coll"),
             F.col("src_key").alias("node_key"),
             F.col("dst_coll").alias("h_dst_coll"),
@@ -324,7 +311,9 @@ def k_hop(
     return cur.drop("used_edges") if unique_edges else cur
 
 
-def terminal_stats(edges: DataFrame, coll: str) -> DataFrame:
+def terminal_stats(
+    edges: DataFrame | dict[str, DataFrame], coll: str
+) -> DataFrame:
     """Per-source terminal summary for the LAST hop of a counting
     traversal: for every vertex with an edge into ``coll``, an exact
     bitmap of its distinct ``coll`` neighbours (Spark's fixed-width
@@ -342,7 +331,7 @@ def terminal_stats(edges: DataFrame, coll: str) -> DataFrame:
     41-43``). Non-integer keys -> use the materializing ``k_hop`` plan.
     """
     return (
-        edges.filter(F.col("dst_coll") == coll)
+        _hop_edges(edges, coll)
         .groupBy(
             F.col("src_coll").alias("node_coll"),
             F.col("src_key").alias("node_key"),
@@ -398,9 +387,7 @@ def k_hop_counts(
     """
     *mid, last = hop_colls
     if terminal is None:
-        terminal = terminal_stats(
-            edges[last] if isinstance(edges, dict) else edges, last
-        )
+        terminal = terminal_stats(edges, last)
     spark = terminal.sparkSession
     # Bitmap partial states are ~512B objects aggregated by
     # ObjectHashAggregate, whose default sort-based fallback (128 keys)
@@ -471,12 +458,7 @@ def path_fold(
             F.sum("_m").alias("n_paths"), F.sum("_s").alias("total_weight")
         )
     for coll in hop_colls[:-1]:
-        src = (
-            edges[coll]
-            if isinstance(edges, dict)
-            else edges.filter(F.col("dst_coll") == coll)
-        )
-        hop = src.select(
+        hop = _hop_edges(edges, coll).select(
             F.col("src_coll").alias("node_coll"),
             F.col("src_key").alias("node_key"),
             F.col("dst_coll").alias("h_dc"),
@@ -503,13 +485,7 @@ def path_fold(
     # fewer over the widest frontier; r12, guide §2.4). Measured
     # q_path_revenue 2.12 -> 1.38 s interleaved rebuild median at
     # sf0.1, rows identical.
-    last = hop_colls[-1]
-    src = (
-        edges[last]
-        if isinstance(edges, dict)
-        else edges.filter(F.col("dst_coll") == last)
-    )
-    hop = src.select(
+    hop = _hop_edges(edges, hop_colls[-1]).select(
         F.col("src_coll").alias("node_coll"),
         F.col("src_key").alias("node_key"),
         F.col(weight_col).alias("_w"),
@@ -638,8 +614,10 @@ def triangle_counts(
     The canonical edge set and the oriented edge list are persisted:
     they are each referenced by multiple joins, and recomputing them
     would re-run the (often expensive) upstream pair generation once
-    per reference. Spark's ContextCleaner unpersists when the returned
-    plan is garbage-collected (same contract as jaccard_pairs).
+    per reference. Nothing releases them: the CacheManager holds a
+    persisted relation until ``unpersist`` is called, whether or not
+    the returned plan is still referenced, so each call leaves both
+    entries cached.
     """
     a, b = F.col(a_col), F.col(b_col)
     e = (
@@ -805,9 +783,10 @@ def pagerank_integer(
 
     The edge+degree relation and node set are persisted: the iteration
     loop references each every round, and recomputing them would re-run
-    the (often expensive) upstream edge derivation iters-fold. The
-    ContextCleaner unpersists when the plan is garbage-collected (same
-    contract as jaccard_pairs).
+    the (often expensive) upstream edge derivation iters-fold. Nothing
+    releases them (as in triangle_counts): each call leaves the raw
+    edges, the edge+degree relation and the node set cached until
+    ``unpersist`` is called on them.
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
@@ -1048,7 +1027,6 @@ def modularity(
     labels: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
-    assume_canonical: bool = False,
     degrees: DataFrame | None = None,
     intra: DataFrame | None = None,
 ) -> DataFrame:
@@ -1072,6 +1050,10 @@ def modularity(
     ``labels`` is (id, label) covering every edge endpoint. Returns
     (m, n_vertices, n_communities, intra_edges, q_ppm).
 
+    ``degrees`` (id, d) and ``intra`` (label, e_in) are materialized
+    rollups that replace the per-edge degree count and the per-edge
+    label join; with both supplied, ``edges`` may be None.
+
     Plan shape: edges are deduplicated once (the same canonical a<b
     pair form the detectors emit); degrees come from one count over the
     doubled edge list; the two label lookups broadcast the node-sized
@@ -1090,58 +1072,17 @@ def modularity(
     so a rebuilt identical plan serves from the same cache instead of
     re-running the detector.
     """
-    import os
-
-    if edges is None and not (degrees is not None and intra is not None):
-        raise ValueError(
-            "modularity: edges may only be omitted when both degrees "
-            "and intra are supplied (the fully-materialized metric path)"
-        )
-    a, b = F.col(a_col), F.col(b_col)
     if edges is None:
-        e = None
-    elif assume_canonical:
-        # Caller guarantees (a < b, deduplicated, no self loops) -- the
-        # contract every pair-graph producer in this package already
-        # meets (simhash_pairs/jaccard_pairs emit id_a < id_b distinct,
-        # and the materialized tables persist exactly those rows).
-        # Skipping the defensive canonicalization removes a full
-        # edge-set exchange per call: at the 30x graph (89.6M pairs)
-        # the dropDuplicates shuffle was ~3 s of every q_modularity
-        # evaluation of an already-canonical table (BENCH_NOTES r9).
-        # A contract VIOLATION here (duplicate or self-loop rows)
-        # silently skews m, degrees, and e_in (ADVICE r9);
-        # SPARK_GRAFT_CHECK_CANONICAL=1 runs the real check -- one
-        # aggregate over the edge list -- and raises instead.
-        e = edges.select(a.alias("u"), b.alias("v"))
-        if os.environ.get("SPARK_GRAFT_CHECK_CANONICAL", "") not in ("", "0"):
-            chk = e.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.col("u"), F.col("v")).alias("nd"),
-                F.sum((F.col("u") >= F.col("v")).cast("long")).alias("bad"),
-            ).collect()[0]
-            if chk.bad or chk.n != chk.nd:
-                raise ValueError(
-                    "modularity(assume_canonical=True): edge list is not "
-                    f"canonical (rows={chk.n}, distinct={chk.nd}, "
-                    f"non-(a<b) rows={chk.bad})"
-                )
-        # With ``degrees`` supplied the edge list has at most ONE
-        # consumer left (the intra-community join, itself absent when
-        # ``intra`` is supplied): persist only when multiple consumers
-        # would otherwise race the cache and re-derive the upstream.
-        if degrees is None:
-            e = e.persist()
-            e.count()  # fill the cache once, before the consumers race
-    elif degrees is not None and intra is not None:
-        # Mirror of the canonical branch's consumer-count guard (ADVICE
-        # r10): with degrees AND intra both supplied, the metric reads
-        # no per-edge data at all -- canonicalizing (a full edge-set
-        # dedup shuffle) and pinning a cache entry nothing consumes
-        # would be pure waste. m still needs the edge COUNT, which the
-        # canonical sum-of-degrees identity supplies below.
+        if degrees is None or intra is None:
+            raise ValueError(
+                "modularity: edges may only be omitted when both degrees "
+                "and intra are supplied (the fully-materialized metric path)"
+            )
+        # The metric then reads no per-edge data at all; m comes from
+        # the sum-of-degrees identity below.
         e = None
     else:
+        a, b = F.col(a_col), F.col(b_col)
         e = (
             edges.select(
                 F.least(a, b).alias("u"), F.greatest(a, b).alias("v")

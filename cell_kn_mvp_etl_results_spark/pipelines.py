@@ -28,7 +28,7 @@ import argparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.graph import graph_from_tuples
+from .operators.graph import graph_from_tuples, split_term
 from .operators.tuplewriters import nsforest_tuples
 from .plans.battery import PathSpec, run_path_spec
 from .sources.readers import read_results_csv, read_tuples_json
@@ -180,13 +180,14 @@ def run_ontology_load(
     )
     skipped_tuples = None
     if valid_colls is not None:
-        coll = lambda c: SF.substring_index(c, "_", 1)  # noqa: E731
-        keep = coll(SF.col("s")).isin(*valid_colls) & (
-            SF.col("is_literal") | coll(SF.col("o")).isin(*valid_colls)
+        s_coll, _ = split_term("s")
+        o_coll, _ = split_term("o")
+        keep = s_coll.isin(*valid_colls) & (
+            SF.col("is_literal") | o_coll.isin(*valid_colls)
         )
         skipped_tuples = (
             all_triples.filter(~keep)
-            .groupBy(coll(SF.col("s")).alias("s_coll"), "p")
+            .groupBy(s_coll.alias("s_coll"), "p")
             .agg(SF.count(SF.lit(1)).alias("n_skipped"))
         )
         all_triples = all_triples.filter(keep)
@@ -304,6 +305,15 @@ def run_curation_pipeline(
     return metrics
 
 
+def _graph_counts(spark: SparkSession, graph_path: str) -> str:
+    """Vertex and edge counts of the graph written at ``graph_path``,
+    counted over the written tables: the frames a load returns are
+    lineage over its released tuples cache, and counting them would
+    re-run the whole load."""
+    g = read_graph(spark, graph_path)
+    return f"{g['vertices'].count()} vertices, {g['edges'].count()} edges"
+
+
 def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
 
@@ -343,11 +353,8 @@ def main(argv: list[str] | None = None) -> int:
             t = run_nsforest_pipeline(spark, args.results, args.out)
             print(f"wrote {t.count()} tuples to {args.out}")
         elif args.cmd == "load":
-            g = run_graph_load(spark, args.tuples, args.graph)
-            print(
-                f"graph: {g['vertices'].count()} vertices, "
-                f"{g['edges'].count()} edges -> {args.graph}"
-            )
+            run_graph_load(spark, args.tuples, args.graph)
+            print(f"graph: {_graph_counts(spark, args.graph)} -> {args.graph}")
         elif args.cmd == "query":
             df = run_query(spark, args.graph, args.anchor, args.hops.split(","))
             rows = df.limit(args.limit).collect()
@@ -359,11 +366,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"wrote {len(report)} sheets to {args.out}")
         elif args.cmd == "ontology":
             colls = args.valid_colls.split(",") if args.valid_colls else None
-            g = run_ontology_load(spark, args.owl, args.graph, valid_colls=colls)
-            print(
-                f"ontology graph: {g['vertices'].count()} vertices, "
-                f"{g['edges'].count()} edges -> {args.graph}"
-            )
+            run_ontology_load(spark, args.owl, args.graph, valid_colls=colls)
+            print(f"ontology graph: {_graph_counts(spark, args.graph)} -> {args.graph}")
         elif args.cmd == "author-cl":
             t = run_author_cl_pipeline(spark, args.mapping, args.out)
             print(f"wrote {t.count()} tuples to {args.out}")

@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.graph import hierarchy_longest_path, k_hop
+from ..operators.graph import hierarchy_longest_path, k_hop, split_term
 
 
 @dataclass(frozen=True)
@@ -109,14 +109,8 @@ def touched_edges(paths: DataFrame) -> DataFrame:
     # regexp_replace projections run on distinct pairs only. The split
     # is injective (src = coll || '_' || key reconstructs it), so
     # dedup-before equals dedup-after and the output stays distinct.
-    # coll = before the FIRST '_'; key = everything after it (keys may
-    # themselves contain underscores).
-    split = lambda c: (  # noqa: E731
-        F.substring_index(c, "_", 1),
-        F.regexp_replace(c, r"^[^_]*_", ""),
-    )
-    s_coll, s_key = split(F.col("e.src"))
-    d_coll, d_key = split(F.col("e.dst"))
+    s_coll, s_key = split_term("e.src")
+    d_coll, d_key = split_term("e.dst")
     return pairs.dropDuplicates().select(
         s_coll.alias("src_coll"),
         s_key.alias("src_key"),

@@ -23,31 +23,11 @@ from ..operators.graph import (
     k_hop_counts,
     path_fold,
     terminal_stats,
+    typed_edges,
 )
 from ..serving import _auto_name, serve
 from ..sources.readers import read_table
 from .registry import query
-
-
-def _khop_edge(df, src_coll, src_key, dst_coll, dst_key, label):
-    """One deduped typed hop relation. Keys stay as longs through dedup
-    + joins (narrow shuffles); they are stringified only in the final,
-    small projection. Dedup runs on the two key columns BEFORE the
-    constant coll/label columns are attached, so the shuffle carries
-    exactly 16 bytes per edge."""
-    return (
-        df.select(
-            F.col(src_key).alias("src_key"), F.col(dst_key).alias("dst_key")
-        )
-        .dropDuplicates()
-        .select(
-            F.lit(src_coll).alias("src_coll"),
-            "src_key",
-            F.lit(dst_coll).alias("dst_coll"),
-            "dst_key",
-            F.lit(label).alias("label"),
-        )
-    )
 
 
 def khop_edge_relations(
@@ -60,9 +40,9 @@ def khop_edge_relations(
     o = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem")
     return {
-        "O": _khop_edge(o, "C", "o_custkey", "O", "o_orderkey", "PLACED"),
-        "P": _khop_edge(li, "O", "l_orderkey", "P", "l_partkey", "CONTAINS"),
-        "S": _khop_edge(li, "P", "l_partkey", "S", "l_suppkey", "SUPPLIED_BY"),
+        "O": typed_edges(o, "C", "o_custkey", "O", "o_orderkey", "PLACED"),
+        "P": typed_edges(li, "O", "l_orderkey", "P", "l_partkey", "CONTAINS"),
+        "S": typed_edges(li, "P", "l_partkey", "S", "l_suppkey", "SUPPLIED_BY"),
     }
 
 
@@ -534,23 +514,12 @@ def q_hierarchy_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
     r = read_table(spark, sf_dir, "region")
 
-    def edge(src_coll, src_key, dst_coll, dst_key, df):
-        return df.select(
-            F.lit(src_coll).alias("src_coll"),
-            F.col(src_key).cast("string").alias("src_key"),
-            F.lit(dst_coll).alias("dst_coll"),
-            F.col(dst_key).cast("string").alias("dst_key"),
-            F.lit("contains").alias("label"),
-        )
-
     edges = (
-        edge("R", "n_regionkey", "N", "n_nationkey", n)
-        .union(edge("N", "c_nationkey", "C", "c_custkey", c))
-        .union(edge("C", "o_custkey", "O", "o_orderkey", o))
+        typed_edges(n, "R", "n_regionkey", "N", "n_nationkey", "contains")
+        .union(typed_edges(c, "N", "c_nationkey", "C", "c_custkey", "contains"))
+        .union(typed_edges(o, "C", "o_custkey", "O", "o_orderkey", "contains"))
     )
-    start = r.select(
-        F.lit("R").alias("coll"), F.col("r_regionkey").cast("string").alias("key")
-    )
+    start = r.select(F.lit("R").alias("coll"), F.col("r_regionkey").alias("key"))
     return hierarchy_longest_path(edges, start, label="contains", max_depth=64).orderBy(
         "start"
     )
@@ -617,19 +586,9 @@ def q_path_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "weight",
         )
     )
-    e3 = (
-        li.select(
-            F.col("l_partkey").alias("src_key"), F.col("l_suppkey").alias("dst_key")
-        )
-        .dropDuplicates()
-        .select(
-            F.lit("P").alias("src_coll"),
-            "src_key",
-            F.lit("S").alias("dst_coll"),
-            "dst_key",
-            F.lit(0).cast("long").alias("weight"),
-        )
-    )
+    e3 = typed_edges(
+        li, "P", "l_partkey", "S", "l_suppkey", "SUPPLIED_BY"
+    ).withColumn("weight", F.lit(0).cast("long"))
     start = c.filter(F.col("c_mktsegment") == "MACHINERY").select(
         F.lit("C").alias("coll"), F.col("c_custkey").alias("key")
     )

@@ -2038,7 +2038,8 @@ def q_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
     ).filter(F.col("tok") != "")
     # persisted: referenced by both the top-20 probe and the weighted
-    # cell build (ContextCleaner unpersists with the plan)
+    # cell build. Nothing unpersists it, so it stays cached after the
+    # query (the CacheManager holds it until ``unpersist``).
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_n")).persist()
     top = exact.orderBy(F.col("exact_n").desc(), "tok").limit(20)
     # Hash each DISTINCT token once, weighted by its exact count --

@@ -261,16 +261,13 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_pairs_frame,
     )
 
-    # r8 (VERDICT r7 #4): ONE pair frame feeds BOTH the label side and
-    # the metric's edge list, from the shared auto-materialized bucketed
-    # table. r9 (VERDICT r8 #3): the LABEL side now reads the
-    # materialized LPA assignment too -- steady calls score a persisted
-    # partition instead of re-running the 2 LPA rounds. r10 (VERDICT r9
-    # #6): the DEGREE side likewise -- a cold call reads the |V|-sized
-    # persisted degrees instead of exploding the 89.6M-edge list. Under
-    # SPARK_GRAFT_SERVING=off the inline pair regeneration is
-    # persisted and passed into the inline LPA + degree builds so all
-    # three consumers still share one computation.
+    # The metric reads three materialized rollups -- the LPA labels,
+    # the |V|-sized degrees and the per-community intra-edge counts --
+    # and no per-edge data: steady calls score a persisted partition
+    # instead of re-running the 2 LPA rounds or exploding the 89.6M-edge
+    # list at the 30x corpus. Under SPARK_GRAFT_SERVING=off the inline
+    # pair regeneration is persisted and passed into the inline LPA,
+    # degree and stats builds so all three share one computation.
     if at_least("derived"):
         # Fully-materialized metric path: labels, degrees, and the
         # intra-community rollup are all snapshot tables, so the pair
@@ -279,8 +276,8 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = None
     else:
         # Inline mode: ONE persisted pair regeneration feeds the LPA
-        # build, the degree build, the stats build, and the metric. A
-        # store entry, so the next call releases this call's copy.
+        # build, the degree build and the stats build. A store entry,
+        # so the next call releases this call's copy.
         pairs = serve(
             spark,
             sf_dir,
@@ -294,17 +291,9 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra = community_stats_frame(
         spark, sf_dir, iters=2, pairs=pairs, labels=labels
     )
-    # simhash_pairs_frame's contract is (id_a < id_b, distinct): skip
-    # the operator's defensive re-canonicalization exchange.
-    return gr.modularity(
-        pairs,
-        labels,
-        "id_a",
-        "id_b",
-        assume_canonical=True,
-        degrees=degrees,
-        intra=intra,
-    )
+    # With degrees and intra both supplied the metric reads no per-edge
+    # data, so the pair frame is not passed.
+    return gr.modularity(None, labels, degrees=degrees, intra=intra)
 
 
 def _mmr_oracle(n_candidates: int = 16, k: int = 8) -> str:

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import typed_edges
 from ..sources.readers import read_table
 from ..sources.sinks import extract_subgraph
 from .battery import PathSpec, run_battery
@@ -43,22 +44,6 @@ def q_subgraph_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     c = read_table(spark, sf_dir, "customer")
 
-    def edge(sc, sk, dc, dk, df):
-        # Dedup on the raw LONG keys and stringify after (guide §2.3
-        # "narrower types"): the distinct shuffle carries 16 fixed
-        # bytes per edge instead of two variable-length strings.
-        return (
-            df.select(F.col(sk).alias("_sk"), F.col(dk).alias("_dk"))
-            .dropDuplicates()
-            .select(
-                F.lit(sc).alias("src_coll"),
-                F.col("_sk").cast("string").alias("src_key"),
-                F.lit(dc).alias("dst_coll"),
-                F.col("_dk").cast("string").alias("dst_key"),
-                F.lit("has").alias("label"),
-            )
-        )
-
     # The deduped edge union is referenced by BOTH battery specs and
     # again by the extraction semi-join; Catalyst plans each reference
     # independently, so without materialization the two dedup shuffles
@@ -70,11 +55,11 @@ def q_subgraph_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5.25 -> 4.70 s interleaved rebuild median at sf0.1 (box in its
     # noisy band; every pairwise sample but one favoured the
     # checkpointed shape), rows pinned identical.
-    edges = edge("C", "o_custkey", "O", "o_orderkey", o).unionByName(
-        edge("O", "l_orderkey", "P", "l_partkey", li)
+    edges = typed_edges(o, "C", "o_custkey", "O", "o_orderkey", "has").unionByName(
+        typed_edges(li, "O", "l_orderkey", "P", "l_partkey", "has")
     ).localCheckpoint(eager=True)
     anchors = c.filter(F.col("c_mktsegment") == "AUTOMOBILE").select(
-        F.lit("C").alias("coll"), F.col("c_custkey").cast("string").alias("key")
+        F.lit("C").alias("coll"), F.col("c_custkey").alias("key")
     )
     vertices = anchors  # battery only needs anchor rows from `vertices`
     specs = [

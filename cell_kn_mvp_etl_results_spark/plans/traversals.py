@@ -9,19 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import k_hop
+from ..operators.graph import k_hop, typed_edges
 from ..sources.readers import read_table
 from .registry import query
-
-
-def _edges_1hop(o):
-    return o.select(
-        F.lit("C").alias("src_coll"),
-        F.col("o_custkey").alias("src_key"),
-        F.lit("O").alias("dst_coll"),
-        F.col("o_orderkey").alias("dst_key"),
-        F.lit("PLACED").alias("label"),
-    ).dropDuplicates()
 
 
 @query(
@@ -41,7 +31,8 @@ def q_khop1(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer")
     start = c.select(F.lit("C").alias("coll"), F.col("c_custkey").alias("key"))
-    paths = k_hop(_edges_1hop(o), start, ["O"], carry_path=False)
+    edges = typed_edges(o, "C", "o_custkey", "O", "o_orderkey", "PLACED")
+    paths = k_hop(edges, start, ["O"], carry_path=False)
     return (
         paths.groupBy("v0_key")
         .agg(F.count(F.lit(1)).alias("n_paths"))
@@ -81,25 +72,12 @@ def q_khop5(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     r = read_table(spark, sf_dir, "region")
 
-    def edge(sc, sk, dc, dk, df):
-        return (
-            df.select(F.col(sk).alias("src_key"), F.col(dk).alias("dst_key"))
-            .dropDuplicates()
-            .select(
-                F.lit(sc).alias("src_coll"),
-                "src_key",
-                F.lit(dc).alias("dst_coll"),
-                "dst_key",
-                F.lit("x").alias("label"),
-            )
-        )
-
     edges = (
-        edge("R", "n_regionkey", "N", "n_nationkey", n)
-        .union(edge("N", "c_nationkey", "C", "c_custkey", c))
-        .union(edge("C", "o_custkey", "O", "o_orderkey", o))
-        .union(edge("O", "l_orderkey", "P", "l_partkey", li))
-        .union(edge("P", "l_partkey", "S", "l_suppkey", li))
+        typed_edges(n, "R", "n_regionkey", "N", "n_nationkey", "x")
+        .union(typed_edges(c, "N", "c_nationkey", "C", "c_custkey", "x"))
+        .union(typed_edges(o, "C", "o_custkey", "O", "o_orderkey", "x"))
+        .union(typed_edges(li, "O", "l_orderkey", "P", "l_partkey", "x"))
+        .union(typed_edges(li, "P", "l_partkey", "S", "l_suppkey", "x"))
     )
     start = r.select(F.lit("R").alias("coll"), F.col("r_regionkey").alias("key"))
     paths = k_hop(edges, start, ["N", "C", "O", "P", "S"], carry_path=False)
@@ -140,17 +118,7 @@ def q_khop_any_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-id filter enforces."""
     li = read_table(spark, sf_dir, "lineitem")
     p = read_table(spark, sf_dir, "part")
-    edges = (
-        li.select(F.col("l_orderkey").alias("src_key"), F.col("l_partkey").alias("dst_key"))
-        .dropDuplicates()
-        .select(
-            F.lit("O").alias("src_coll"),
-            "src_key",
-            F.lit("P").alias("dst_coll"),
-            "dst_key",
-            F.lit("CONTAINS").alias("label"),
-        )
-    )
+    edges = typed_edges(li, "O", "l_orderkey", "P", "l_partkey", "CONTAINS")
     start = p.filter(F.col("p_size") >= 48).select(
         F.lit("P").alias("coll"), F.col("p_partkey").alias("key")
     )

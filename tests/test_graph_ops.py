@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_results_spark.operators.graph import (
-    filter_valid_vertices,
     graph_from_tuples,
     hierarchy_longest_path,
     k_hop,
@@ -42,16 +41,6 @@ def test_graph_assembly_vertices_edges(spark):
     assert ("CL", "1", "CL", "2", "subClassOf") in edges
     assert ("CL", "1", "UBERON", "9", "part_of") in edges
     assert len(edges) == 3
-
-
-def test_filter_valid_vertices(spark):
-    # F9: whitelist gate with observable skip metric. All 7 fixture
-    # subjects are CL_*.
-    kept, skipped = filter_valid_vertices(tuples_df(spark), ["CL"])
-    assert kept.count() == 7 and skipped.count() == 0
-    kept2, skipped2 = filter_valid_vertices(tuples_df(spark), ["GO"])
-    assert kept2.count() == 0
-    assert {(r.coll, r.n_skipped) for r in skipped2.collect()} == {("CL", 7)}
 
 
 def test_attr_list_promotion(spark):
@@ -181,7 +170,7 @@ def test_hierarchy_cycle_safety(spark):
 def test_literal_dispatch_modes(spark):
     """ADVICE r1: a literal value shaped like a CURIE ("Homo_sapiens")
     must not become a phantom edge when the caller provides the exact
-    is_literal signal or a collection whitelist."""
+    is_literal signal; without it the shape heuristic decides."""
     rows = [
         ("CL_1", "label", "Homo_sapiens", False),  # literal, CURIE-shaped
         ("CL_1", "part_of", "UBERON_2", True),
@@ -195,17 +184,11 @@ def test_literal_dispatch_modes(spark):
     assert [ (r.label, r.dst_coll) for r in g["edges"].collect() ] == [("part_of", "UBERON")]
     attrs = {(r.attr, tuple(r.values)) for r in g["vertex_attrs"].collect()}
     assert ("label", ("Homo_sapiens",)) in attrs
-    # mode 2: uri_prefixes whitelist
     t2 = spark.createDataFrame(
         [(s, p, o, None) for s, p, o, _ in rows],
         "s string, p string, o string, lit string",
     )
-    g2 = graph_from_tuples(t2, uri_prefixes=["CL", "UBERON"])
-    assert [r.label for r in g2["edges"].collect()] == ["part_of"]
-    assert ("label", ("Homo_sapiens",)) in {
-        (r.attr, tuple(r.values)) for r in g2["vertex_attrs"].collect()
-    }
-    # mode 3 (fallback heuristic): documented misclassification
+    # mode 2 (fallback heuristic): documented misclassification
     g3 = graph_from_tuples(t2)
     assert {r.label for r in g3["edges"].collect()} == {"label", "part_of"}
 
@@ -502,3 +485,29 @@ def test_clustering_coefficient_max_degree_matches_triangles(spark):
     # hub 0 dropped by the cap; K3 survives with post-cap degree 2
     assert cc == {1: (2, 1, 1000), 2: (2, 1, 1000), 3: (2, 1, 1000)}
     assert tr == {1: 1, 2: 1, 3: 1}
+
+
+def test_graph_layer_decisions_have_one_home():
+    """One statement per graph-layer decision: the term split regex
+    lives only in ``operators/graph.split_term``, and typed edge
+    relations are built only by ``operators/graph.typed_edges`` (no
+    module keeps its own ``_khop_edge`` / ``_edges_1hop`` copy)."""
+    import pathlib
+    import re
+
+    from cell_kn_mvp_etl_results_spark.operators import graph
+
+    pkg = pathlib.Path(graph.__file__).resolve().parents[1]
+    sources = {
+        p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")
+    }
+    split_sites = {
+        name: src.count("^[^_]*_") for name, src in sources.items() if "^[^_]*_" in src
+    }
+    assert split_sites == {"operators/graph.py": 1}
+    copies = {
+        name
+        for name, src in sources.items()
+        if re.search(r"^\s*def (_khop_edge|_edges_1hop)\b", src, re.M)
+    }
+    assert copies == set()

@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cell_kn_mvp_etl_results_spark.operators import sketches
-from cell_kn_mvp_etl_results_spark.operators.graph import graph_from_tuples
 from cell_kn_mvp_etl_results_spark.operators.similarity import (
     cosine_topk,
     ivf_index,
@@ -66,31 +65,6 @@ def test_column_profile(spark, sf_dir):
     )
     assert prof["n_rows"] > 0 and prof["null_fraction"] == 0.0
     assert prof["min"] >= 0 and prof["approx_distinct"] > 0
-
-
-def test_attr_promotion_last_wins(spark):
-    rows = [
-        ("CL_1", "synonym", "b-name", None),
-        ("CL_1", "synonym", "a-name", None),
-        ("CL_1", "label", "only", None),
-    ]
-    t = spark.createDataFrame(rows, "s string, p string, o string, lit string")
-    g_list = graph_from_tuples(t, attr_promotion="list")
-    g_last = graph_from_tuples(t, attr_promotion="last")
-    attrs_list = {
-        (r.coll, r.key, r.attr): r.values for r in g_list["vertex_attrs"].collect()
-    }
-    attrs_last = {
-        (r.coll, r.key, r.attr): r.values for r in g_last["vertex_attrs"].collect()
-    }
-    assert attrs_list[("CL", "1", "synonym")] == ["a-name", "b-name"]
-    assert attrs_last[("CL", "1", "synonym")] == ["b-name"]  # deterministic last
-    assert attrs_last[("CL", "1", "label")] == ["only"]
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        graph_from_tuples(t, attr_promotion="bogus")
 
 
 def test_l2_normalize_unit_norm_and_zero_guard(spark):

@@ -43,8 +43,23 @@ def test_full_lifecycle_csv_to_query(spark, tmp_path):
 
 def test_cli_main(spark, tmp_path, capsys):
     """Drive the CLI surface itself (argument parsing + stage wiring).
-    Reuses the session-scoped SparkSession via monkeypatched factory."""
+    Reuses the session-scoped SparkSession via monkeypatched factory.
+    The load commands print the vertex and edge counts of the tables
+    they wrote."""
+    import re
+
     import cell_kn_mvp_etl_results_spark.pipelines as pl
+    from cell_kn_mvp_etl_results_spark.sources.sinks import read_graph
+    from test_rdf import OWL_FIXTURE
+
+    def assert_printed_counts(out: str, graph: str) -> None:
+        m = re.search(r"(\d+) vertices, (\d+) edges", out)
+        g = read_graph(spark, graph)
+        assert m and (int(m[1]), int(m[2])) == (
+            g["vertices"].count(),
+            g["edges"].count(),
+        )
+        assert int(m[1]) > 0 and int(m[2]) > 0
 
     csv = tmp_path / "nsforest.csv"
     csv.write_text(NSFOREST_CSV)
@@ -62,7 +77,12 @@ def test_cli_main(spark, tmp_path, capsys):
         assert pl.main(["nsforest", "--results", str(csv), "--out", tuples_dir]) == 0
         assert "tuples" in capsys.readouterr().out
         assert pl.main(["load", "--tuples", tuples_dir, "--graph", graph_dir]) == 0
-        assert "vertices" in capsys.readouterr().out
+        assert_printed_counts(capsys.readouterr().out, graph_dir)
+        owl = tmp_path / "tiny.owl"
+        owl.write_text(OWL_FIXTURE)
+        onto_dir = str(tmp_path / "onto")
+        assert pl.main(["ontology", "--owl", str(owl), "--graph", onto_dir]) == 0
+        assert_printed_counts(capsys.readouterr().out, onto_dir)
         assert (
             pl.main(
                 ["query", "--graph", graph_dir, "--anchor", "CS", "--hops", "BMC,GS"]

@@ -131,23 +131,23 @@ def test_modularity_single_community_is_zero(spark):
     assert row.q_ppm == 0 and row.n_communities == 1
 
 
-def test_modularity_assume_canonical_checks_contract(spark, monkeypatch):
-    # SPARK_GRAFT_CHECK_CANONICAL=1 turns the caller's canonical-form
-    # promise (a < b, no duplicates) into a checked one.
-    monkeypatch.setenv("SPARK_GRAFT_CHECK_CANONICAL", "1")
-    canon = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4)]
+def test_modularity_from_rollups_matches_edge_list(spark):
+    # With the degree and intra-community rollups supplied the metric
+    # reads no edges; without both it needs the edge list.
+    rows = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (4, 3), (1, 1)]
+    e = spark.createDataFrame(rows, "id_a long, id_b long")
     labels = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 0), (3, 3), (4, 3)], "id long, label long"
     )
-
-    def edges(rows):
-        return spark.createDataFrame(rows, "id_a long, id_b long")
-
-    for bad in (canon + [(2, 3)], canon + [(4, 3)], canon + [(1, 1)]):
-        with pytest.raises(ValueError, match="not canonical"):
-            modularity(edges(bad), labels, assume_canonical=True)
-    fast = modularity(edges(canon), labels, assume_canonical=True).collect()
-    assert fast == modularity(edges(canon), labels).collect()
+    # the canonical graph is (0,1) (0,2) (1,2) (2,3) (3,4)
+    degrees = spark.createDataFrame(
+        [(0, 2), (1, 2), (2, 3), (3, 2), (4, 1)], "id long, d long"
+    )
+    intra = spark.createDataFrame([(0, 3), (3, 1)], "label long, e_in long")
+    full = modularity(e, labels).collect()
+    assert modularity(None, labels, degrees=degrees, intra=intra).collect() == full
+    with pytest.raises(ValueError, match="degrees and intra"):
+        modularity(None, labels, degrees=degrees)
 
 
 def test_mmr_skips_near_duplicate_candidates(spark):
