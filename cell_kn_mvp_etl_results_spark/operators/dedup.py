@@ -10,13 +10,22 @@ Determinism: every hash is derived from md5 of the content (portable
 across engines) and fixed linear-permutation constants, so results are
 bit-reproducible and oracle-checkable.
 
+Candidate generation: every pair generator here and in
+``lookup.fuzzy_key_pairs`` / ``textanalysis.winnow_overlap_pairs`` is
+an inverted-index self-join on a key (shingle, gram, LSH bucket,
+deletion variant, fingerprint). ``hot_keys`` is the one stop-key cap
+(keys held by more than ``max_posting``/``max_bucket`` postings are
+anti-joined out before the pair join), ``shared_key_counts`` the one
+shared-key pair count, and ``_shingle_overlaps`` the one exact
+shingle intersection under that cap.
+
 Scale notes:
   * exact dedup: one shuffle on the 128-bit fingerprint.
   * MinHash/LSH: cost = O(tokens * num_perm) map-side + shuffles on
     (doc, perm) then (band, bucket); candidate verification only touches
     pairs sharing a bucket. Heavy-hitter buckets (boilerplate text) are
-    the skew risk -- cap bucket size with a count filter before the
-    pair join (``max_bucket`` parameter).
+    the skew risk -- ``max_bucket`` drops them (``hot_keys``) before
+    the pair join.
   * SimHash: linear map-side work, no pair shuffle until the optional
     hamming join.
 """
@@ -136,6 +145,96 @@ def portable_hash48(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
+def hot_keys(postings: DataFrame, keys: str | list[str], cap: int) -> DataFrame:
+    """The stop keys of an inverted index: the ``keys`` values held by
+    more than ``cap`` postings. A key in d postings contributes O(d^2)
+    rows to a self-join on it while carrying near-zero information, so
+    every candidate generator anti-joins these out before its pair join
+    (each caller picks its own join strategy and broadcast hint)."""
+    return (
+        postings.groupBy(keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > cap)
+        .select(keys)
+    )
+
+
+def shared_key_counts(postings: DataFrame, key: str) -> DataFrame:
+    """Self-join of (id, ``key``) postings on the key, counted per pair:
+    (id_a, id_b, n) with id_a < id_b and n the number of keys the two
+    ids share. The count aggregate map-side combines, so no pair row
+    list ever enters a shuffle."""
+    a = postings.select(F.col("id").alias("id_a"), key)
+    b = postings.select(F.col("id").alias("id_b"), key)
+    return (
+        a.join(b, key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _shingle_overlaps(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_posting: int | None
+) -> DataFrame:
+    """Exact shingle-set intersections of every pair sharing a candidate
+    shingle: (id_a, id_b, inter, sz_a, sz_b), id_a < id_b, with sz the
+    per-document shingle-set sizes.
+
+    ``max_posting`` is the scale guard: shingles whose posting list
+    exceeds the cap (``hot_keys``) are dropped from CANDIDATE
+    generation only, so the cap can only lose pairs whose every shared
+    shingle is boilerplate; ``None`` disables it (oracle-equivalence
+    mode; the gate corpus stays under the cap either way). Counts stay
+    exact because the intersection DECOMPOSES over the hot/cold
+    partition of the vocabulary:
+      |A n B| = |A n B n cold| + |A n B n hot|
+    The cold part is the candidate join itself, aggregated to a count
+    (map-side combined, spill-safe) -- no .distinct() pass and no
+    full-shingle-set arrays ever enter a shuffle. The hot part is an
+    array_intersect over each doc's HOT shingles only, which are few by
+    construction (a doc holds at most its boilerplate). The r5 shape
+    joined candidates against FULL per-doc shingle arrays, which
+    shipped candidate-count x doc-size bytes through two exchanges --
+    measured OOM (16 GB heap) at the 30x corpus, where replica-family
+    shingles put every family into the candidate set.
+
+    Caching: the shingle relation is persisted for reuse across the
+    candidate, hot-set and size joins, and nothing releases it: the
+    CacheManager holds a persisted relation until ``unpersist`` is
+    called, even after the returned plan is garbage-collected, so each
+    call leaves one more cached relation behind.
+    """
+    sh = shingle_set(df, id_col, text_col, n).persist()
+    if max_posting is None:
+        inter = shared_key_counts(sh, "shingle").select(
+            "id_a", "id_b", F.col("n").alias("inter")
+        )
+    else:
+        hot = hot_keys(sh, "shingle", max_posting)
+        cold_n = shared_key_counts(sh.join(hot, "shingle", "left_anti"), "shingle")
+        hot_sets = (
+            sh.join(hot, "shingle")
+            .groupBy("id")
+            .agg(F.sort_array(F.collect_set("shingle")).alias("hotset"))
+        )
+        empty = F.array().cast("array<string>")
+        hot_n = F.size(
+            F.array_intersect(
+                F.coalesce(F.col("hot_a"), empty), F.coalesce(F.col("hot_b"), empty)
+            )
+        ).cast("long")
+        inter = (
+            cold_n.join(hot_sets.toDF("id_a", "hot_a"), "id_a", "left")
+            .join(hot_sets.toDF("id_b", "hot_b"), "id_b", "left")
+            .select("id_a", "id_b", (F.col("n") + hot_n).alias("inter"))
+        )
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+    return inter.join(sizes.toDF("id_a", "sz_a"), "id_a").join(
+        sizes.toDF("id_b", "sz_b"), "id_b"
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -146,108 +245,14 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for candidate pairs sharing at
     least one shingle. The pair space is generated by the shingle
-    self-join (inverted-index style), NOT a cross join.
-
-    ``max_posting`` is the scale guard: a stop-shingle appearing in d
-    documents contributes O(d^2) candidate rows while carrying
-    near-zero information, so shingles whose posting list exceeds the
-    cap are anti-joined out of the CANDIDATE join only. Intersection
-    counts still run over the full shingle sets, so reported jaccard
-    values are exact -- the cap can only lose pairs whose every shared
-    shingle is boilerplate. Pass ``None`` to disable (oracle-equivalence
-    mode; the gate corpus stays under the cap either way).
-
-    Caching: the shingle relation is persisted for reuse across the
-    candidate and verify joins, and nothing releases it: the
-    CacheManager holds a persisted relation until ``unpersist`` is
-    called, even after the returned plan is garbage-collected, so each
-    call leaves one more cached relation behind.
+    self-join (inverted-index style), NOT a cross join; ``max_posting``
+    caps stop shingles out of candidate generation only
+    (``_shingle_overlaps``), so reported jaccard values are exact.
 
     Returns (id_a, id_b, inter, union_sz, jaccard), id_a < id_b.
     """
-    sh = shingle_set(df, id_col, text_col, n).persist()
-    if max_posting is None:
-        # Uncapped: single posting-list join + count aggregate.
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-        a = sh.select(F.col("id").alias("id_a"), "shingle")
-        b = sh.select(F.col("id").alias("id_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sza = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-        szb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-        return (
-            inter.join(sza, "id_a")
-            .join(szb, "id_b")
-            .withColumn("union_sz", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "inter", "union_sz", "jaccard")
-        )
-    # Capped: candidates come only from cold shingles (the hot-posting
-    # explosion never happens), and the exact intersection DECOMPOSES
-    # over the hot/cold partition of the vocabulary:
-    #   |A n B| = |A n B n cold| + |A n B n hot|
-    # The cold part is the candidate join itself, aggregated to a count
-    # (map-side combined, spill-safe) -- no .distinct() pass and no
-    # full-shingle-set arrays ever enter a shuffle. The hot part is an
-    # array_intersect over each doc's HOT shingles only, which are few
-    # by construction (a doc holds at most its boilerplate). The r5
-    # shape joined candidates against FULL per-doc shingle arrays,
-    # which shipped candidate-count x doc-size bytes through two
-    # exchanges -- measured OOM (16 GB heap) at the 30x corpus, where
-    # replica-family shingles put every family into the candidate set.
-    # Results are IDENTICAL: same candidate pairs, same exact counts.
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_posting)
-        .select("shingle")
-    )
-    cold = sh.join(hot, "shingle", "left_anti")
-    a = cold.select(F.col("id").alias("id_a"), "shingle")
-    b = cold.select(F.col("id").alias("id_b"), "shingle")
-    cold_inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_cold_n"))
-    )
-    hot_sets = (
-        sh.join(hot, "shingle")
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_set("shingle")).alias("hotset"))
-    )
-    empty = F.array().cast("array<string>")
-    inter_col = (
-        F.col("_cold_n")
-        + F.size(
-            F.array_intersect(
-                F.coalesce(F.col("hot_a"), empty),
-                F.coalesce(F.col("hot_b"), empty),
-            )
-        ).cast("long")
-    )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    sza = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
-        cold_inter.join(
-            hot_sets.select(F.col("id").alias("id_a"), F.col("hotset").alias("hot_a")),
-            "id_a",
-            "left",
-        )
-        .join(
-            hot_sets.select(F.col("id").alias("id_b"), F.col("hotset").alias("hot_b")),
-            "id_b",
-            "left",
-        )
-        .withColumn("inter", inter_col)
-        .join(sza, "id_a")
-        .join(szb, "id_b")
+        _shingle_overlaps(df, id_col, text_col, n, max_posting)
         .withColumn("union_sz", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
         .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
         .filter(F.col("jaccard") >= threshold)
@@ -282,77 +287,8 @@ def containment_pairs(
     """
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    sh = shingle_set(df, id_col, text_col, n).persist()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
-    if max_posting is not None:
-        # Same hot/cold intersection decomposition as jaccard_pairs'
-        # capped branch (see there for the derivation and the measured
-        # 30x OOM that motivated it): exact counts, no .distinct(), no
-        # full-shingle-set arrays through shuffles -- only each doc's
-        # few HOT (boilerplate) shingles travel as arrays.
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") > max_posting)
-            .select("shingle")
-        )
-        a = a.join(hot, "shingle", "left_anti")
-        b = b.join(hot, "shingle", "left_anti")
-        cold_inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("_cold_n"))
-        )
-        hot_sets = (
-            sh.join(hot, "shingle")
-            .groupBy("id")
-            .agg(F.sort_array(F.collect_set("shingle")).alias("hotset"))
-        )
-        empty = F.array().cast("array<string>")
-        inter = (
-            cold_inter.join(
-                hot_sets.select(
-                    F.col("id").alias("id_a"), F.col("hotset").alias("hot_a")
-                ),
-                "id_a",
-                "left",
-            )
-            .join(
-                hot_sets.select(
-                    F.col("id").alias("id_b"), F.col("hotset").alias("hot_b")
-                ),
-                "id_b",
-                "left",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("_cold_n")
-                    + F.size(
-                        F.array_intersect(
-                            F.coalesce(F.col("hot_a"), empty),
-                            F.coalesce(F.col("hot_b"), empty),
-                        )
-                    ).cast("long")
-                ).alias("inter"),
-            )
-        )
-    else:
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    sza = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
-        inter.join(sza, "id_a")
-        .join(szb, "id_b")
+        _shingle_overlaps(df, id_col, text_col, n, max_posting)
         .withColumn("c_ab", F.col("inter") / F.col("sz_a"))
         .withColumn("c_ba", F.col("inter") / F.col("sz_b"))
         .withColumn("containment", F.greatest("c_ab", "c_ba"))
@@ -493,12 +429,7 @@ def minhash_lsh_pairs(
         # docs) must be dropped from fixed-size count states, never
         # accumulated into a collect_set. The filter side is tiny
         # (only over-cap buckets) and broadcasts into an anti-join.
-        big = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("band", "bucket")
-        )
+        big = hot_keys(buckets, ["band", "bucket"], max_bucket)
         buckets = buckets.join(F.broadcast(big), ["band", "bucket"], "left_anti")
         # Pair generation INSIDE the bucket array: one shuffle groups
         # each surviving bucket's ids (bounded by max_bucket), and the
@@ -813,13 +744,8 @@ def doc_stitch_pairs(
         ),
     )
     if max_posting is not None:
-        big = (
-            heads.select("gram")
-            .union(tails.select("gram"))
-            .groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .filter(F.col("cnt") > max_posting)
-            .select("gram")
+        big = hot_keys(
+            heads.select("gram").union(tails.select("gram")), "gram", max_posting
         )
         heads = heads.join(F.broadcast(big), "gram", "left_anti")
         tails = tails.join(F.broadcast(big), "gram", "left_anti")
@@ -1040,12 +966,7 @@ def simhash_pairs(
         )
     bb = simhash_bands(hashes, bands=max_hamming + 1, bits=bits)
     if max_bucket is not None:
-        big = (
-            bb.groupBy("band", "val")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("band", "val")
-        )
+        big = hot_keys(bb, ["band", "val"], max_bucket)
         bb = bb.join(big, ["band", "val"], "left_anti")
     ba = bb.select(
         F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "band", "val"

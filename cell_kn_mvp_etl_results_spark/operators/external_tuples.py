@@ -15,17 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _tup(s, p, o, lit=None) -> Column:
-    p = F.lit(p) if isinstance(p, str) else p
-    if lit is None:
-        lit = F.lit(None).cast("string")
-    return F.struct(
-        s.cast("string").alias("s"),
-        p.cast("string").alias("p"),
-        o.cast("string").alias("o"),
-        lit.cast("string").alias("lit"),
-    )
+from .tuplewriters import _tup
 
 
 # ---------------------------------------------------------------------------

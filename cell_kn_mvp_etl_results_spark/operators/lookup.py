@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import hot_keys
+
 
 def broadcast_lookup(
     facts: DataFrame,
@@ -214,7 +216,7 @@ def fuzzy_key_pairs(
     string (bounded key), then an equi-join -- never an all-pairs edit
     distance. ``max_posting`` anti-joins out degenerate variants shared
     by more than the cap (e.g. a ubiquitous prefix after one deletion)
-    -- the same stop-key discipline as the Jaccard posting cap.
+    -- the Jaccard posting cap's stop-key rule (``dedup.hot_keys``).
 
     Returns (id_a, id_b, key_a, key_b, dist), id_a < id_b, dist <= 1.
     """
@@ -241,12 +243,7 @@ def fuzzy_key_pairs(
         ).alias("variant"),
     )
     if max_posting is not None:
-        hot = (
-            variants.groupBy("variant")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_posting)
-            .select("variant")
-        )
+        hot = hot_keys(variants, "variant", max_posting)
         variants = variants.join(F.broadcast(hot), "variant", "left_anti")
     a = variants.select(
         F.col("id").alias("id_a"), F.col("key").alias("key_a"), "variant"

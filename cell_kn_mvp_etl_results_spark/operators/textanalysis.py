@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from .dedup import hot_keys, shared_key_counts
 
 # Deterministic marker lexicons (toy profiles over the synthetic corpus
 # vocabulary; swap for real stopword tables in production). Order of the
@@ -370,29 +371,19 @@ def winnow_overlap_pairs(
 
     Same inverted-index shape as the Jaccard/LSH pair generators: one
     explode to (fingerprint, id) postings, stop-fingerprint cap
-    (``max_posting``, same quadratic-blowup guard as jaccard_pairs),
-    self-join on the fingerprint, count per pair. Returns (id_a, id_b,
-    n_shared), id_a < id_b, n_shared >= min_shared.
+    (``max_posting``, ``dedup.hot_keys``), self-join on the
+    fingerprint, count per pair (``dedup.shared_key_counts``). Returns
+    (id_a, id_b, n_shared), id_a < id_b, n_shared >= min_shared.
     """
     fps = df.select(
         F.col(id_col).alias("id"),
         F.explode(winnow_fingerprints(text_col, k=k, window=window)).alias("fp"),
     )
     if max_posting is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") > max_posting)
-            .select("fp")
-        )
-        fps = fps.join(hot, "fp", "left_anti")
-    a = fps.select(F.col("id").alias("id_a"), "fp")
-    b = fps.select(F.col("id").alias("id_b"), "fp")
+        fps = fps.join(hot_keys(fps, "fp", max_posting), "fp", "left_anti")
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
+        shared_key_counts(fps, "fp")
+        .select("id_a", "id_b", F.col("n").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
 

@@ -33,14 +33,17 @@ from ..functions.text import hyphenate, parse_list_literal
 MIN_CLUSTER_SIZE = 10  # reference LoaderUtilities.py:39
 
 def _tup(s: Column, p: Column | str, o: Column, lit: Column | None = None) -> Column:
+    """One (s, p, o, lit) tuple struct, every field cast to string (a
+    cast of a string column is a no-op the optimizer drops)."""
     p = F.lit(p) if isinstance(p, str) else p
     if lit is None:
-        lit = F.lit(None).cast("string")
-    return F.struct(s.alias("s"), p.alias("p"), o.alias("o"), lit.alias("lit"))
-
-
-def _lit_col(c: Column) -> Column:
-    return c.cast("string")
+        lit = F.lit(None)
+    return F.struct(
+        s.cast("string").alias("s"),
+        p.cast("string").alias("p"),
+        o.cast("string").alias("o"),
+        lit.cast("string").alias("lit"),
+    )
 
 
 def nsforest_tuples(results: DataFrame) -> DataFrame:
@@ -73,17 +76,17 @@ def nsforest_tuples(results: DataFrame) -> DataFrame:
         _tup(bmc, "PART_OF", bgs),
         _tup(bmc, "Source", bgs, F.lit("NSForest")),
         # node annotations (:142-198)
-        _tup(bmc, "F_score", _lit_col(F.col("f_score"))),
-        _tup(bmc, "Cluster_size", _lit_col(F.col("clusterSize"))),
+        _tup(bmc, "F_score", F.col("f_score")),
+        _tup(bmc, "Cluster_size", F.col("clusterSize")),
         _tup(bmc, "Marker_names", F.concat_ws(" ", markers)),
         _tup(bgs, "Gene_names", F.concat_ws(" ", binary)),
         # edge-annotation quads on CS->BMC (:200-265)
-        _tup(cs, "True_positives", bmc, _lit_col(F.col("TP"))),
-        _tup(cs, "False_positives", bmc, _lit_col(F.col("FP"))),
-        _tup(cs, "False_negatives", bmc, _lit_col(F.col("FN"))),
-        _tup(cs, "True_negatives", bmc, _lit_col(F.col("TN"))),
-        _tup(cs, "Precision", bmc, _lit_col(F.col("precision"))),
-        _tup(cs, "Marker_count", bmc, _lit_col(F.col("marker_count"))),
+        _tup(cs, "True_positives", bmc, F.col("TP")),
+        _tup(cs, "False_positives", bmc, F.col("FP")),
+        _tup(cs, "False_negatives", bmc, F.col("FN")),
+        _tup(cs, "True_negatives", bmc, F.col("TN")),
+        _tup(cs, "Precision", bmc, F.col("precision")),
+        _tup(cs, "Marker_count", bmc, F.col("marker_count")),
     ]
     if "dataset_version_id" in results.columns:
         csd = F.concat(F.lit("CSD_"), F.col("dataset_version_id"))

@@ -26,9 +26,11 @@ twin's tables go through it too):
   * ``SPARK_GRAFT_SERVING=off`` forces the original in-query
     computation (``ensure_table`` calls the builder directly) -- the
     explicit fallback for one-shot runs, and what the row-identity
-    tests pin the materialized path against. Always-materialized forms
-    (the khop and supplier tables, q_split_leakage_bucketed) pass
-    ``force=True`` and ignore it.
+    tests pin the materialized path against. Only the always-
+    materialized forms ignore it: the khop and supplier tables call
+    ``ensure_table(force=True)``, and q_split_leakage_bucketed calls
+    ``dedup_components_frame(force=True)``, the one builder that keeps
+    a ``force`` parameter.
 
 Correctness is unaffected by construction: the builders are
 deterministic pure functions of the source tables, so reading the
@@ -253,7 +255,6 @@ def simhash_pairs_frame(
     sf_dir: str,
     bits: int = 32,
     max_hamming: int = 1,
-    force: bool = False,
 ) -> DataFrame:
     """The SimHash radius-``max_hamming`` near-dup pair graph
     (id_a, id_b, hamming), id_a < id_b -- served from the materialized
@@ -272,7 +273,7 @@ def simhash_pairs_frame(
         return dd.simhash_pairs(hashes, max_hamming=max_hamming, bits=bits)
 
     table = _auto_name("simhash_pairs_auto", sf_dir, bits, max_hamming)
-    return ensure_table(spark, table, build, "id_a", force=force)
+    return ensure_table(spark, table, build, "id_a")
 
 
 def build_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,7 +314,6 @@ def minhash_index_frame(
     base_mod: int = 10,
     num_perm: int = 32,
     bands: int = 8,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted LSH index (id, band, bucket, sig) of the BASE
     corpus slice (doc_id % base_mod != 0) -- what incremental dedup
@@ -331,7 +331,7 @@ def minhash_index_frame(
         )
 
     table = _auto_name("minhash_index_auto", sf_dir, base_mod, num_perm, bands)
-    return ensure_table(spark, table, build, "bucket", force=force)
+    return ensure_table(spark, table, build, "bucket")
 
 
 def simhash_band_index_frame(
@@ -340,7 +340,6 @@ def simhash_band_index_frame(
     base_mod: int = 10,
     bits: int = 32,
     max_hamming: int = 1,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted SimHash BAND index (id, simhash, band, val) of the
     BASE corpus slice (doc_id % base_mod != 0) -- what incremental pair
@@ -358,14 +357,13 @@ def simhash_band_index_frame(
     table = _auto_name(
         "simhash_band_index_auto", sf_dir, base_mod, bits, max_hamming
     )
-    return ensure_table(spark, table, build, "val", force=force)
+    return ensure_table(spark, table, build, "val")
 
 
 def community_labels_frame(
     spark: SparkSession,
     sf_dir: str,
     iters: int = 2,
-    force: bool = False,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic-LPA community labels (id, label) over the SimHash
@@ -393,14 +391,13 @@ def community_labels_frame(
         return gr.label_propagation(p, "id_a", "id_b", iters=iters)
 
     table = _auto_name("lpa_labels_auto", sf_dir, iters)
-    return ensure_table(spark, table, build, "id", force=force)
+    return ensure_table(spark, table, build, "id")
 
 
 def hll_registers_frame(
     spark: SparkSession,
     sf_dir: str,
     base_mod: "int | None" = 10,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted HLL register table (source, bucket, r) of the BASE
     corpus slice (doc_id % base_mod != 0) -- the cardinality profile's
@@ -431,14 +428,13 @@ def hll_registers_frame(
         return sk.hll_registers(toks, "tok", "source")
 
     table = _auto_name("hll_registers_auto", sf_dir, base_mod)
-    return ensure_table(spark, table, build, "bucket", force=force)
+    return ensure_table(spark, table, build, "bucket")
 
 
 def kmv_sketch_frame(
     spark: SparkSession,
     sf_dir: str,
     base_mod: "int | None" = 10,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted bottom-k (KMV) sketch table (source, rn, h, key)
     of the BASE corpus slice (doc_id % base_mod != 0) -- the
@@ -467,14 +463,13 @@ def kmv_sketch_frame(
         return sk.kmv_sketch(sh, "key", "source")
 
     table = _auto_name("kmv_sketch_auto", sf_dir, base_mod, "shingle")
-    return ensure_table(spark, table, build, "source", force=force)
+    return ensure_table(spark, table, build, "source")
 
 
 def community_stats_frame(
     spark: SparkSession,
     sf_dir: str,
     iters: int = 2,
-    force: bool = False,
     pairs: DataFrame | None = None,
     labels: DataFrame | None = None,
 ) -> DataFrame:
@@ -513,13 +508,12 @@ def community_stats_frame(
         )
 
     table = _auto_name("community_stats_auto", sf_dir, iters)
-    return ensure_table(spark, table, build, "label", force=force)
+    return ensure_table(spark, table, build, "label")
 
 
 def pair_degrees_frame(
     spark: SparkSession,
     sf_dir: str,
-    force: bool = False,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Vertex degrees (id, d) of the SimHash radius-1 near-dup pair
@@ -541,12 +535,10 @@ def pair_degrees_frame(
         )
 
     table = _auto_name("pair_degrees_auto", sf_dir)
-    return ensure_table(spark, table, build, "id", force=force)
+    return ensure_table(spark, table, build, "id")
 
 
-def entity_components_frame(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> DataFrame:
+def entity_components_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolved supplier entities (id, component) over the FastSS
     deletion-neighborhood pair graph (edit distance <= 1) -- the
     q_entity_resolution machinery. Entity resolution is run once per
@@ -565,4 +557,4 @@ def entity_components_frame(
         return connected_components(nodes, pairs.select("id_a", "id_b"))
 
     table = _auto_name("entity_comp_auto", sf_dir, files=("supplier",))
-    return ensure_table(spark, table, build, "id", force=force)
+    return ensure_table(spark, table, build, "id")

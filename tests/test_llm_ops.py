@@ -233,6 +233,47 @@ def test_jaccard_max_posting_prunes_boilerplate(spark):
     assert got == full[(100, 101)]
 
 
+def test_hot_keys_and_shared_key_counts(spark):
+    """``hot_keys`` returns exactly the keys held by more than ``cap``
+    postings (single and composite keys); ``shared_key_counts`` counts
+    the keys each id pair shares, once per pair with id_a < id_b."""
+    postings = [(1, "x"), (2, "x"), (3, "x"), (1, "y"), (2, "y"), (3, "z")]
+    df = spark.createDataFrame(postings, "id long, k string")
+    assert {r.k for r in dd.hot_keys(df, "k", 2).collect()} == {"x"}
+    assert dd.hot_keys(df, "k", 3).count() == 0
+    banded = df.withColumn("band", F.lit(0))
+    assert dd.hot_keys(banded, ["band", "k"], 1).columns == ["band", "k"]
+    assert {r.k for r in dd.hot_keys(banded, ["band", "k"], 1).collect()} == {"x", "y"}
+    got = {(r.id_a, r.id_b): r.n for r in dd.shared_key_counts(df, "k").collect()}
+    assert got == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+
+
+def test_dedup_candidate_decisions_have_one_home():
+    """One statement per candidate-generation decision: the stop-key
+    filter (``count > cap``) lives only in ``operators/dedup.hot_keys``,
+    and the hot/cold exact shingle intersection only in
+    ``dedup._shingle_overlaps`` (no per-caller ``_cold_n`` count)."""
+    import inspect
+    import pathlib
+    import re
+
+    stop_key = re.compile(
+        r'\.filter\(F\.col\("[^"]+"\) > (max_posting|max_bucket|cap)\)'
+    )
+    pkg = pathlib.Path(dd.__file__).resolve().parents[1]
+    sources = {
+        p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")
+    }
+    sites = {
+        name: len(stop_key.findall(src))
+        for name, src in sources.items()
+        if stop_key.search(src)
+    }
+    assert sites == {"operators/dedup.py": 1}
+    assert stop_key.search(inspect.getsource(dd.hot_keys))
+    assert [name for name, src in sources.items() if "_cold_n" in src] == []
+
+
 def _winnow_ref(text: str, k: int = 5, window: int = 4) -> list[int]:
     """Pure-Python reference for winnow_fingerprints (same md5-48 scheme)."""
     import hashlib
